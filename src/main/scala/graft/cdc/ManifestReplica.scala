@@ -33,9 +33,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * }}}
   *
   * Scale notes (the 100 TB story):
-  *  - **Compaction is incremental** (as is [[Replicate.compact]]'s
-  *    since round 5): only buckets that actually appear in the pending
-  *    deltas get a new generation; an untouched bucket's dir is
+  *  - **Compaction is incremental** (as is [[Replicate]]'s fold): only
+  *    buckets that actually appear in the pending deltas get a new
+  *    generation; an untouched bucket's dir is
   *    byte-identical across commits, and the fold reads only the
   *    touched buckets' base dirs (explicit path list = partition
   *    pruning by construction).
@@ -75,8 +75,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * whatever grace period the deployment owes its slowest reader. The
   * retained manifest history ([[ManifestHistory]] versions) is
   * therefore snapshot-isolated time travel: [[readReplicaAt]]. (The
-  * rename-path twin reclaims inline instead — a swapped-out bucket dir
-  * dies under a slow reader there.)
+  * rename-path twin reclaims inside its folds instead, one fold late: a
+  * superseded generation or consumed delta survives one fold cycle, so
+  * only a reader slower than that fails on a missing file.)
   *
   * Schema evolution: fixed at compile time by design, same documented
   * decision as [[Replicate]] — widening deployments use the generic

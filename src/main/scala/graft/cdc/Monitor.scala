@@ -2,11 +2,10 @@ package graft.cdc
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The pubsub monitor loop re-expressed (pubsub/main.go:128-209): source
-  * count vs target count vs source-rows-passing-filter count, an in-sync
-  * verdict, and replication lag from streaming progress.
+  * count vs target count vs source-rows-passing-filter count and an
+  * in-sync verdict.
   *
   * This is the reference's own correctness oracle (`✓ In sync` when
   * target == σ_filter(source), pubsub/main.go:184-198) — reused verbatim
@@ -52,13 +51,4 @@ object Monitor {
   def catalogTables(spark: SparkSession): DataFrame =
     spark.catalog.listTables()
       .select(col("name"), col("tableType"), col("isTemporary"))
-
-  /** Replication lag seconds from streaming progress — the
-    * `pg_last_xact_replay_timestamp` analog (pubsub/main.go:201-209):
-    * wall clock minus the last progress event's trigger timestamp. */
-  def lagSeconds(query: StreamingQuery): Option[Double] =
-    Option(query.lastProgress).map { p =>
-      val last = java.time.Instant.parse(p.timestamp).toEpochMilli
-      (System.currentTimeMillis() - last) / 1000.0
-    }
 }

@@ -1,7 +1,7 @@
 package graft.cdc
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -42,12 +42,13 @@ final case class TableSpec(
   *    already schema-generic and is reused verbatim; only the
   *    batch-summarize and the final typed projection differ.
   *  - **Same storage machinery.** Each table lives at
-  *    `<root>/<table>/` with [[Replicate]]'s exact layout: hash-bucket
-  *    partition dirs, hidden delta log, compaction watermark,
-  *    rename-aside swap, layout marker — all reused (`private[cdc]`),
-  *    so every crash-window argument in [[Replicate]]'s header carries
-  *    over unchanged. Buckets key on `pmod(hash(key), n)` (string keys;
-  *    production pins the hash function version with the layout).
+  *    `<root>/<table>/` and is stored by [[Replicate]]'s own helpers
+  *    under [[MtShape]]: bucket generation dirs, hidden delta log,
+  *    compaction watermark, layout marker, one-fold reclamation grace
+  *    — so every crash-window argument in [[Replicate]]'s header
+  *    carries over unchanged. Buckets key on `pmod(hash(key), n)`
+  *    (string keys; production pins the hash function version with the
+  *    layout).
   *  - **Typed projection at the edge.** [[readTable]] folds
   *    base ∪ deltas and only THEN parses the winning image's JSON once
   *    per surviving key, casting each field to `rowSchema`'s type —
@@ -60,7 +61,7 @@ final case class TableSpec(
   * module declared single-table. The per-trigger cost is one source
   * scan + one O(batch-slice) summary job per touched table. */
 object MultiTable {
-  import Replicate.{BucketCol, check, combineSummaries}
+  import Replicate.BucketCol
 
   /** Generic delta schema: [[Replicate.DeltaSchema]] with the typed
     * image replaced by (key STRING, img JSON-string). */
@@ -74,8 +75,11 @@ object MultiTable {
       StructField("created_at", TimestampType)))),
     StructField("last_d_lsn", LongType)))
 
-  private[graft] val MtBaseSchema =
-    StructType(MtDeltaSchema.fields.filterNot(_.name == BucketCol))
+  /** The generic summaries' storage shape, keyed on the string key. */
+  private[cdc] val MtShape = Replicate.Shape(MtDeltaSchema, "key",
+    n => pmod(hash(col("key")), lit(n)))
+
+  private[graft] val MtBaseSchema = MtShape.baseSchema
 
   val DefaultNumBuckets = 8
 
@@ -201,50 +205,27 @@ object MultiTable {
       lit(null).cast(LongType).as("last_d_lsn"))
   }
 
-  /** Bulk-load one table's initial state (full overwrite). Registers
-    * as a lifecycle op so a concurrent vacuum/truncate FAILS FAST
-    * instead of silently queueing behind the write lock and deleting
-    * the freshly loaded state (r6 review); joins the dir's async fold
-    * BEFORE acquiring exclusive (joining while holding the write lock
-    * deadlocks on a fold parked on the shared side). */
+  /** Bulk-load one table's initial state (full overwrite) —
+    * [[Replicate.snapshot]] over the generic schema. */
   def snapshot(spark: SparkSession, rows: DataFrame, root: String,
-      spec: TableSpec, numBuckets: Int = DefaultNumBuckets): Unit = {
-    val dir = tableDir(root, spec)
-    Replicate.withLifecycle(dir) {
-    Replicate.awaitCompactions(dir)
-    Replicate.exclusive(dir) {
-      val (fs, base) = {
-        val p = new Path(dir)
-        (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-      }
-      Replicate.truncateLocked(spark, dir)
-      rowsAsMtSummaries(rows, spec)
-        .withColumn(BucketCol, pmod(hash(col("key")), lit(numBuckets)))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "static")
-        .partitionBy(BucketCol)
-        .parquet(dir)
-      Replicate.checkLayout(fs, base, numBuckets)
-    }
-    }
-  }
+      spec: TableSpec, numBuckets: Int = DefaultNumBuckets): Unit =
+    Replicate.snapshotWith(spark, tableDir(root, spec), numBuckets,
+      rowsAsMtSummaries(rows, spec), MtShape)
 
-  /** Apply one micro-batch of PARSED generic changes to every declared
-    * table's replica: filter the (cached) batch per table, summarize,
-    * commit as that table's delta `batch=<id>`, compact on threshold —
-    * [[Replicate.applyBatch]]'s exact dataflow per table, idempotent
-    * under replay for the same reasons. Tables absent from the batch
-    * are SKIPPED entirely — one bounded `groupBy(tbl)` over the cached
-    * parse decides presence, so an idle table costs no summarize job,
-    * no empty delta dir (which would count toward `compactEvery` and
-    * periodically fold nothing), and — on the manifest twin — no burned
-    * manifest version per trigger (r6 review: per-trigger empty commits
-    * collapsed an idle table's retained history window to the last ~4
-    * triggers of wall-clock). Presence derives from batch content, so
-    * an epoch replay skips identically. */
+  /** Tables with at least one change in a parsed batch — one bounded
+    * `groupBy(tbl)` over the cached parse. An absent table costs no
+    * summarize job, no empty delta dir (which would count toward
+    * `compactEvery` and periodically fold nothing) and, on the manifest
+    * twin, no burned manifest version per trigger. Presence derives
+    * from batch content, so an epoch replay skips identically. */
   private[cdc] def presentTables(parsed: DataFrame): Set[String] =
     parsed.select("tbl").distinct().collect().map(_.getString(0)).toSet
 
+  /** Apply one micro-batch of PARSED generic changes to every declared
+    * table present in it: filter the (cached) batch per table,
+    * summarize, and hand the summary to [[Replicate]]'s trigger body
+    * (delta commit, threshold fold) — idempotent under replay for the
+    * same reasons. */
   def applyBatch(spark: SparkSession, parsed: DataFrame, root: String,
       specs: Seq[TableSpec], batchId: Long,
       numBuckets: Int = DefaultNumBuckets,
@@ -252,116 +233,27 @@ object MultiTable {
     parsed.persist()
     try {
       val present = presentTables(parsed)
-      specs.foreach { spec =>
-      val dir = tableDir(root, spec)
-      val base = new Path(dir)
-      val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val active = present.contains(spec.table)
-      // crash recovery runs for EVERY declared table with an existing
-      // replica, traffic or not (r6 review: gating it on presence left
-      // a crashed bucket swap on a then-idle table serving incomplete
-      // reads until its next write — recoverSwap is one cheap LIST);
-      // only the write path is gated on presence. While a lifecycle op
-      // (vacuum) holds the table, recovery must NOT run: the op's own
-      // rename-aside swaps are live, not crash leftovers (r6 review).
-      // whole per-table trigger section under the SHARED side of the
-      // dir lock: recovery, delta write/commit, and the threshold fold
-      // cannot interleave an exclusive lifecycle rewrite, and never
-      // contend with each other (r6 review)
-      Replicate.shared(dir) {
-      if (active || fs.exists(base)) {
-        if (!Replicate.lifecycleBusy(dir)) {
-          Replicate.checkLayout(fs, base, numBuckets)
-          Replicate.recoverSwap(fs, base)
-        }
-      }
-      if (active) {
-      val dRoot = new Path(base, Replicate.DeltaDirName)
-      val tmp = new Path(dRoot, s".tmp-$batchId")
-      fs.delete(tmp, true)
-      summarizeMt(parsed.filter(col("tbl") === spec.table)
-        .drop("tbl"), numBuckets)
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      val dst = new Path(dRoot, s"batch=$batchId")
-      fs.delete(dst, true)
-      check(fs.rename(tmp, dst), s"commit delta $dst")
-      val entries = fs.listStatus(dRoot)
-      entries.iterator.filter(_.getPath.getName.startsWith(".tmp-"))
-        .foreach(e => fs.delete(e.getPath, true))
-      val wm = Replicate.readWatermark(fs, dRoot)
-      val (stale, live) = entries.iterator.map(_.getPath)
-        .filter(_.getName.startsWith("batch=")).toSeq
-        .partition(Replicate.batchIdOf(_) <= wm)
-      stale.foreach(p => fs.delete(p, true))
-      if (live.size >= compactEvery && !Replicate.lifecycleBusy(dir))
-        compactUnlocked(spark, dir, numBuckets)
-      }
-      }
+      specs.filter(sp => present.contains(sp.table)).foreach { spec =>
+        Replicate.applyWith(spark, tableDir(root, spec),
+          summarizeMt(parsed.filter(col("tbl") === spec.table).drop("tbl"),
+            numBuckets),
+          MtShape, numBuckets, batchId, compactEvery, compactAsync = false)
       }
     } finally parsed.unpersist()
   }
 
   /** Fold one table's pending deltas into the buckets they touch —
-    * [[Replicate.compact]]'s incremental shape over the generic
-    * schema. Operator entry: exclusive on the dir lock (an unguarded
-    * public compact racing the trigger's would share the staging
-    * dir). */
+    * [[Replicate.compactNow]] over the generic schema. */
   def compact(spark: SparkSession, dir: String,
       numBuckets: Int = DefaultNumBuckets): Unit =
-    Replicate.exclusive(dir) { compactUnlocked(spark, dir, numBuckets) }
-
-  private[cdc] def compactUnlocked(spark: SparkSession, dir: String,
-      numBuckets: Int = DefaultNumBuckets): Unit = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val deltaDirs = Replicate.listDeltas(
-      fs, new Path(base, Replicate.DeltaDirName))
-    if (deltaDirs.isEmpty) return
-    val deltas = spark.read.schema(MtDeltaSchema)
-      .parquet(deltaDirs.map(_.toString): _*)
-      .select(MtDeltaSchema.fieldNames.map(col).toSeq: _*)
-    val touched = deltas.select(BucketCol).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val baseDf = Replicate.readBase(spark, fs, dir, Some(touched),
-      schema = MtBaseSchema)
-      .withColumn(BucketCol, pmod(hash(col("key")), lit(numBuckets)))
-      .select(MtDeltaSchema.fieldNames.map(col).toSeq: _*)
-    val merged = combineSummaries(baseDf.unionAll(deltas),
-      Seq(BucketCol, "key"), width = Some(touched.size.max(1)))
-    Replicate.writeAndSwap(fs, base, dir, merged, dropAbsent = false)
-    Replicate.writeWatermark(fs, new Path(base, Replicate.DeltaDirName),
-      deltaDirs.map(Replicate.batchIdOf).max)
-    deltaDirs.foreach(d => fs.delete(d, true))
-  }
+    Replicate.compactWith(spark, dir, numBuckets, MtShape)
 
   /** Physically remove one table's tombstones — [[Replicate.vacuum]]
     * over the generic schema (same precondition: the source can no
-    * longer deliver lsns below the tombstones' delete lsns). Pending
-    * deltas fold first; live buckets are rewritten alive-keys-only via
-    * the same rename-aside swap; all-tombstone buckets drop outright. */
+    * longer deliver lsns below the tombstones' delete lsns). */
   def vacuum(spark: SparkSession, root: String, spec: TableSpec,
-      numBuckets: Int = DefaultNumBuckets): Unit = {
-    val dir = tableDir(root, spec)
-    // the lifecycle flag stops a concurrent trigger's recoverSwap from
-    // tearing our rename-aside swaps apart mid-flight (the multi-table
-    // stream recovers EVERY declared table each trigger, idle or not)
-    // and from folding a base read that predates this rewrite
-    Replicate.withLifecycle(dir) {
-      Replicate.exclusive(dir) {
-        val base = new Path(dir)
-        val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        Replicate.checkLayout(fs, base, numBuckets)
-        Replicate.recoverSwap(fs, base)
-        compactUnlocked(spark, dir, numBuckets)
-        val alive = Replicate.readBase(spark, fs, dir,
-          schema = MtBaseSchema)
-          .filter(col("first_ins").isNotNull)
-          .withColumn(BucketCol, pmod(hash(col("key")), lit(numBuckets)))
-          .repartition(numBuckets, col(BucketCol))
-        Replicate.writeAndSwap(fs, base, dir, alive, dropAbsent = true)
-      }
-    }
-  }
+      numBuckets: Int = DefaultNumBuckets): Unit =
+    Replicate.vacuumWith(spark, tableDir(root, spec), numBuckets, MtShape)
 
   /** Drop one table's replica entirely (S9) — [[Replicate.truncate]]
     * on its root (schema-independent). */
@@ -372,23 +264,9 @@ object MultiTable {
     * fold base ∪ pending deltas, keep live keys, parse each surviving
     * image's JSON once and cast per the declared schema. */
   def readTable(spark: SparkSession, root: String, spec: TableSpec)
-      : DataFrame = {
-    val dir = tableDir(root, spec)
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val baseDf = Replicate.readBase(spark, fs, dir, schema = MtBaseSchema)
-    val deltaDirs = Replicate.listDeltas(
-      fs, new Path(base, Replicate.DeltaDirName))
-    val folded =
-      if (deltaDirs.isEmpty) baseDf
-      else {
-        val deltas = spark.read.schema(MtDeltaSchema)
-          .parquet(deltaDirs.map(_.toString): _*)
-          .select(MtBaseSchema.fieldNames.map(col).toSeq: _*)
-        combineSummaries(baseDf.unionAll(deltas), Seq("key"))
-      }
-    projectTyped(folded, spec)
-  }
+      : DataFrame =
+    projectTyped(Replicate.readWith(spark, tableDir(root, spec), MtShape),
+      spec)
 
   /** Live-rows typed projection over folded generic summaries: parse
     * each surviving key's winning image JSON once, cast per the

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,12 +15,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   * ## Scale design (the 100 TB story): merge-on-read + compaction
   *
   * The replica is parquet **hash-bucketed by key** (`id_bucket =
-  * pmod(id, numBuckets)`, a partition column) plus a hidden
-  * **delta log** (`.__delta/batch=<epoch>/`). The round-3 design
-  * rewrote every touched bucket per trigger — O(replica) work for an
-  * O(batch) change, unshippable at a 2 s trigger once buckets hold
-  * real data. Round 4 moves to the merge-on-read pattern (the
-  * Hudi/Paimon MoR shape):
+  * pmod(id, numBuckets)`) plus a hidden **delta log**
+  * (`.__delta/batch=<epoch>/`), in the merge-on-read shape of
+  * Hudi/Paimon:
   *
   *  - **Per trigger (O(batch), one job)**: reduce the micro-batch to
   *    one summary row per key with ONE shuffle ([[summarizeBucketed]] —
@@ -42,44 +39,62 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   *    silently loses newer images when an older batch folds later.
   *    Liveness is derived, never assumed: a key is alive iff its
   *    first insert survives past the last delete.
-  *  - **On read** ([[readReplica]]): base ∪ deltas → combine → project
-  *    live rows. With no pending deltas this is a pure scan+filter (the
-  *    compacted base is already one row per key).
-  *  - **Every `compactEvery` triggers**: fold the delta-TOUCHED
-  *    buckets' base rows ∪ deltas (union + combine — NO join;
-  *    untouched buckets are never read or rewritten, keeping the fold
-  *    O(hot data) at thousands of buckets) into fresh buckets in a
-  *    temp dir,
-  *    RENAME-ASIDE swap each bucket (live → .__old, fresh → live, drop
-  *    .__old; every rename checked; [[recoverSwap]] rolls a crashed
-  *    swap back/forward), then drop the consumed deltas. Deltas are
-  *    deleted only AFTER the swap completes; re-folding a delta over an
-  *    already-compacted base is a no-op (max/min of an already-folded
-  *    element), so every crash window converges. Tombstones are
-  *    retained (they are what makes late/reordered events safe);
-  *    [[vacuum]] physically removes them once the source can no longer
-  *    deliver older lsns (the Postgres slot contract —
-  *    confirmed_flush_lsn only advances).
+  *  - **Base buckets are generation dirs** `id_bucket=<b>.g<gen>`. A
+  *    fold never rewrites a dir: it writes generation `max+1` of every
+  *    bucket its deltas touch into a hidden stage dir, commits each
+  *    bucket with ONE dir rename, then raises the compaction watermark
+  *    (`.__delta/_watermark`) past the consumed deltas. A bucket whose
+  *    keys are all vacuumed commits an empty marker file as its newest
+  *    generation, so no older generation can resurface.
+  *  - **On read** ([[readReplica]]): read the watermark and list the
+  *    deltas past it, THEN list the root once and take each bucket's
+  *    newest generation; fold base ∪ deltas and project live rows.
+  *    That order is what makes any interleaving with a fold exact: a
+  *    generation committed after the delta listing only adds deltas
+  *    the listing already holds, which the idempotent algebra absorbs,
+  *    while the reverse order could pair an old generation with a
+  *    delta list that already dropped what it lacks. With no pending
+  *    deltas the read is a pure scan + liveness filter.
+  *  - **Reclamation is one fold late.** Each fold first deletes what
+  *    the PREVIOUS fold superseded — older generations, emptied-bucket
+  *    markers, consumed deltas, stray stage dirs of a killed fold —
+  *    and an async fold starts only `compactEvery` triggers after the
+  *    previous fold ended, so a reader's files outlive the fold that
+  *    superseded them by one whole fold cycle (16 s at the reference's
+  *    2 s cadence). A reader that outlives the grace fails on the
+  *    missing file; it never returns a partial answer.
+  *
+  * Crash windows need no recovery step: a fold killed before its
+  * watermark leaves a mix of old and new generations whose deltas are
+  * all still pending, and the union re-folds exactly; its stage dir is
+  * hidden and the next fold deletes it. Tombstones are retained (they
+  * are what makes late/reordered events safe); [[vacuum]] physically
+  * removes them once the source can no longer deliver older lsns (the
+  * Postgres slot contract — confirmed_flush_lsn only advances).
   *
   * The streaming path runs compaction ASYNCHRONOUSLY (the Hudi pattern):
   * every trigger is O(batch), the fold happens on a background thread
   * guarded per replica, and change VISIBILITY never waits on it because
   * reads are merge-on-read anyway — the fold only bounds read
   * amplification. Deltas committed during a fold stay untouched (the
-  * consumed set is listed once; the watermark rises only to its max),
-  * and a killed fold leaves its deltas live for the next attempt.
+  * consumed set is listed once; the watermark rises only to its max).
   * Direct `applyBatch` callers default to the synchronous fold
   * (deterministic for tests/layout assertions). At 100 TB: thousands of
-  * buckets, deltas partition-pruned by bucket at compaction, and an
-  * object-store deployment swaps via a per-batch manifest instead of
-  * directory renames (S3 renames are copies); the dataflow is unchanged.
+  * buckets, only touched buckets re-generated per fold, and an
+  * object-store deployment commits via a manifest instead of directory
+  * renames ([[ManifestReplica]]; S3 renames are copies); the dataflow is
+  * unchanged.
   *
-  * SCHEMA EVOLUTION — documented decision (r6 verdict #7): this typed
-  * single-table path fixes its schema at compile time BY DESIGN —
-  * [[PersonRow]] and the summary structs ([[DeltaSchema]]/[[BaseSchema]])
-  * are what buy fully codegen'd folds with no JSON round-trip per
-  * column. A deployment that needs to widen a table's schema without a
-  * rewrite uses the generic declared-schema path ([[MultiTable]] /
+  * [[MultiTable]] stores its generic (key, JSON image) summaries with
+  * this same protocol: every storage helper here takes a [[Shape]]
+  * naming the summary schema, key column and key→bucket expression.
+  *
+  * SCHEMA EVOLUTION — documented decision: this typed single-table path
+  * fixes its schema at compile time BY DESIGN — [[PersonRow]] and the
+  * summary structs ([[DeltaSchema]]/[[BaseSchema]]) are what buy fully
+  * codegen'd folds with no JSON round-trip per column. A deployment
+  * that needs to widen a table's schema without a rewrite uses the
+  * generic declared-schema path ([[MultiTable]] /
   * [[ManifestMultiTable]] with a single [[TableSpec]]): its replicas
   * store the change image as a JSON column map, so adding a column to
   * the declared schema is a READ-SIDE change only (old rows read as
@@ -89,12 +104,12 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
 object Replicate {
   val BucketCol = "id_bucket"
 
-  /** Crash-recovery prefix for the rename-aside swap. Leading dot =
-    * hidden to Hadoop/Spark file listings, so a leftover aside dir can
-    * never leak into a replica read. */
-  private val AsidePrefix = ".__old."
+  /** Generation `gen` of bucket `b` under the replica root. */
+  private def genName(b: Int, gen: Long): String = s"$BucketCol=$b.g$gen"
 
-  // (base files share the delta summary schema — see [[BaseSchema]])
+  /** Hidden dir a fold stages generation `<gen>` in before committing
+    * it bucket by bucket (leading dot: invisible to listings and reads). */
+  private val StagePrefix = ".__stage-g"
 
   private[cdc] def check(ok: Boolean, what: => String): Unit =
     if (!ok) throw new java.io.IOException(s"replica filesystem op failed: $what")
@@ -123,7 +138,7 @@ object Replicate {
   /** Hidden delta-log dir under the replica root (leading dot: invisible
     * to Hadoop/Spark listings, so plain reads of the base never pick up
     * delta rows). */
-  private[cdc] val DeltaDirName = ".__delta"
+  private val DeltaDirName = ".__delta"
 
   /** Layout marker at the replica root recording the bucket count the
     * replica was written with. `numBuckets` defines the key→bucket
@@ -137,7 +152,7 @@ object Replicate {
   private val layoutSeen =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
-  private[cdc] def checkLayout(fs: FileSystem, base: Path,
+  private def checkLayout(fs: FileSystem, base: Path,
       numBuckets: Int): Unit = {
     val cached = layoutSeen.get(base.toString)
     if (cached != null)
@@ -160,13 +175,12 @@ object Replicate {
           check(n == numBuckets,
             s"replica $base laid out with numBuckets=$n, caller passed $numBuckets")
         } else {
-          // adopt (also covers pre-r5 replicas) — but never blindly
-          // (r5 ADVICE): existing bucket dirs prove the real modulus'
-          // LOWER bound, and a dir with id >= the adopted count means
-          // the caller's modulus is provably wrong — stale higher
-          // buckets would hold duplicate keys the incremental
+          // adopt — but never blindly: existing bucket dirs prove the
+          // real modulus' LOWER bound, and a dir with id >= the adopted
+          // count means the caller's modulus is provably wrong — stale
+          // higher buckets would hold duplicate keys the incremental
           // compaction never rewrites. One cheap one-time LIST.
-          val existing = listBuckets(fs, base)
+          val existing = gensOf(listRoot(fs, base)).map(_.bucket)
           check(existing.forall(_ < numBuckets),
             s"replica $base has bucket dir id_bucket=${existing.max} — " +
               s"cannot adopt numBuckets=$numBuckets")
@@ -205,11 +219,24 @@ object Replicate {
       StructField("created_at", TimestampType)))),
     StructField("last_d_lsn", LongType)))
 
+  /** What the storage protocol needs to know about one summary layout:
+    * the delta schema (the base schema is it minus the bucket column),
+    * the key column, and the key→bucket expression for a bucket count.
+    * The typed path uses [[PersonShape]]; [[MultiTable]] declares the
+    * generic (key, JSON image) twin. */
+  private[cdc] final case class Shape(deltaSchema: StructType, key: String,
+      bucketOf: Int => Column) {
+    val baseSchema: StructType =
+      StructType(deltaSchema.fields.filterNot(_.name == BucketCol))
+  }
+
+  private[cdc] val PersonShape = Shape(DeltaSchema, "id",
+    n => pmod(col("id"), lit(n)).cast("int"))
+
   /** Base-bucket file schema: identical to the deltas minus the bucket
     * column (that is the partition dir). One summary row per key that
     * ever existed — live keys and tombstones alike. */
-  private[cdc] val BaseSchema =
-    StructType(DeltaSchema.fields.filterNot(_.name == BucketCol))
+  private[cdc] val BaseSchema = PersonShape.baseSchema
 
   /** Lift plain person rows into summary form: image and insert stamped
     * at `lsn` (0 for snapshots — every real change has lsn ≥ 1, so
@@ -366,40 +393,46 @@ object Replicate {
         max(col("last_d_lsn")).as("last_d_lsn"))
   }
 
-  // (the old recency-assuming mergeBatch join is gone: base rows ARE
-  // summaries now, so batch-vs-base merging is [[combineSummaries]] —
-  // commutative, so an out-of-order micro-batch can never clobber a
-  // newer image the way "summary beats base" did)
+  /** A committed bucket generation: a parquet dir, or the empty marker
+    * file of a bucket whose keys were all vacuumed. */
+  private final case class Gen(bucket: Int, gen: Long, path: Path,
+      isDir: Boolean)
 
-  /** Bucket ids present on disk — one listing call, aside dirs excluded. */
-  private[cdc] def listBuckets(fs: FileSystem, base: Path): Set[Int] =
-    if (!fs.exists(base)) Set.empty
-    else fs.listStatus(base).iterator.map(_.getPath.getName)
-      .filter(_.startsWith(BucketCol + "="))
-      .map(_.substring(BucketCol.length + 1).toInt).toSet
+  private def listRoot(fs: FileSystem, root: Path): Seq[FileStatus] =
+    if (!fs.exists(root)) Seq.empty else fs.listStatus(root).toSeq
+
+  private def gensOf(entries: Seq[FileStatus]): Seq[Gen] =
+    entries.flatMap { st =>
+      val n = st.getPath.getName
+      if (!n.startsWith(BucketCol + "=")) None
+      else {
+        val Array(b, g) = n.stripPrefix(BucketCol + "=").split("\\.g")
+        Some(Gen(b.toInt, g.toLong, st.getPath, st.isDirectory))
+      }
+    }
+
+  private def newest(gens: Seq[Gen]): Map[Int, Gen] =
+    gens.groupBy(_.bucket).map { case (b, gs) => b -> gs.maxBy(_.gen) }
 
   /** Compaction watermark file: holds the max batchId folded into the
     * base. Deltas with batchId ≤ watermark are ALREADY in the base and
-    * must be ignored (and may be lazily deleted): a crash between the
-    * bucket swap + watermark commit and the delta deletions can leave an
-    * arbitrary subset of consumed deltas behind, and re-applying only an
-    * OLDER delta would regress keys whose newer image sat in a deleted
-    * one. The watermark makes compaction's visible effect atomic:
-    * before the marker commits, the full (idempotent) delta set is
-    * re-applied; after it, none are. */
+    * must be ignored: re-applying only an OLDER delta would regress
+    * keys whose newer image sat in a reclaimed one. The watermark makes
+    * a fold's visible effect atomic: before the marker commits, the
+    * full (idempotent) delta set is re-applied over whatever mix of
+    * generations is on disk; after it, none are. */
   private val WatermarkFile = "_watermark"
 
-  private[cdc] def readWatermark(fs: FileSystem, dRoot: Path): Long = {
+  private def readWatermark(fs: FileSystem, dRoot: Path): Long = {
     val p = new Path(dRoot, WatermarkFile)
     // exists-then-open is a TOCTOU window against [[writeWatermark]]'s
-    // delete-then-rename commit from a CONCURRENT compactor (the async
-    // fold, or another writer's lazy-deletion pass): a reader that
+    // delete-then-rename commit from a concurrent fold: a reader that
     // checks existence before the delete and opens after it dies on
-    // FileNotFound mid-replace (caught by the 300-trigger lifecycle
-    // soak). Open-and-catch instead, retrying while the marker exists:
-    // the exists=true/open-fails state can only be the replace window,
-    // which a rename resolves in microseconds; stable absence (never
-    // compacted) exits as MinValue on the first check.
+    // FileNotFound mid-replace. Open-and-catch instead, retrying while
+    // the marker exists: the exists=true/open-fails state can only be
+    // the replace window, which a rename resolves in microseconds;
+    // stable absence (never compacted) exits as MinValue on the first
+    // check.
     while (fs.exists(p)) {
       try {
         val in = fs.open(p)
@@ -411,7 +444,7 @@ object Replicate {
     Long.MinValue
   }
 
-  private[cdc] def writeWatermark(fs: FileSystem, dRoot: Path, id: Long): Unit = {
+  private def writeWatermark(fs: FileSystem, dRoot: Path, id: Long): Unit = {
     val tmp = new Path(dRoot, s".$WatermarkFile.tmp")
     val out = fs.create(tmp, true)
     try out.write(id.toString.getBytes("UTF-8")) finally out.close()
@@ -420,43 +453,41 @@ object Replicate {
     check(fs.rename(tmp, dst), s"commit watermark $dst")
   }
 
-  private[cdc] def batchIdOf(p: Path): Long =
+  private def batchIdOf(p: Path): Long =
     p.getName.stripPrefix("batch=").toLong
 
-  /** Live (uncompacted) delta dirs: batch=<epoch> with epoch past the
-    * compaction watermark. One listing + one marker read. */
-  private[cdc] def listDeltas(fs: FileSystem, dRoot: Path): Seq[Path] =
+  private def deltaDirsOf(fs: FileSystem, dRoot: Path): Seq[Path] =
     if (!fs.exists(dRoot)) Seq.empty
-    else {
-      val wm = readWatermark(fs, dRoot)
-      fs.listStatus(dRoot).iterator.map(_.getPath)
-        .filter(_.getName.startsWith("batch="))
-        .filter(batchIdOf(_) > wm).toSeq
-    }
+    else fs.listStatus(dRoot).iterator.map(_.getPath)
+      .filter(_.getName.startsWith("batch=")).toSeq
+
+  /** Pending delta dirs: batch=<epoch> with epoch past the compaction
+    * watermark. The watermark is read BEFORE the listing: a fold
+    * committing in between only leaves already-folded dirs in the
+    * list, which the idempotent fold absorbs. */
+  private def listDeltas(fs: FileSystem, dRoot: Path): Seq[Path] = {
+    val wm = readWatermark(fs, dRoot)
+    deltaDirsOf(fs, dRoot).filter(batchIdOf(_) > wm)
+  }
 
   private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val p = new Path(dir)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  /** Base bucket summaries (no deltas), explicit dirs + schema, WITHOUT
-    * the bucket column (a plain reader never needs to know the writer's
-    * bucket count; [[compact]] recomputes it with the authoritative
-    * `numBuckets`). */
-  private[graft] def readBase(spark: SparkSession, fs: FileSystem,
-      replicaDir: String, only: Option[Set[Int]] = None,
-      schema: StructType = BaseSchema): DataFrame = {
-    val buckets = {
-      val all = listBuckets(fs, new Path(replicaDir))
-      only.fold(all)(all.intersect)
-    }
-    if (buckets.isEmpty)
+  private def scanGens(spark: SparkSession, gens: Iterable[Gen],
+      schema: StructType): DataFrame = {
+    val dirs = gens.filter(_.isDir).map(_.path.toString).toSeq.sorted
+    if (dirs.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema)
-      .parquet(buckets.toSeq.sorted
-        .map(b => s"$replicaDir/$BucketCol=$b"): _*)
+    else spark.read.schema(schema).parquet(dirs: _*)
   }
+
+  private def scanDeltas(spark: SparkSession, dirs: Seq[Path], s: Shape)
+      : DataFrame =
+    spark.read.schema(s.deltaSchema).parquet(dirs.map(_.toString): _*)
+      .select(s.deltaSchema.fieldNames.map(col).toSeq: _*)
 
   /** Fold per-key summaries (one row per key PER INPUT — deltas and/or
     * base) into one summary row per key. The algebra is commutative,
@@ -485,119 +516,67 @@ object Replicate {
         max(col("last_d_lsn")).as("last_d_lsn"))
   }
 
-  /** Read the replica — the merge-on-read view of base buckets plus any
-    * uncompacted deltas (empty if neither exists). With no pending
-    * deltas the compacted base is already one row per key, so the read
-    * is a pure scan + liveness filter — no shuffle. */
+  /** The merge-on-read summaries of one replica: each bucket's newest
+    * generation ∪ the pending deltas, folded to one row per key
+    * (tombstones included). Deltas are listed BEFORE the base — see the
+    * header for why that order makes every interleaving with a fold
+    * exact. With no pending deltas the newest generations already hold
+    * one row per key, so the read is a pure scan. */
+  private[cdc] def readWith(spark: SparkSession, dir: String, s: Shape)
+      : DataFrame = {
+    val (fs, root) = fsOf(spark, dir)
+    val deltaDirs = listDeltas(fs, new Path(root, DeltaDirName))
+    val base = scanGens(spark, newest(gensOf(listRoot(fs, root))).values,
+      s.baseSchema)
+    if (deltaDirs.isEmpty) base
+    else combineSummaries(base.unionAll(scanDeltas(spark, deltaDirs, s)
+      .select(s.baseSchema.fieldNames.map(col).toSeq: _*)), Seq(s.key))
+  }
+
+  /** Read the replica — the live rows of [[readWith]]'s merge-on-read
+    * view (empty if nothing was ever written). */
   def readReplica(spark: SparkSession, replicaDir: String)
       : Dataset[PersonRow] = {
     import spark.implicits._
-    val (fs, base) = fsOf(spark, replicaDir)
-    val baseDf = readBase(spark, fs, replicaDir)
-    val deltaDirs = listDeltas(fs, new Path(base, DeltaDirName))
-    val folded =
-      if (deltaDirs.isEmpty) baseDf
-      else {
-        val deltas = spark.read.schema(DeltaSchema)
-          .parquet(deltaDirs.map(_.toString): _*)
-          .select(BaseSchema.fieldNames.map(col).toSeq: _*)
-        combineSummaries(baseDf.unionAll(deltas), Seq("id"))
-      }
-    projectAlive(folded).as[PersonRow]
+    projectAlive(readWith(spark, replicaDir, PersonShape)).as[PersonRow]
   }
 
-  /** Roll a crashed rename-aside swap back or forward (single-writer;
-    * called at the start of each batch): an aside dir whose live dir
-    * exists means that swap completed — drop the aside; a missing live
-    * dir means the swap aborted between the two renames — restore the
-    * aside, and the replayed micro-batch re-merges idempotently. */
-  private[cdc] def recoverSwap(fs: FileSystem, base: Path): Unit =
-    if (fs.exists(base)) fs.listStatus(base).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith(AsidePrefix)) {
-        val live = new Path(base, n.stripPrefix(AsidePrefix))
-        if (fs.exists(live))
-          check(fs.delete(st.getPath, true), s"drop completed aside $n")
-        else check(fs.rename(st.getPath, live), s"restore aborted swap $n")
-      }
-    }
-
-  /** Swap one merged bucket into place without ever deleting live data
-    * before its replacement is committed (ADVICE r2): live → aside,
-    * fresh → live, drop aside. Every rename result is checked. */
-  private def swapBucket(fs: FileSystem, replicaDir: String, tmpDir: String,
-      bkt: Int): Unit = {
-    val live = new Path(s"$replicaDir/$BucketCol=$bkt")
-    val aside = new Path(s"$replicaDir/$AsidePrefix$BucketCol=$bkt")
-    val fresh = new Path(s"$tmpDir/$BucketCol=$bkt")
-    if (fs.exists(live)) check(fs.rename(live, aside), s"set aside $live")
-    // a touched bucket absent from the output had all its keys deleted —
-    // ending up with no live dir IS the apply
-    if (fs.exists(fresh)) check(fs.rename(fresh, live), s"swap in $fresh")
-    if (fs.exists(aside)) check(fs.delete(aside, true), s"drop aside $aside")
-  }
-
-  /** Apply one micro-batch to the bucketed replica. Idempotent: replaying
-    * the last batch after a crash converges to the same state.
-    * `numBuckets` must stay constant for a replica's lifetime (it defines
-    * the key → bucket mapping the merge joins on). */
-  /** Per-phase stderr timing, enabled via GRAFT_CDC_TRACE=1 (bench
-    * triage only — zero cost when off). */
-  private val trace = sys.env.get("GRAFT_CDC_TRACE").contains("1")
-  private def traced[A](what: String)(body: => A): A =
-    if (!trace) body else {
-      val t0 = System.nanoTime()
-      try body
-      finally System.err.println(
-        f"[cdc-trace] $what%-14s ${(System.nanoTime() - t0) / 1e6}%8.1f ms")
-    }
-
-  /** `batchId` is the delta's identity and MUST be monotonically
-    * increasing across distinct batches for one replica (the streaming
-    * path threads the foreachBatch epoch): re-using an id means "this
-    * is a REPLAY of that batch" — the delta is overwritten in place,
-    * and an id at or below the compaction watermark is discarded as
-    * already-applied (both exactly right for crash replay, both data
-    * loss if a NEW batch wears an old id). No default value so a direct
-    * caller must choose one consciously. */
-  /** In-flight background compactions, one slot per replica dir:
-    * guards against overlapping compactions AND tells the trigger path
-    * to skip recoverSwap while a same-JVM compactor is mid-swap (a
-    * half-done swap is the compactor's, not a crash's). */
+  /** In-flight background compactions, one slot per replica dir: at
+    * most one async fold per replica, and the handle
+    * [[awaitCompactions]] joins. */
   private val compacting =
     new java.util.concurrent.ConcurrentHashMap[String, Thread]()
 
-  /** Replica dirs with a bulk lifecycle op (vacuum) in flight — the
-    * rename-path twin of [[ManifestReplica]]'s flag (r6 review: the
-    * multi-table stream runs recoverSwap every trigger on EVERY
-    * declared table, so an operator vacuum's rename-aside swap on an
-    * idle table could be torn apart mid-swap by a trigger that
-    * mistook it for a crash; triggers also must not start a fold whose
-    * base read predates the vacuum rewrite). Triggers skip
-    * recoverSwap and the compaction threshold while the flag is set;
-    * delta writes stay allowed (the next fold consumes them against
-    * the post-vacuum base). */
+  /** Triggers per replica dir since its last fold ended. The next async
+    * fold waits for `compactEvery` of them, so what a fold supersedes
+    * survives at least `compactEvery` triggers past its commit even
+    * when folds run longer than a trigger — counting only pending
+    * deltas would start the next fold (and its reclaim) right after a
+    * long one. */
+  private val triggersSinceFold =
+    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+
+  /** Replica dirs with a bulk lifecycle op (snapshot, vacuum, truncate)
+    * in flight — the twin of [[ManifestReplica]]'s flag. Concurrent
+    * bulk ops fail fast on it, and triggers skip the compaction
+    * threshold while it is set, so new folds neither starve the op's
+    * write lock nor run a base read from before its rewrite; delta
+    * writes stay allowed (the next fold consumes them against the
+    * post-op base). */
   private val lifecycleOps =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private[cdc] def lifecycleBusy(dir: String): Boolean =
+  private def lifecycleBusy(dir: String): Boolean =
     lifecycleOps.contains(dir)
 
-  /** Per-replica-dir READ-WRITE locks: the trigger's sections (swap
-    * recovery, the whole delta write/commit, threshold folds) and the
-    * async fold take the SHARED side — they never contend with each
-    * other, preserving the async design's trigger-stays-O(batch)
-    * property — while operator ops that rewrite or delete state
-    * (vacuum, truncate, compactNow, the public compacts) take the
-    * EXCLUSIVE side. The earlier advisory flag was check-then-act
-    * (r6 review: a trigger descheduled between `!lifecycleBusy` and
-    * its recoverSwap could wake inside a vacuum's rename-aside window
-    * and tear the swap apart; a truncate could delete a delta tmp
-    * mid-commit and kill the stream); reader/writer exclusion closes
-    * every such interleaving without serializing the steady state.
-    * The flag survives only to SKIP work while a lifecycle op runs or
-    * waits (recoverSwap would misread its swaps; new folds would
-    * starve it). */
+  /** Per-replica-dir READ-WRITE locks: the trigger (delta write/commit,
+    * threshold folds) and the async fold take the SHARED side — they
+    * never contend with each other, preserving the async design's
+    * trigger-stays-O(batch) property — while operator ops that rewrite
+    * or delete state (snapshot, vacuum, truncate, the public compacts)
+    * take the EXCLUSIVE side, so a truncate can never delete a delta
+    * mid-commit and a vacuum never folds beside another fold. Readers
+    * take no lock. */
   private val dirLocks = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.locks.ReentrantReadWriteLock]()
 
@@ -627,267 +606,274 @@ object Replicate {
     compacting.values().toArray(Array.empty[Thread]).foreach(_.join())
 
   /** Join only ONE replica dir's in-flight async fold — what a
-    * lifecycle op actually needs (the global join stalls on unrelated
-    * tables' folds in a multi-table deployment, r6 review). */
-  private[cdc] def awaitCompactions(replicaDir: String): Unit =
+    * lifecycle op needs (the global join would stall on unrelated
+    * tables' folds in a multi-table deployment). */
+  private def awaitCompactions(replicaDir: String): Unit =
     Option(compacting.get(replicaDir)).foreach(_.join())
 
+  /** Apply one micro-batch to the bucketed replica. Idempotent: replaying
+    * the last batch after a crash converges to the same state.
+    * `numBuckets` must stay constant for a replica's lifetime (it defines
+    * the key → bucket mapping; [[checkLayout]] enforces it).
+    *
+    * `batchId` is the delta's identity and MUST be monotonically
+    * increasing across distinct batches for one replica (the streaming
+    * path threads the foreachBatch epoch): re-using an id means "this
+    * is a REPLAY of that batch" — the delta is overwritten in place,
+    * and an id at or below the compaction watermark is discarded as
+    * already-applied (both exactly right for crash replay, both data
+    * loss if a NEW batch wears an old id). No default value so a direct
+    * caller must choose one consciously. */
   def applyBatch(spark: SparkSession, batch: Dataset[PersonChange],
       replicaDir: String, numBuckets: Int = DefaultNumBuckets,
-      mergeParallelism: Int = DefaultMergeParallelism,
       batchId: Long,
       compactEvery: Int = DefaultCompactEvery,
-      compactAsync: Boolean = false): Unit = {
-    val base = new Path(replicaDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    shared(replicaDir) {
-    traced("layout")(checkLayout(fs, base, numBuckets))
-    if (!compacting.containsKey(replicaDir) && !lifecycleBusy(replicaDir))
-      traced("recoverSwap")(recoverSwap(fs, base))
-    val dRoot = new Path(base, DeltaDirName)
-    // ONE O(batch) job per trigger: micro-batch → per-key summary (one
-    // bucket-keyed shuffle) → one small parquet file per bucket
-    // partition. No base read, no bucket rewrite, no driver collect.
-    val tmp = new Path(dRoot, s".tmp-$batchId")
-    fs.delete(tmp, true)
-    traced("delta-write")(
-      summarizeBucketed(batch.toDF(), numBuckets)
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString))
-    // commit: replace-then-rename — replaying this batchId after a crash
-    // rebuilds the identical delta, so the replace is idempotent
-    val dst = new Path(dRoot, s"batch=$batchId")
-    fs.delete(dst, true)
-    check(fs.rename(tmp, dst), s"commit delta $dst")
-    // one listing serves orphan-tmp cleanup, lazy deletion of already-
-    // compacted deltas (crash leftovers or a replayed pre-compaction
-    // batch), AND the compaction trigger
-    val entries = fs.listStatus(dRoot)
-    entries.iterator.filter(_.getPath.getName.startsWith(".tmp-"))
-      .foreach(e => fs.delete(e.getPath, true))
+      compactAsync: Boolean = false): Unit =
+    applyWith(spark, replicaDir, summarizeBucketed(batch.toDF(), numBuckets),
+      PersonShape, numBuckets, batchId, compactEvery, compactAsync)
+
+  /** One trigger against one replica: commit `summary` (one row per key,
+    * with the bucket column) as delta `batch=<batchId>`, then fold once
+    * `compactEvery` deltas are pending — inline, or on a background
+    * thread when `compactAsync`. */
+  private[cdc] def applyWith(spark: SparkSession, dir: String,
+      summary: DataFrame, s: Shape, numBuckets: Int, batchId: Long,
+      compactEvery: Int, compactAsync: Boolean): Unit = {
+    val (fs, root) = fsOf(spark, dir)
+    shared(dir) {
+      checkLayout(fs, root, numBuckets)
+      val dRoot = new Path(root, DeltaDirName)
+      // ONE O(batch) job per trigger: no base read, no bucket rewrite,
+      // no driver collect
+      val tmp = new Path(dRoot, s".tmp-$batchId")
+      fs.delete(tmp, true)
+      summary.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      // commit: replace-then-rename — replaying this batchId after a
+      // crash rebuilds the identical delta, so the replace is idempotent
+      val dst = new Path(dRoot, s"batch=$batchId")
+      fs.delete(dst, true)
+      check(fs.rename(tmp, dst), s"commit delta $dst")
+      val due = listDeltas(fs, dRoot).size >= compactEvery &&
+        !lifecycleBusy(dir)
+      if (!compactAsync) { if (due) foldWith(spark, fs, dir, numBuckets, s) }
+      else if (triggersSinceFold.merge(dir, 1, _ + _) >= compactEvery && due)
+        foldAsync(spark, fs, dir, numBuckets, s, batchId)
+    }
+  }
+
+  /** Start a background fold unless one is already running for `dir`
+    * (the Hudi pattern): the trigger path stays O(batch) — readers
+    * already merge deltas, so visibility gains nothing from an inline
+    * fold, and the fold's lumpy cost leaves the latency envelope. */
+  private def foldAsync(spark: SparkSession, fs: FileSystem, dir: String,
+      numBuckets: Int, s: Shape, batchId: Long): Unit =
+    if (!compacting.containsKey(dir)) {
+      val t = new Thread(() => {
+        // the fold's jobs run in their OWN scheduler pool: under a FAIR
+        // session (spark.scheduler.mode=FAIR — Bench and any
+        // latency-sensitive deployment set it) the pool time-slices
+        // task slots with the trigger's default pool, so a fold's jobs
+        // never queue ahead of the next trigger's. Inert under FIFO.
+        spark.sparkContext.setLocalProperty(
+          "spark.scheduler.pool", "graft-compact")
+        // a spawn that raced a starting lifecycle op parks here until
+        // the op finishes, then re-checks the flag
+        try shared(dir) {
+          // bounded footprint: at most [[ManifestReplica.AsyncFoldMaxTasks]]
+          // slots at any instant — FAIR weights share slots only at
+          // task boundaries, so a full-width merge launched into a
+          // trigger gap would convoy the next trigger's write behind
+          // whole fold-task durations
+          if (!lifecycleBusy(dir))
+            foldWith(spark, fs, dir, numBuckets, s,
+              maxTasks = Some(ManifestReplica.AsyncFoldMaxTasks))
+        }
+        catch { case e: Throwable =>
+          System.err.println(s"[cdc] async compaction failed (deltas stay live, next trigger retries): $e")
+        } finally compacting.remove(dir)
+      }, s"graft-compact-$batchId")
+      t.setDaemon(true)
+      if (compacting.putIfAbsent(dir, t) == null) t.start()
+    }
+
+  /** Delete what earlier folds superseded: stray stage dirs of a killed
+    * fold, every generation below its bucket's newest, the marker of an
+    * emptied bucket (only once its older generations are gone, so none
+    * can resurface in between), and deltas at or below the watermark.
+    * Returns the newest generation dir of each bucket and the next
+    * generation number. */
+  private def reclaim(fs: FileSystem, root: Path): (Map[Int, Gen], Long) = {
+    val entries = listRoot(fs, root)
+    entries.filter(_.getPath.getName.startsWith(StagePrefix))
+      .foreach(st => fs.delete(st.getPath, true))
+    val gens = gensOf(entries)
+    val top = newest(gens)
+    gens.filterNot(g => top(g.bucket) == g)
+      .foreach(g => check(fs.delete(g.path, true), s"reclaim ${g.path}"))
+    top.values.filterNot(_.isDir)
+      .foreach(g => check(fs.delete(g.path, false), s"reclaim ${g.path}"))
+    val dRoot = new Path(root, DeltaDirName)
     val wm = readWatermark(fs, dRoot)
-    val (stale, live) = entries.iterator.map(_.getPath)
-      .filter(_.getName.startsWith("batch=")).toSeq
-      .partition(batchIdOf(_) <= wm)
-    stale.foreach(p => fs.delete(p, true))
-    if (live.size >= compactEvery) {
-      if (!compactAsync) {
-        if (!lifecycleBusy(replicaDir))
-          traced("compact")(compact(spark, fs, replicaDir, numBuckets))
-      }
-      else if (!compacting.containsKey(replicaDir) &&
-          !lifecycleBusy(replicaDir)) {
-        // async (Hudi-style): the trigger path stays O(batch) — readers
-        // already merge deltas, so visibility gains nothing from an
-        // inline fold, and the fold's lumpy cost leaves the latency
-        // envelope. New deltas written during the fold are untouched
-        // (the consumed set is listed once, the watermark rises only to
-        // its max). One fold per replica at a time.
-        val t = new Thread(() => {
-          // the fold's jobs run in their OWN scheduler pool (r8 verdict
-          // #5): under the default FIFO scheduler a 256-bucket fold's
-          // jobs queue AHEAD of the next trigger's and occupy every
-          // task slot, landing the fold's lumpy cost on that trigger's
-          // latency even though the fold thread is async. Under a FAIR
-          // session (spark.scheduler.mode=FAIR — Bench and any
-          // latency-sensitive deployment set it) the pool time-slices
-          // task slots with the trigger's default pool, so steady-state
-          // trigger latency holds through fold epochs. Under FIFO the
-          // property is inert — no behavior change.
-          spark.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", "graft-compact")
-          // the fold's swaps serialize with lifecycle rewrites too — a
-          // spawn that raced a starting vacuum (advisory flag read)
-          // parks here until the rewrite finishes, then folds from the
-          // post-rewrite state (compact re-reads base and deltas)
-          try shared(replicaDir) {
-            // bounded footprint (r11 verdict #2, the manifest twin's
-            // fix): a background fold may hold at most
-            // [[ManifestReplica.AsyncFoldMaxTasks]] slots at any
-            // instant — FAIR weights share slots only at task
-            // boundaries, so a full-width merge launched into a
-            // trigger gap convoys the next trigger's write behind
-            // whole fold-task durations
-            if (!lifecycleBusy(replicaDir))
-              traced("compact")(compact(spark, fs, replicaDir, numBuckets,
-                maxTasks = Some(ManifestReplica.AsyncFoldMaxTasks)))
-          }
-          catch { case e: Throwable =>
-            System.err.println(s"[cdc] async compaction failed (deltas stay live, next trigger retries): $e")
-          } finally compacting.remove(replicaDir)
-        }, s"graft-compact-$batchId")
-        t.setDaemon(true)
-        if (compacting.putIfAbsent(replicaDir, t) == null) t.start()
-      }
+    deltaDirsOf(fs, dRoot).filter(batchIdOf(_) <= wm)
+      .foreach(fs.delete(_, true))
+    (top.filter(_._2.isDir), (0L +: gens.map(_.gen)).max + 1)
+  }
+
+  /** Commit bucket-partitioned summaries as generation `gen`: Spark
+    * writes them into a hidden stage dir, then each bucket commits with
+    * ONE dir rename. A bucket of `cover` the output lacks (every key
+    * vacuumed) commits an empty marker file instead. */
+  private def commitGen(fs: FileSystem, root: Path, out: DataFrame,
+      cover: Set[Int], gen: Long): Unit = {
+    val stage = new Path(root, s"$StagePrefix$gen")
+    out.write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
+      .parquet(stage.toString)
+    val written = fs.listStatus(stage).iterator.map(_.getPath)
+      .filter(_.getName.startsWith(BucketCol + "=")).map { p =>
+        val b = p.getName.stripPrefix(BucketCol + "=").toInt
+        check(fs.rename(p, new Path(root, genName(b, gen))), s"commit $p")
+        b
+      }.toSet
+    (cover -- written).foreach(b =>
+      fs.create(new Path(root, genName(b, gen)), false).close())
+    fs.delete(stage, true)
+  }
+
+  /** One fold: [[reclaim]], then fold the pending deltas into the newest
+    * generation of every bucket they TOUCH and commit the result as the
+    * next generation, then the watermark. The touched-bucket set comes
+    * off the small deltas (a collect bounded by `numBuckets`) and only
+    * those buckets' dirs are read, so an untouched bucket's dir is
+    * byte-stable and the fold stays O(hot data), not O(replica), at
+    * thousands of buckets. Base and deltas share one summary schema,
+    * so the fold is a pure union + [[combineSummaries]] — no join: one
+    * bucket-keyed exchange feeds the window, the aggregate, AND the
+    * bucket-partitioned write. Dead keys persist as tombstones.
+    *
+    * `vacuum` instead re-generates EVERY bucket with its tombstones
+    * dropped (an all-tombstone bucket commits the empty marker). */
+  private def foldWith(spark: SparkSession, fs: FileSystem, dir: String,
+      numBuckets: Int, s: Shape, vacuum: Boolean = false,
+      maxTasks: Option[Int] = None): Unit = try {
+    val root = new Path(dir)
+    val (live, gen) = reclaim(fs, root)
+    val dRoot = new Path(root, DeltaDirName)
+    val deltaDirs = listDeltas(fs, dRoot)
+    val deltas = if (deltaDirs.isEmpty) None
+      else Some(scanDeltas(spark, deltaDirs, s))
+    val touched = deltas.fold(Set.empty[Int])(
+      _.select(BucketCol).distinct().collect().map(_.getInt(0)).toSet)
+    val cover = if (vacuum) touched ++ live.keySet else touched
+    if (cover.nonEmpty) {
+      val base = scanGens(spark, cover.flatMap(live.get), s.baseSchema)
+        .withColumn(BucketCol, s.bucketOf(numBuckets))
+        .select(s.deltaSchema.fieldNames.map(col).toSeq: _*)
+      val merged = combineSummaries(deltas.fold(base)(base.unionAll),
+        Seq(BucketCol, s.key),
+        width = Some(maxTasks.fold(cover.size)(math.min(cover.size, _))))
+      commitGen(fs, root,
+        if (vacuum) merged.filter(col("first_ins").isNotNull) else merged,
+        cover, gen)
+      // commit point: once the watermark lands the consumed deltas are
+      // invisible everywhere; the next fold reclaims them
+      if (deltaDirs.nonEmpty)
+        writeWatermark(fs, dRoot, deltaDirs.map(batchIdOf).max)
     }
+  } finally triggersSinceFold.put(dir, 0)
+
+  /** Operator-invoked fold of all pending deltas (the public entry over
+    * the fold the trigger path schedules, for any [[Shape]]): joins the
+    * dir's async fold, then folds under the exclusive lock. */
+  private[cdc] def compactWith(spark: SparkSession, dir: String,
+      numBuckets: Int, s: Shape): Unit = {
+    awaitCompactions(dir)
+    exclusive(dir) {
+      val (fs, root) = fsOf(spark, dir)
+      checkLayout(fs, root, numBuckets)
+      foldWith(spark, fs, dir, numBuckets, s)
     }
   }
 
-  /** Write bucket-partitioned summaries to a temp dir, then rename-aside
-    * swap the written buckets into the live base. `dropAbsent = true`
-    * (the [[vacuum]] full-rewrite) additionally swaps OUT live buckets
-    * the output no longer contains — absence then means "every key
-    * vacuumed"; [[compact]] passes false so buckets its incremental
-    * fold never read are left untouched. */
-  private[cdc] def writeAndSwap(fs: FileSystem, base: Path, replicaDir: String,
-      merged: DataFrame, dropAbsent: Boolean): Unit = {
-    val tmpDir = s"$replicaDir.__tmp"
-    fs.delete(new Path(tmpDir), true)
-    merged.write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
-      .parquet(tmpDir)
-    if (!fs.exists(base)) check(fs.mkdirs(base), s"mkdirs $base")
-    val touched = listBuckets(fs, new Path(tmpDir)) ++
-      (if (dropAbsent) listBuckets(fs, base) else Set.empty)
-    touched.toSeq.sorted.foreach(swapBucket(fs, replicaDir, tmpDir, _))
-    fs.delete(new Path(tmpDir), true)
-  }
-
-  /** Fold the committed deltas into the buckets they TOUCH and drop
-    * them (round 5 — incremental, like [[ManifestReplica.compact]]):
-    * the touched-bucket set comes off the small deltas (a collect
-    * bounded by `numBuckets`), only those buckets' base dirs are read
-    * (explicit path list = partition pruning by construction), and only
-    * they are swapped — an untouched bucket's dir is byte-stable across
-    * compactions, which is what keeps the fold O(hot data), not
-    * O(replica), at thousands of buckets. Base and deltas share one
-    * summary schema, so the fold is a pure union + [[combineSummaries]]
-    * — no join: one bucket-keyed exchange feeds the window, the
-    * aggregate, AND the bucket-partitioned write. Deltas are deleted
-    * only AFTER every bucket swap completed; a crash anywhere replays
-    * into [[recoverSwap]] + re-folding deltas over the compacted base,
-    * which the max/min algebra absorbs idempotently. Dead keys persist
-    * as tombstones ([[vacuum]] removes them). */
-  private def compact(spark: SparkSession, fs: FileSystem,
-      replicaDir: String, numBuckets: Int,
-      maxTasks: Option[Int] = None): Unit = {
-    val base = new Path(replicaDir)
-    val deltaDirs = listDeltas(fs, new Path(base, DeltaDirName))
-    if (deltaDirs.isEmpty) return
-    val deltas = spark.read.schema(DeltaSchema)
-      .parquet(deltaDirs.map(_.toString): _*)
-      .select(DeltaSchema.fieldNames.map(col).toSeq: _*)
-    val touched = deltas.select(BucketCol).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val baseDf = readBase(spark, fs, replicaDir, Some(touched))
-      .withColumn(BucketCol, pmod(col("id"), lit(numBuckets)).cast("int"))
-      .select(DeltaSchema.fieldNames.map(col).toSeq: _*)
-    val merged = combineSummaries(baseDf.unionAll(deltas),
-      Seq(BucketCol, "id"),
-      width = Some(maxTasks.fold(touched.size.max(1))(c =>
-        math.min(touched.size.max(1), c))))
-    writeAndSwap(fs, base, replicaDir, merged, dropAbsent = false)
-    // commit point: once the watermark lands, the consumed deltas are
-    // invisible everywhere; until then the full set re-applies
-    // idempotently over the swapped base
-    writeWatermark(fs, new Path(base, DeltaDirName),
-      deltaDirs.map(batchIdOf).max)
-    // unchecked: once the watermark is committed these are invisible
-    // everywhere, and the trigger path's lazy stale-cleanup may have
-    // raced us to the same dirs
-    deltaDirs.foreach(d => fs.delete(d, true))
-  }
-
-  /** Operator-invoked fold of all pending deltas into the base (public
-    * entry over the incremental [[compact]] the trigger path schedules)
-    * — read amplification drops to zero until new deltas land. */
+  /** Operator-invoked fold of all pending deltas into the base — read
+    * amplification drops to zero until new deltas land. */
   def compactNow(spark: SparkSession, replicaDir: String,
-      numBuckets: Int = DefaultNumBuckets): Unit = {
-    awaitCompactions(replicaDir)
-    // operator entry: exclusive — an unguarded compact raced the
-    // trigger's (both write the same staging dir) and could tear a
-    // vacuum's swaps (r6 review)
-    exclusive(replicaDir) {
-      val (fs, base) = fsOf(spark, replicaDir)
-      checkLayout(fs, base, numBuckets)
-      recoverSwap(fs, base)
-      compact(spark, fs, replicaDir, numBuckets)
-    }
-  }
+      numBuckets: Int = DefaultNumBuckets): Unit =
+    compactWith(spark, replicaDir, numBuckets, PersonShape)
 
-  /** Physically remove tombstones (and fold any pending deltas first).
-    * Safe once the source can no longer deliver changes with lsns below
-    * the tombstones' delete lsns — the Postgres slot contract
+  /** [[vacuum]] for any [[Shape]]: a registered lifecycle op (concurrent
+    * bulk ops fail fast), fold joined BEFORE the write lock (joining a
+    * fold parked on the shared side while holding it would deadlock). */
+  private[cdc] def vacuumWith(spark: SparkSession, dir: String,
+      numBuckets: Int, s: Shape): Unit =
+    withLifecycle(dir) {
+      awaitCompactions(dir)
+      exclusive(dir) {
+        val (fs, root) = fsOf(spark, dir)
+        checkLayout(fs, root, numBuckets)
+        foldWith(spark, fs, dir, numBuckets, s, vacuum = true)
+      }
+    }
+
+  /** Physically remove tombstones, folding any pending deltas in the
+    * same pass. Safe once the source can no longer deliver changes with
+    * lsns below the tombstones' delete lsns — the Postgres slot contract
     * (confirmed_flush_lsn only advances; replicator/main.go:159-164
     * consumes with get_changes, which advances it). Until then,
     * tombstones are load-bearing: they are what absorbs a reordered or
     * replayed older event without resurrecting a deleted row. A bucket
-    * whose keys are all tombstones is dropped outright. */
+    * whose keys are all tombstones reads empty at once, and its last
+    * dir goes with the next fold. */
   def vacuum(spark: SparkSession, replicaDir: String,
       numBuckets: Int = DefaultNumBuckets): Unit =
-    withLifecycle(replicaDir) {
-      awaitCompactions(replicaDir)
-      exclusive(replicaDir) {
-        val (fs, base) = fsOf(spark, replicaDir)
-        checkLayout(fs, base, numBuckets)
-        recoverSwap(fs, base)
-        compact(spark, fs, replicaDir, numBuckets)
-        val alive = readBase(spark, fs, replicaDir)
-          .filter(col("first_ins").isNotNull)
-          .withColumn(BucketCol,
-            pmod(col("id"), lit(numBuckets)).cast("int"))
-          .repartition(numBuckets, col(BucketCol))
-        writeAndSwap(fs, base, replicaDir, alive, dropAbsent = true)
-      }
-    }
+    vacuumWith(spark, replicaDir, numBuckets, PersonShape)
 
   /** Truncate the replica (S9 — `TRUNCATE TABLE person RESTART IDENTITY`
     * before a subscription re-copy, pubsub/main.go:88): drop every
-    * bucket, the delta log, and the compaction watermark, leaving an
-    * empty replica root ready for a fresh [[snapshot]] + stream. Also
-    * clears any crashed-swap aside dirs (they reference truncated
-    * state). */
+    * bucket generation, stage dir, the delta log and the compaction
+    * watermark, leaving an empty replica root ready for a fresh
+    * [[snapshot]] + stream. */
   def truncate(spark: SparkSession, replicaDir: String): Unit =
-    // same protection as vacuum (r6 review: an unguarded truncate raced
-    // a live trigger's recoverSwap — a deleted aside mid-restore kills
-    // the stream; an in-flight fold re-creates dirs after the delete).
-    // Join BEFORE exclusive: joining a fold parked on the shared side
-    // while holding the write lock would deadlock.
     withLifecycle(replicaDir) {
       awaitCompactions(replicaDir)
       exclusive(replicaDir) { truncateLocked(spark, replicaDir) }
     }
 
-  /** The delete body, for callers already holding the dir's write lock
-    * (e.g. [[MultiTable.snapshot]]). */
-  private[cdc] def truncateLocked(spark: SparkSession,
-      replicaDir: String): Unit = {
-    val (fs, base) = fsOf(spark, replicaDir)
-    if (fs.exists(base)) {
-      fs.listStatus(base).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(BucketCol + "=") ||
-            n.startsWith(AsidePrefix) || n == DeltaDirName)
-          check(fs.delete(st.getPath, true), s"truncate $n")
-      }
+  private def truncateLocked(spark: SparkSession, replicaDir: String): Unit = {
+    val (fs, root) = fsOf(spark, replicaDir)
+    listRoot(fs, root).foreach { st =>
+      val n = st.getPath.getName
+      if (n.startsWith(BucketCol + "=") || n.startsWith(StagePrefix) ||
+          n == DeltaDirName)
+        check(fs.delete(st.getPath, true), s"truncate $n")
     }
-    resetLayout(fs, base) // a fresh snapshot may re-bucket
+    resetLayout(fs, root) // a fresh snapshot may re-bucket
   }
 
+  /** [[snapshot]] for any [[Shape]]: `summaries` (one row per key, no
+    * bucket column) fully replace the replica as generation 1. */
+  private[cdc] def snapshotWith(spark: SparkSession, dir: String,
+      numBuckets: Int, summaries: DataFrame, s: Shape): Unit =
+    withLifecycle(dir) {
+      awaitCompactions(dir)
+      exclusive(dir) {
+        val (fs, root) = fsOf(spark, dir)
+        truncateLocked(spark, dir)
+        commitGen(fs, root,
+          summaries.withColumn(BucketCol, s.bucketOf(numBuckets)),
+          Set.empty, gen = 1L)
+        checkLayout(fs, root, numBuckets) // stamp the fresh layout
+      }
+    }
+
   /** Initial snapshot (phase 2 of the replicator,
-    * replicator/main.go:98-140): bulk-load existing rows into the replica.
-    * Static overwrite (explicit, per-write — never a session-level mode
-    * flip) fully replaces any previous replica. The slot-before-copy
-    * overlap trick becomes "snapshot then start the stream from offset 0;
+    * replicator/main.go:98-140): bulk-load existing rows into the replica,
+    * fully replacing any previous state. The slot-before-copy overlap
+    * trick becomes "snapshot then start the stream from offset 0;
     * overlapping changes re-fold idempotently". */
   def snapshot(spark: SparkSession, rows: Dataset[PersonRow],
       replicaDir: String, numBuckets: Int = DefaultNumBuckets): Unit =
-    // operator entry rewriting the whole replica: a registered
-    // lifecycle op (concurrent bulk ops fail fast) + exclusive, like
-    // vacuum/truncate; fold joined before the write lock
-    withLifecycle(replicaDir) {
-    awaitCompactions(replicaDir)
-    exclusive(replicaDir) {
-      val (fs, base) = fsOf(spark, replicaDir)
-      resetLayout(fs, base) // full overwrite — may legitimately re-bucket
-      rowsAsSummaries(rows.toDF())
-        .withColumn(BucketCol,
-          pmod(col("id"), lit(numBuckets)).cast("int"))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "static")
-        .partitionBy(BucketCol)
-        .parquet(replicaDir)
-      checkLayout(fs, base, numBuckets) // stamp the fresh layout
-    }
-    }
+    snapshotWith(spark, replicaDir, numBuckets, rowsAsSummaries(rows.toDF()),
+      PersonShape)
 
   /** Snapshot diff — the INVERSE of replication: given two table
     * states, re-derive the minimal change set (I/U/D by key) that maps
@@ -932,14 +918,13 @@ object Replicate {
       checkpointDir: String, rowFilter: Option[Column] = None,
       numBuckets: Int = DefaultNumBuckets,
       trigger: Trigger = Trigger.ProcessingTime("2 seconds"),
-      mergeParallelism: Int = DefaultMergeParallelism,
       maxFilesPerTrigger: Option[Int] = None,
       compactEvery: Int = DefaultCompactEvery)
       : StreamingQuery =
     startFrom(spark,
       ChangeSource.readStream(spark, changeDir, maxFilesPerTrigger),
       replicaDir, checkpointDir, rowFilter, numBuckets, trigger,
-      mergeParallelism, compactEvery)
+      compactEvery)
 
   /** [[start]] with a dead-letter sink: every non-`ok` raw line lands in
     * `quarantineDir` as parquet (value, verdict, batch) instead of being
@@ -991,7 +976,6 @@ object Replicate {
       rowFilter: Option[Column] = None,
       numBuckets: Int = DefaultNumBuckets,
       trigger: Trigger = Trigger.ProcessingTime("2 seconds"),
-      mergeParallelism: Int = DefaultMergeParallelism,
       compactEvery: Int = DefaultCompactEvery)
       : StreamingQuery = {
     val filtered = rowFilter.map(withRowFilter(changes, _)).getOrElse(changes)
@@ -1000,11 +984,7 @@ object Replicate {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[PersonChange], epochId: Long) =>
-        if (trace) {
-          val r = batch.toDF().agg(min("lsn"), max("lsn")).head()
-          System.err.println(s"[cdc-trace] epoch=$epochId lsn=[${r.get(0)}, ${r.get(1)}]")
-        }
-        applyBatch(spark, batch, replicaDir, numBuckets, mergeParallelism,
+        applyBatch(spark, batch, replicaDir, numBuckets,
           batchId = epochId, compactEvery = compactEvery,
           compactAsync = true)
       }

@@ -202,7 +202,7 @@ class CdcSpec extends AnyFunSuite {
         java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
     Replicate.snapshot(spark, rows.toDS(), replica, numBuckets = 8)
     def bucketFiles(b: Int): Set[(String, Long)] = {
-      val p = Paths.get(replica, s"id_bucket=$b")
+      val p = RenameLayout.newest(replica)(b).path
       val s = JFiles.list(p)
       try s.toArray.map(_.toString).map { f =>
         (f, JFiles.getLastModifiedTime(Paths.get(f)).toMillis)
@@ -258,12 +258,9 @@ class CdcSpec extends AnyFunSuite {
       Seq(ch(3, "D", 2)).toDS(), replica, numBuckets = 2, batchId = 1L,
       compactEvery = 1)
     assert(replicaAsMap(replica).keySet === Set(3))
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(replica)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the dead key's bucket stays as a tombstone (that is what makes a
     // reordered/replayed older event safe) but is invisible to reads
-    assert(fs.exists(new Path(s"$replica/id_bucket=0")))
+    assert(RenameLayout.newest(replica)(0).isDir)
     // a REORDERED older event (lsn 2.5 < the delete's 3) arriving after
     // the delete compacted must NOT resurrect the key — the tombstone
     // absorbs it
@@ -274,10 +271,19 @@ class CdcSpec extends AnyFunSuite {
     assert(replicaAsMap(replica).keySet === Set(3),
       "tombstone must absorb an out-of-order pre-delete event")
     // vacuum: once the source can't deliver older lsns, tombstones go —
-    // the dead bucket dir is physically dropped, not just filtered out
+    // at once the dead bucket's newest generation is the empty marker
+    // (no rows, not even filtered-out ones), and the next fold drops
+    // every dir of it
     Replicate.vacuum(spark, replica, numBuckets = 2)
-    assert(!fs.exists(new Path(s"$replica/id_bucket=0")))
+    assert(!RenameLayout.newest(replica)(0).isDir,
+      "vacuumed-empty bucket must hold no rows")
     assert(replicaAsMap(replica).keySet === Set(3))
+    Replicate.applyBatch(spark, Seq(ch(5, "U", 3, "after")).toDS(),
+      replica, numBuckets = 2, batchId = 3L, compactEvery = 1)
+    assert(!RenameLayout.gens(replica).exists(_.bucket == 0),
+      s"dead bucket left behind: ${RenameLayout.gens(replica)}")
+    assert(replicaAsMap(replica).map { case (k, v) => k -> v.name } ===
+      Map(3 -> "after"))
   }
 
   test("out-of-order micro-batches: later-lsn epoch compacts first, state converges") {
@@ -297,36 +303,73 @@ class CdcSpec extends AnyFunSuite {
     assert(replicaAsMap(replica) === ChangeGen.replay(ops))
   }
 
-  test("applyBatch: crashed rename-aside swap is recovered, no rows lost") {
-    import org.apache.hadoop.fs.Path
+  test("applyBatch: a fold killed between bucket commits reads exact with no recovery step") {
+    import java.nio.file.Paths
     val replica = tmp("cdc-replica-crash")
+    Replicate.snapshot(spark,
+      (0 until 20).map(i => PersonRow(i, s"n$i", s"u$i", i, t0)).toDS(),
+      replica, numBuckets = 2)
+    // pending deltas touching both buckets, not yet folded
     Replicate.applyBatch(spark,
-      Seq(ch(1, "I", 2), ch(2, "I", 3)).toDS(), replica, numBuckets = 2,
-      batchId = 0L, compactEvery = 1)
-    val before = replicaAsMap(replica)
-    val fs = new Path(replica)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Seq(ch(1, "U", 2, "a"), ch(2, "U", 3, "b"), ch(3, "D", 4)).toDS(),
+      replica, numBuckets = 2, batchId = 0L, compactEvery = 100)
+    val want = replicaAsMap(replica)
+    assert(want(2).name === "a" && !want.contains(4))
+    // the same fold, run to completion on a copy
+    val done = tmp("cdc-replica-crash-done")
+    RenameLayout.copyTree(Paths.get(replica), Paths.get(done))
+    Replicate.compactNow(spark, done, numBuckets = 2)
 
-    // crash AFTER live→aside, BEFORE fresh→live: live bucket missing,
-    // aside holds the data — recovery must restore it
-    assert(fs.rename(new Path(s"$replica/id_bucket=0"),
-      new Path(s"$replica/.__old.id_bucket=0")))
-    Replicate.applyBatch(spark, Seq(ch(3, "U", 3, "upd")).toDS(),
+    // killed after committing bucket 0, before bucket 1 and the
+    // watermark: a mix of generations plus a stray stage dir — reads
+    // exact as it lies on disk
+    RenameLayout.plantKilledFold(replica, done, _ == 0)
+    assert(RenameLayout.stageDirs(replica).nonEmpty)
+    assert(replicaAsMap(replica) === want, "mid-commit crash state")
+    // killed after every bucket commit, before the watermark
+    val stage = RenameLayout.stageDirs(replica).head
+    java.nio.file.Files.move(stage.resolve("id_bucket=1"),
+      Paths.get(replica, "id_bucket=1.g2"))
+    assert(replicaAsMap(replica) === want, "pre-watermark crash state")
+
+    // the next fold reclaims the leftovers and re-folds the pending
+    // deltas over the newest generations idempotently
+    Replicate.applyBatch(spark, Seq(ch(4, "U", 3, "c")).toDS(),
       replica, numBuckets = 2, batchId = 1L, compactEvery = 1)
-    val after = replicaAsMap(replica)
-    assert(after.keySet === before.keySet, "aside bucket rows were lost")
-    assert(after(3).name === "upd")
+    assert(replicaAsMap(replica) ===
+      want.updated(3, want(3).copy(name = "c")))
+    assert(RenameLayout.stageDirs(replica).isEmpty, "stage dir not reclaimed")
+    assert(RenameLayout.gens(replica).groupBy(_.bucket).values
+      .forall(_.size <= 2), s"${RenameLayout.gens(replica)}")
+    assert(RenameLayout.pendingDeltas(replica).isEmpty)
+  }
 
-    // crash AFTER fresh→live, BEFORE aside drop: stale aside + fresh
-    // live — recovery must drop the aside and keep the live data
-    val fs2Src = new Path(s"$replica/id_bucket=1")
-    val stale = new Path(s"$replica/.__old.id_bucket=1")
-    assert(fs.mkdirs(stale)) // stale leftover (contents irrelevant here)
-    Replicate.applyBatch(spark, Seq(ch(4, "U", 2, "upd2")).toDS(),
-      replica, numBuckets = 2, batchId = 2L, compactEvery = 1)
-    assert(!fs.exists(stale), "completed-swap aside not dropped")
-    assert(replicaAsMap(replica)(2).name === "upd2")
-    assert(fs.exists(fs2Src))
+  test("stale reads: a frame planned before a fold returns the pre-fold rows; after the next fold it fails") {
+    val replica = tmp("cdc-stale")
+    Replicate.snapshot(spark,
+      (0 until 40).map(i => PersonRow(i, s"n$i", s"u$i", i, t0)).toDS(),
+      replica, numBuckets = 4)
+    Replicate.applyBatch(spark,
+      Seq(ch(1, "U", 1, "x"), ch(2, "D", 2), ch(3, "U", 7, "y")).toDS(),
+      replica, numBuckets = 4, batchId = 0L, compactEvery = 100)
+    val stale = Replicate.readReplica(spark, replica)
+    val want = replicaAsMap(replica)
+    // each check is a fresh execution of the stale plan (its file list
+    // fixed at planning): a second action on one Dataset would reuse
+    // the first's shuffle output and never reopen the files
+    Replicate.compactNow(spark, replica, numBuckets = 4)
+    assert(stale.select("*").as[PersonRow].collect()
+      .map(r => r.id -> r).toMap === want,
+      "a read planned before the fold must see the pre-fold files")
+    // the next fold reclaims what the first one superseded: the stale
+    // frame fails on a missing file instead of answering partially
+    Replicate.applyBatch(spark, Seq(ch(4, "U", 1, "z")).toDS(),
+      replica, numBuckets = 4, batchId = 1L, compactEvery = 100)
+    Replicate.compactNow(spark, replica, numBuckets = 4)
+    val e = intercept[Exception](stale.select("*").collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException]), e.toString)
+    assert(replicaAsMap(replica)(1).name === "z")
   }
 
   test("async compaction: background fold advances the watermark, replica stays exact") {
@@ -347,7 +390,7 @@ class CdcSpec extends AnyFunSuite {
     // consumed some epochs
     val fs = new Path(replica)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new Path(s"$replica/id_bucket=0")),
+    assert(RenameLayout.gens(replica).exists(_.bucket == 0),
       "background fold never wrote the base")
     val wmPath = new Path(s"$replica/.__delta/_watermark")
     assert(fs.exists(wmPath), "compaction watermark missing")
@@ -391,15 +434,8 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("merge-on-read: deltas accumulate, compaction folds them, replay idempotent") {
-    import org.apache.hadoop.fs.Path
     val ops = ChangeGen.ops(seed = 17, n = 600)
     val replica = tmp("cdc-mor")
-    val fs = new Path(replica)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def deltaCount: Int =
-      if (!fs.exists(new Path(s"$replica/.__delta"))) 0
-      else fs.listStatus(new Path(s"$replica/.__delta"))
-        .count(_.getPath.getName.startsWith("batch="))
 
     // 10 batches, compactEvery=8: batches 0..6 pile up deltas, batch 7
     // triggers compaction (8 deltas → base), batches 8..9 are deltas again
@@ -408,8 +444,11 @@ class CdcSpec extends AnyFunSuite {
       Replicate.applyBatch(spark, ChangeGen.toChanges(g).toDS(), replica,
         numBuckets = 4, batchId = i.toLong, compactEvery = 8)
     }
-    assert(deltaCount === 2, "compaction must have consumed batches 0..7")
-    assert(fs.exists(new Path(s"$replica/id_bucket=0")), "base written")
+    assert(RenameLayout.pendingDeltas(replica).sorted === Seq(8L, 9L),
+      "compaction must have consumed batches 0..7")
+    assert(RenameLayout.deltaIds(replica).size === 10,
+      "consumed deltas stay on disk until the next fold reclaims them")
+    assert(RenameLayout.gens(replica).exists(_.bucket == 0), "base written")
     assert(replicaAsMap(replica) === ChangeGen.replay(ops))
 
     // checkpoint-replay of the LAST batch (same batchId) converges
@@ -419,8 +458,7 @@ class CdcSpec extends AnyFunSuite {
     assert(replicaAsMap(replica) === ChangeGen.replay(ops))
 
     // re-applying an ALREADY-COMPACTED delta over the compacted base is
-    // absorbed idempotently (the crash window between bucket swap and
-    // delta deletion)
+    // absorbed idempotently (a replay of an epoch the fold consumed)
     Replicate.applyBatch(spark, ChangeGen.toChanges(groups(3)).toDS(),
       replica, numBuckets = 4, batchId = 3L, compactEvery = 8)
     assert(replicaAsMap(replica) === ChangeGen.replay(ops))
@@ -821,14 +859,15 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("lifecycle soak: 300 mixed-op triggers under vacuum + async folds stay bounded", SlowTest) {
-    // The rename-protocol half of the r6 verdict's long-horizon ask
-    // (ManifestSpec carries the manifest twin): 300 applyBatch triggers
-    // with folds on the concurrent daemon thread (compactAsync), vacuum
-    // every 100, and a timed read probe every 25. Asserts the bounds,
-    // not vibes: delta dirs never accumulate O(triggers) (lazy pruning
-    // + folds keep them O(compactEvery)), the bucket layout stays at
-    // the declared modulus, read latency shows no upward trend, and the
-    // final state equals the full replay.
+    // The rename-protocol half of the long-horizon soak (ManifestSpec
+    // carries the manifest twin): 300 applyBatch triggers with folds on
+    // the concurrent daemon thread (compactAsync), vacuum every 100, and
+    // a timed read probe every 25. Asserts the bounds: delta dirs never
+    // accumulate O(triggers) (each fold reclaims the previous fold's
+    // deltas, keeping them O(compactEvery)), each bucket keeps at most
+    // its newest generation plus the one the grace retains, the bucket
+    // ids stay within the declared modulus, read latency shows no
+    // upward trend, and the final state equals the full replay.
     val dir = tmp("cdc-soak")
     val ops = ChangeGen.ops(seed = 9200L, n = 9300)
     val (snapOps, streamOps) = ops.splitAt(300)
@@ -836,10 +875,6 @@ class CdcSpec extends AnyFunSuite {
       ChangeGen.replay(snapOps).values.toSeq.toDS(), dir)
     val batches = streamOps.grouped(30).toSeq
     assert(batches.size === 300)
-    def ls(sub: String): Seq[String] = {
-      val f = new java.io.File(dir, sub)
-      Option(f.list()).map(_.toSeq).getOrElse(Seq.empty)
-    }
     val readSecs = scala.collection.mutable.ArrayBuffer[Double]()
     batches.zipWithIndex.foreach { case (b, i) =>
       Replicate.applyBatch(spark, ChangeGen.toChanges(b).toDS(), dir,
@@ -848,36 +883,14 @@ class CdcSpec extends AnyFunSuite {
       if (n % 100 == 0) Replicate.vacuum(spark, dir)
       else if (n % 25 == 0) {
         val t0 = System.nanoTime()
-        // the rename protocol's documented reader caveat: a scan that
-        // listed files before a concurrent fold's bucket swap can open
-        // a renamed-away file and fail transiently — the window the
-        // manifest protocol exists to close (its reads pin exact
-        // files). An operational reader retries; so does the probe.
-        def countWithRetry(left: Int): Long =
-          try Replicate.readReplica(spark, dir).count()
-          catch {
-            // the race surfaces two ways: a task opening a renamed-away
-            // file (FAILED_READ_FILE) or plan-time path resolution of a
-            // just-pruned delta dir (PATH_NOT_FOUND) — same documented
-            // window, one retry policy
-            case e: Exception
-                if left > 0 && Option(e.getMessage).exists(m =>
-                  m.contains("FAILED_READ_FILE") ||
-                    m.contains("PATH_NOT_FOUND")) =>
-              // back off briefly: an immediate retry can re-list inside
-              // the SAME swap window when the fold runs long under load
-              Thread.sleep(100)
-              countWithRetry(left - 1)
-          }
-        assert(countWithRetry(6) > 0)
+        assert(Replicate.readReplica(spark, dir).count() > 0)
         readSecs += (System.nanoTime() - t0) / 1e9
-        // ".__delta" is the on-disk delta log dir (Replicate.DeltaDirName)
-        val deltas = ls(".__delta").count(_.startsWith("batch="))
+        val deltas = RenameLayout.deltaIds(dir).size
         assert(deltas <= 24, s"delta dirs accumulating at trigger $n: $deltas")
-        val buckets = ls(".").count(_.startsWith(Replicate.BucketCol + "="))
-        assert(buckets <= 16, s"bucket layout drifted at trigger $n: $buckets")
-        assert(!ls(".").exists(_.startsWith(".__old.")),
-          s"crashed-swap aside dirs left behind at trigger $n")
+        val gens = RenameLayout.gens(dir).groupBy(_.bucket)
+        assert(gens.size <= 16, s"bucket layout drifted at trigger $n: ${gens.keys}")
+        assert(gens.values.forall(_.size <= 2),
+          s"superseded generations accumulating at trigger $n: $gens")
       }
     }
     Replicate.awaitCompactions()
@@ -888,5 +901,60 @@ class CdcSpec extends AnyFunSuite {
     val late = readSecs.takeRight(third).sum / third
     assert(late <= early * 3 + 0.5,
       s"read latency trending up over the soak: $readSecs")
+  }
+
+  test("concurrent reader soak: through 20+ async folds every read is a committed epoch's state per key, zero missing files", SlowTest) {
+    // A reader thread loops readReplica while the writer drives
+    // triggers with async folds at the default cadence. Each key of
+    // each read (present or absent) must equal the replay at some epoch
+    // between the last one committed when the read started and the
+    // last one committed when it ended (+1: the in-flight trigger may
+    // already have renamed its delta in). A read that listed the root
+    // between two bucket commits, or opened a reclaimed file, fails.
+    val dir = tmp("cdc-reader-soak")
+    val ops = ChangeGen.ops(seed = 9300L, n = 7500)
+    val (snapOps, streamOps) = ops.splitAt(300)
+    val batches = streamOps.grouped(30).toIndexedSeq
+    val states = (0 to batches.size).map(j =>
+      ChangeGen.replay(snapOps ++ streamOps.take(30 * j)))
+    val keys = ops.map(_.id).toSet
+    Replicate.snapshot(spark, states(0).values.toSeq.toDS(), dir)
+    val committed = new java.util.concurrent.atomic.AtomicInteger(0)
+    val writing = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val reader = new Thread(() => {
+      while (writing.get()) {
+        val lo = committed.get()
+        try {
+          val got = Replicate.readReplica(spark, dir).collect()
+            .map(r => r.id -> r).toMap
+          val hi = math.min(committed.get() + 1, batches.size)
+          keys.iterator.filterNot(k =>
+            (lo to hi).exists(j => states(j).get(k) == got.get(k)))
+            .take(3).foreach(k => failures.add(
+              s"key $k read ${got.get(k)}, not its state in epochs $lo..$hi"))
+          reads.incrementAndGet()
+        } catch { case e: Throwable => failures.add(e.toString) }
+      }
+    }, "reader-soak")
+    reader.start()
+    try batches.zipWithIndex.foreach { case (b, i) =>
+      Replicate.applyBatch(spark, ChangeGen.toChanges(b).toDS(), dir,
+        batchId = i.toLong, compactAsync = true)
+      committed.set(i + 1)
+    } finally {
+      writing.set(false)
+      reader.join()
+    }
+    Replicate.awaitCompactions()
+    import scala.jdk.CollectionConverters._
+    assert(failures.isEmpty, failures.asScala.take(5).mkString("\n"))
+    // every fold commits one generation number past the snapshot's g1
+    val folds = RenameLayout.gens(dir).map(_.gen).max - 1
+    assert(folds >= 20, s"only $folds async folds ran")
+    assert(reads.get() >= 20, s"only ${reads.get()} reads ran")
+    info(s"$folds async folds, ${reads.get()} concurrent reads")
+    assert(replicaAsMap(dir) === states.last)
   }
 }

@@ -80,19 +80,15 @@ class MultiTableSpec extends AnyFunSuite {
     MultiTable.snapshot(spark,
       ChangeGen.replay(snap1).values.toSeq.toDS().toDF(), root, personSpec,
       numBuckets = 8)
-    def bucketDirs: Set[String] = {
-      val d = new java.io.File(dir)
-      d.listFiles().map(_.getName).filter(_.startsWith("id_bucket=")).toSet
-    }
-    assert(bucketDirs.nonEmpty)
+    def buckets: Set[Int] = RenameLayout.gens(dir).map(_.bucket).toSet
+    assert(buckets.nonEmpty)
 
     // full re-snapshot of a DIFFERENT state under a different modulus
     val state2 = ChangeGen.replay(snap1 ++ snap2src)
     MultiTable.snapshot(spark, state2.values.toSeq.toDS().toDF(), root,
       personSpec, numBuckets = 4)
-    val after = bucketDirs
-    assert(after.forall(n =>
-        n.stripPrefix("id_bucket=").toInt < 4),
+    val after = buckets
+    assert(after.forall(_ < 4),
       s"old-modulus bucket dirs survived the re-snapshot: $after")
 
     // incremental batches under the NEW modulus converge to replay
@@ -335,34 +331,73 @@ class MultiTableSpec extends AnyFunSuite {
       personSpec)) === wantPerson(pOps))
   }
 
-  test("idle tables still run crash recovery: an aborted bucket swap is restored") {
-    // r6 review: gating recoverSwap on batch presence left a crashed
-    // swap on a then-idle table serving incomplete reads indefinitely;
-    // recovery must run for every declared table with a replica dir.
+  test("idle tables read exact through a killed fold; their next fold reclaims it") {
+    // no recovery step runs anywhere: an idle table's crash state must
+    // read exact as it lies on disk, for as long as the table stays idle
     val aOps = ChangeGen.ops(seed = 113L, n = 40)
+    val (a1, a2) = aOps.splitAt(20)
     val pOps = ChangeGen.ops(seed = 115L, n = 20)
     val root = Files.createTempDirectory("mt-recover").toString
-    MultiTable.applyBatch(spark, MultiTable.parseAll(
-      aOps.map(o => ChangeGen.toAccountJsonLine(o)).toDF("value"), specs), root,
-      specs, batchId = 0L)
+    def accountBatch(ops: Seq[ChangeGen.Op]) = MultiTable.parseAll(
+      ops.map(o => ChangeGen.toAccountJsonLine(o)).toDF("value"), specs)
+    MultiTable.applyBatch(spark, accountBatch(a1), root, specs, batchId = 0L)
     MultiTable.compact(spark, s"$root/account")
+    MultiTable.applyBatch(spark, accountBatch(a2), root, specs, batchId = 1L)
     val want = wantAccount(aOps)
     assert(accountMap(root) === want)
-    // simulate a swap crash on account: a live bucket renamed aside,
-    // fresh dir never arrived (the aborted-between-renames window)
+    // the pending fold, run to completion on a copy, then planted as a
+    // fold killed after committing one bucket
     val accountDir = java.nio.file.Paths.get(root, "account")
-    val bucket = Files.list(accountDir).iterator().asScala
-      .map(_.getFileName.toString)
-      .find(_.startsWith("id_bucket=")).get
-    Files.move(accountDir.resolve(bucket),
-      accountDir.resolve(s".__old.$bucket"))
-    assert(accountMap(root) !== want, "sanity: the crash lost a bucket")
-    // a person-only trigger must still repair the idle account table
+    val done = Files.createTempDirectory("mt-recover-done")
+    RenameLayout.copyTree(accountDir, done)
+    MultiTable.compact(spark, done.toString)
+    val foldGen = RenameLayout.gens(done.toString).map(_.gen).max
+    val first = RenameLayout.gens(done.toString)
+      .filter(_.gen == foldGen).map(_.bucket).min
+    RenameLayout.plantKilledFold(accountDir.toString, done.toString,
+      _ == first)
+    assert(RenameLayout.stageDirs(accountDir.toString).nonEmpty)
+    assert(accountMap(root) === want, "killed-fold state must read exact")
+    // a person-only trigger leaves the idle account table as it is
     MultiTable.applyBatch(spark, MultiTable.parseAll(
       pOps.map(ChangeGen.toJsonLine).toDF("value"), specs), root, specs,
-      batchId = 1L)
-    assert(accountMap(root) === want,
-      "recoverSwap must run for idle declared tables")
+      batchId = 2L)
+    assert(accountMap(root) === want)
+    assert(RenameLayout.stageDirs(accountDir.toString).nonEmpty)
+    // its next fold reclaims the leftovers and stays exact
+    MultiTable.compact(spark, accountDir.toString)
+    assert(accountMap(root) === want)
+    assert(RenameLayout.stageDirs(accountDir.toString).isEmpty)
+    assert(RenameLayout.pendingDeltas(accountDir.toString).isEmpty)
+  }
+
+  test("stale reads: a readTable frame planned before a fold returns the pre-fold rows; after the next fold it fails") {
+    val pOps = ChangeGen.ops(seed = 117L, n = 90)
+    val groups = pOps.grouped(30).toSeq
+    val root = Files.createTempDirectory("mt-stale").toString
+    val dir = s"$root/person"
+    def apply(g: Int) = MultiTable.applyBatch(spark, MultiTable.parseAll(
+      groups(g).map(ChangeGen.toJsonLine).toDF("value"), specs), root, specs,
+      batchId = g.toLong, compactEvery = 100)
+    apply(0)
+    MultiTable.compact(spark, dir)
+    apply(1)
+    val stale = MultiTable.readTable(spark, root, personSpec)
+    MultiTable.compact(spark, dir)
+    // each check is a fresh execution of the stale plan (its file list
+    // fixed at planning): a second action on one Dataset would reuse
+    // the first's shuffle output and never reopen the files
+    def mapOf(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getInt(0) -> ((r.getString(1), r.getString(2),
+        r.getInt(3)))).toMap
+    assert(mapOf(stale.select("*")) === wantPerson(groups(0) ++ groups(1)),
+      "a read planned before the fold must see the pre-fold files")
+    apply(2)
+    MultiTable.compact(spark, dir)
+    val e = intercept[Exception](stale.select("*").collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException]), e.toString)
+    assert(personMap(root) === wantPerson(pOps))
   }
 
   test("multi-table rename-path vacuum drops tombstone bytes, preserves state") {
@@ -376,10 +411,11 @@ class MultiTableSpec extends AnyFunSuite {
     MultiTable.vacuum(spark, root, personSpec)
     assert(personMap(root) === want, "state must survive the rewrite")
     val dir = s"$root/person"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val raw = Replicate.readBase(spark, fs, dir,
-      schema = MultiTable.MtBaseSchema)
+    assert(RenameLayout.pendingDeltas(dir).isEmpty,
+      "vacuum must fold pending deltas first")
+    val raw = spark.read.schema(MultiTable.MtBaseSchema).parquet(
+      RenameLayout.newest(dir).values.filter(_.isDir).map(_.path.toString)
+        .toSeq: _*)
     assert(raw.filter(col("first_ins").isNull).count() === 0,
       "tombstone rows must be physically removed")
     assert(raw.count().toInt === want.size)
@@ -455,39 +491,32 @@ class MultiTableSpec extends AnyFunSuite {
       .count() === 1)
   }
 
-  test("a lifecycle flag stops triggers from recovering/compacting under a vacuum") {
-    // r6 review: the stream recovers EVERY declared table per trigger,
-    // so a vacuum's own rename-aside swaps looked like crash leftovers
-    // to a concurrent trigger; and a trigger-driven compact could fold
-    // a base read predating the rewrite. Both are gated on the
-    // per-table lifecycle flag.
+  test("a lifecycle flag stops triggers from folding under a vacuum") {
+    // a trigger-driven fold under a bulk lifecycle op would fold a base
+    // the op is rewriting: the threshold is gated on the per-table
+    // lifecycle flag, on both protocols. On the rename path a stray
+    // stage dir (a killed fold's leftover) shows whether a fold ran:
+    // every fold reclaims it first.
     val pOps = ChangeGen.ops(seed = 139L, n = 60)
     val root = Files.createTempDirectory("mt-lifecycle").toString
     def apply(b: Long) = MultiTable.applyBatch(spark, MultiTable.parseAll(
       pOps.map(ChangeGen.toJsonLine).toDF("value"), specs), root, specs,
-      batchId = b)
+      batchId = b, compactEvery = 1)
     apply(0L)
     val dir = s"$root/person"
-    MultiTable.compact(spark, dir) // materialize bucket dirs
-    // plant a completed-swap aside (live dir exists): outside a
-    // lifecycle op the next trigger's recoverSwap DROPS it
-    val pdir = java.nio.file.Paths.get(dir)
-    val bucket = Files.list(pdir).iterator().asScala
-      .map(_.getFileName.toString).find(_.startsWith("id_bucket=")).get
-    val aside = pdir.resolve(s".__old.$bucket")
-    def plant(): Unit = {
-      val src = pdir.resolve(bucket)
-      java.nio.file.Files.createDirectory(aside)
-      Files.list(src).iterator().asScala.foreach(f =>
-        Files.copy(f, aside.resolve(f.getFileName.toString)))
-    }
-    plant()
+    val stray = java.nio.file.Paths.get(dir, ".__stage-g99", "id_bucket=0")
+    Files.createDirectories(stray)
+    val gensBefore = RenameLayout.gens(dir).toSet
     Replicate.withLifecycle(dir) { apply(1L) }
-    assert(Files.exists(aside),
-      "a trigger under the lifecycle flag must not touch swap state")
+    assert(RenameLayout.pendingDeltas(dir) === Seq(1L),
+      "compactEvery=1 must NOT fold under the lifecycle flag")
+    assert(RenameLayout.gens(dir).toSet === gensBefore)
+    assert(Files.exists(stray))
     apply(2L)
-    assert(!Files.exists(aside),
-      "outside the flag the trigger recovers the completed swap")
+    assert(RenameLayout.pendingDeltas(dir).isEmpty,
+      "outside the flag the threshold fold runs")
+    assert(!Files.exists(stray.getParent), "the fold reclaims stray stage dirs")
+    assert(personMap(root) === wantPerson(pOps))
     // manifest path: the compact threshold is also gated
     val rootM = Files.createTempDirectory("mtm-lifecycle").toString
     def applyM(b: Long) = ManifestMultiTable.applyBatch(spark,
