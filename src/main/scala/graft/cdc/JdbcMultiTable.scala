@@ -162,79 +162,72 @@ object JdbcMultiTable {
   /** Apply one micro-batch of PARSED generic changes to every declared
     * table's SQL target — per table, one summary job feeding
     * per-partition marker-guarded transactions; absent tables are
-    * skipped ([[MultiTable.presentTables]]). */
+    * skipped ([[MultiTable.forEachPresent]]). */
   def applyBatch(spark: SparkSession, parsed: DataFrame, url: String,
-      specs: Seq[TableSpec], batchId: Long, parallelism: Int = 4): Unit = {
-    parsed.persist()
-    try {
-      val present = MultiTable.presentTables(parsed)
-      specs.filter(sp => present.contains(sp.table)).foreach { spec =>
-        val fields = spec.rowSchema.fields
-        val keyIdx = fields.indexWhere(_.name == spec.keyCol)
-        val nonKey = fields.zipWithIndex.filter(_._1.name != spec.keyCol)
-        val updCols = nonKey.filterNot { case (f, _) =>
-          spec.createdAtCol.contains(f.name) } // never touch created_at
-        val delSql = s"DELETE FROM ${spec.table} WHERE ${spec.keyCol}=?"
-        // a spec whose only columns are the key and created_at has
-        // nothing to update — "SET key=key" keeps the statement valid
-        // AND its update count still answers "did the key exist", which
-        // the insert-on-miss decision needs (r6 review: an empty SET
-        // list was a syntax error that killed the stream)
-        val setList =
-          if (updCols.isEmpty) s"${spec.keyCol}=${spec.keyCol}"
-          else updCols.map(_._1.name + "=?").mkString(", ")
-        val updSql =
-          s"UPDATE ${spec.table} SET $setList WHERE ${spec.keyCol}=?"
-        val insSql = s"INSERT INTO ${spec.table} (${
-          fields.map(_.name).mkString(", ")}) VALUES (${
-          fields.map(_ => "?").mkString(",")})"
-        val table = spec.table
-        def bind(ps: java.sql.PreparedStatement, at: Int, r: Row,
-            idx: Int, dt: DataType): Unit =
-          if (r.isNullAt(idx)) ps.setNull(at, jdbcType(dt))
-          else ps.setObject(at, r.get(idx))
-        typedSummaries(
-            parsed.filter(col("tbl") === spec.table).drop("tbl"),
-            spec, parallelism)
-          .foreachPartition { (rows: Iterator[Row]) =>
-            val buf = rows.toArray
-            if (buf.nonEmpty) {
-              val pid = org.apache.spark.TaskContext.getPartitionId()
-              val c = connect(url)
-              try {
-                c.setAutoCommit(false)
-                if (!epochSeen(c, table, batchId, pid)) {
-                  val nFields = fields.length
-                  applyOps(c, delSql, updSql, insSql,
-                    buf.iterator.map { r =>
-                      RowOp(
-                        bindDel = del =>
-                          bind(del, 1, r, keyIdx, fields(keyIdx).dataType),
-                        bindUpd = upd => {
-                          updCols.zipWithIndex.foreach {
-                            case ((f, i), at) => bind(upd, at + 1, r, i,
-                              f.dataType) }
-                          bind(upd, updCols.length + 1, r, keyIdx,
-                            fields(keyIdx).dataType)
-                        },
-                        bindIns = ins =>
-                          fields.zipWithIndex.foreach { case (f, i) =>
-                            bind(ins, i + 1, r, i, f.dataType) },
-                        hasDel = r.getBoolean(nFields + 2),
-                        hasIns = r.getBoolean(nFields + 1),
-                        hasImg = r.getBoolean(nFields))
-                    })
-                  markEpoch(c, table, batchId, pid)
-                  pruneEpochs(c, table, batchId)
-                  c.commit()
-                } else c.rollback()
-              } catch { case e: Throwable => c.rollback(); throw e }
-              finally c.close()
-            }
+      specs: Seq[TableSpec], batchId: Long, parallelism: Int = 4): Unit =
+    MultiTable.forEachPresent(parsed, specs) { (spec, slice) =>
+      val fields = spec.rowSchema.fields
+      val keyIdx = fields.indexWhere(_.name == spec.keyCol)
+      val nonKey = fields.zipWithIndex.filter(_._1.name != spec.keyCol)
+      val updCols = nonKey.filterNot { case (f, _) =>
+        spec.createdAtCol.contains(f.name) } // never touch created_at
+      val delSql = s"DELETE FROM ${spec.table} WHERE ${spec.keyCol}=?"
+      // a spec whose only columns are the key and created_at has
+      // nothing to update — "SET key=key" keeps the statement valid
+      // AND its update count still answers "did the key exist", which
+      // the insert-on-miss decision needs (an empty SET list is a
+      // syntax error that would kill the stream)
+      val setList =
+        if (updCols.isEmpty) s"${spec.keyCol}=${spec.keyCol}"
+        else updCols.map(_._1.name + "=?").mkString(", ")
+      val updSql =
+        s"UPDATE ${spec.table} SET $setList WHERE ${spec.keyCol}=?"
+      val insSql = s"INSERT INTO ${spec.table} (${
+        fields.map(_.name).mkString(", ")}) VALUES (${
+        fields.map(_ => "?").mkString(",")})"
+      val table = spec.table
+      def bind(ps: java.sql.PreparedStatement, at: Int, r: Row,
+          idx: Int, dt: DataType): Unit =
+        if (r.isNullAt(idx)) ps.setNull(at, jdbcType(dt))
+        else ps.setObject(at, r.get(idx))
+      typedSummaries(slice, spec, parallelism)
+        .foreachPartition { (rows: Iterator[Row]) =>
+          val buf = rows.toArray
+          if (buf.nonEmpty) {
+            val pid = org.apache.spark.TaskContext.getPartitionId()
+            val c = connect(url)
+            try {
+              c.setAutoCommit(false)
+              if (!epochSeen(c, table, batchId, pid)) {
+                val nFields = fields.length
+                applyOps(c, delSql, updSql, insSql,
+                  buf.iterator.map { r =>
+                    RowOp(
+                      bindDel = del =>
+                        bind(del, 1, r, keyIdx, fields(keyIdx).dataType),
+                      bindUpd = upd => {
+                        updCols.zipWithIndex.foreach {
+                          case ((f, i), at) => bind(upd, at + 1, r, i,
+                            f.dataType) }
+                        bind(upd, updCols.length + 1, r, keyIdx,
+                          fields(keyIdx).dataType)
+                      },
+                      bindIns = ins =>
+                        fields.zipWithIndex.foreach { case (f, i) =>
+                          bind(ins, i + 1, r, i, f.dataType) },
+                      hasDel = r.getBoolean(nFields + 2),
+                      hasIns = r.getBoolean(nFields + 1),
+                      hasImg = r.getBoolean(nFields))
+                  })
+                markEpoch(c, table, batchId, pid)
+                pruneEpochs(c, table, batchId)
+                c.commit()
+              } else c.rollback()
+            } catch { case e: Throwable => c.rollback(); throw e }
+            finally c.close()
           }
-      }
-    } finally parsed.unpersist()
-  }
+        }
+    }
 
   /** The continuous multi-table pipeline into SQL targets: one
     * change-log stream → [[MultiTable.parseAll]] once per trigger →

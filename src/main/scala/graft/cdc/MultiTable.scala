@@ -46,8 +46,8 @@ final case class TableSpec(
   *    under [[MtShape]]: bucket generation dirs, hidden delta log,
   *    compaction watermark, layout marker, one-fold reclamation grace
   *    — so every crash-window argument in [[Replicate]]'s header
-  *    carries over unchanged. Buckets key on `pmod(hash(key), n)`
-  *    (string keys; production pins the hash function version with the
+  *    carries over unchanged. Buckets key on a hash of the string key
+  *    ([[MtShape]]; production pins the hash function version with the
   *    layout).
   *  - **Typed projection at the edge.** [[readTable]] folds
   *    base ∪ deltas and only THEN parses the winning image's JSON once
@@ -177,7 +177,7 @@ object MultiTable {
     val byKey = Window.partitionBy(BucketCol, "key")
     val afterD = col("lsn") > coalesce(col("last_d_lsn"), lit(Long.MinValue))
     batch
-      .withColumn(BucketCol, pmod(hash(col("key")), lit(numBuckets)))
+      .withColumn(BucketCol, MtShape.bucketOf(numBuckets))
       .repartition(col(BucketCol))
       .withColumn("last_d_lsn",
         max(when(col("action") === "D", col("lsn"))).over(byKey))
@@ -212,35 +212,37 @@ object MultiTable {
     Replicate.snapshotWith(spark, tableDir(root, spec), numBuckets,
       rowsAsMtSummaries(rows, spec), MtShape)
 
-  /** Tables with at least one change in a parsed batch — one bounded
-    * `groupBy(tbl)` over the cached parse. An absent table costs no
-    * summarize job, no empty delta dir (which would count toward
+  /** Hand every declared table present in a parsed batch its slice
+    * (`tbl` dropped), with the parse cached across the slices. Presence
+    * is one bounded `groupBy(tbl)` over the cached parse. An absent table
+    * costs no summarize job, no empty delta dir (which would count toward
     * `compactEvery` and periodically fold nothing) and, on the manifest
-    * twin, no burned manifest version per trigger. Presence derives
-    * from batch content, so an epoch replay skips identically. */
-  private[cdc] def presentTables(parsed: DataFrame): Set[String] =
-    parsed.select("tbl").distinct().collect().map(_.getString(0)).toSet
+    * path, no burned manifest version per trigger. Presence derives from
+    * batch content, so an epoch replay skips identically. */
+  private[cdc] def forEachPresent(parsed: DataFrame, specs: Seq[TableSpec])
+      (apply: (TableSpec, DataFrame) => Unit): Unit = {
+    parsed.persist()
+    try {
+      val present =
+        parsed.select("tbl").distinct().collect().map(_.getString(0)).toSet
+      specs.filter(sp => present.contains(sp.table)).foreach(sp =>
+        apply(sp, parsed.filter(col("tbl") === sp.table).drop("tbl")))
+    } finally parsed.unpersist()
+  }
 
   /** Apply one micro-batch of PARSED generic changes to every declared
-    * table present in it: filter the (cached) batch per table,
-    * summarize, and hand the summary to [[Replicate]]'s trigger body
-    * (delta commit, threshold fold) — idempotent under replay for the
-    * same reasons. */
+    * table present in it: summarize each table's slice and hand it to
+    * [[Replicate]]'s trigger body (delta commit, threshold fold) —
+    * idempotent under replay for the same reasons. */
   def applyBatch(spark: SparkSession, parsed: DataFrame, root: String,
       specs: Seq[TableSpec], batchId: Long,
       numBuckets: Int = DefaultNumBuckets,
-      compactEvery: Int = Replicate.DefaultCompactEvery): Unit = {
-    parsed.persist()
-    try {
-      val present = presentTables(parsed)
-      specs.filter(sp => present.contains(sp.table)).foreach { spec =>
-        Replicate.applyWith(spark, tableDir(root, spec),
-          summarizeMt(parsed.filter(col("tbl") === spec.table).drop("tbl"),
-            numBuckets),
-          MtShape, numBuckets, batchId, compactEvery, compactAsync = false)
-      }
-    } finally parsed.unpersist()
-  }
+      compactEvery: Int = Replicate.DefaultCompactEvery): Unit =
+    forEachPresent(parsed, specs) { (spec, slice) =>
+      Replicate.applyWith(spark, tableDir(root, spec),
+        summarizeMt(slice, numBuckets), MtShape, numBuckets, batchId,
+        compactEvery, compactAsync = false)
+    }
 
   /** Fold one table's pending deltas into the buckets they touch —
     * [[Replicate.compactNow]] over the generic schema. */

@@ -374,7 +374,7 @@ object Replicate {
     val byKey = Window.partitionBy(BucketCol, "id")
     val afterD = col("lsn") > coalesce(col("last_d_lsn"), lit(Long.MinValue))
     batch
-      .withColumn(BucketCol, pmod(col("id"), lit(numBuckets)).cast("int"))
+      .withColumn(BucketCol, PersonShape.bucketOf(numBuckets))
       // repartition WITHOUT an explicit count: AQE sizes the exchange to
       // the batch (a trigger-sized batch folds to one partition → one
       // delta file; a bulk load fans out) — the fixed-width variant

@@ -378,43 +378,79 @@ class ManifestSpec extends AnyFunSuite {
     assert(boot === Set((0L, 1), (1L, 2)))
   }
 
+  /** One manifest replica path as the CAS spec drives it, over a root
+    * dir and 4 buckets: snapshot rows, apply one change as an epoch,
+    * fold, read the live rows. */
+  private final case class ManifestPath(name: String,
+      snapshot: (String, Seq[PersonRow]) => Unit,
+      apply: (String, PersonChange, Long) => Unit,
+      compact: String => Unit,
+      read: String => Map[Int, (String, String, Int)])
+
+  private val typedPath = ManifestPath("typed",
+    (dir, rows) =>
+      ManifestReplica.snapshot(spark, rows.toDS(), dir, numBuckets = 4),
+    (dir, c, id) => ManifestReplica.applyBatch(spark, Seq(c).toDS(), dir,
+      numBuckets = 4, batchId = id, compactEvery = 100),
+    dir => ManifestReplica.compact(spark, dir, numBuckets = 4),
+    asMap)
+
+  /** The generic path with the person table declared: `MtShape`'s
+    * schema and hash buckets through the same manifest helpers. */
+  private val genericPath = {
+    val spec = MtTestSpecs.person
+    ManifestPath("generic",
+      (root, rows) => ManifestMultiTable.snapshot(spark, rows.toDS().toDF(),
+        root, spec, numBuckets = 4),
+      (root, c, id) => ManifestMultiTable.applyBatch(spark,
+        Seq(("person", c.lsn, c.action, c.id.toString,
+          s"""{"id":"${c.id}","name":"${c.name.get}","uid":"${c.uid.get}","score":"${c.score.get}"}""",
+          null: java.sql.Timestamp))
+          .toDF("tbl", "lsn", "action", "key", "img", "created_at"),
+        root, Seq(spec), batchId = id, numBuckets = 4, compactEvery = 100),
+      root => ManifestMultiTable.compact(spark, s"$root/person",
+        numBuckets = 4),
+      root => ManifestMultiTable.readTable(spark, root, spec).collect()
+        .map(r => r.getInt(0) ->
+          ((r.getString(1), r.getString(2), r.getInt(3)))).toMap)
+  }
+
   test("manifest CAS: a fold losing the version race preserves the winner's delta") {
-    val dir = tmp("man-cas")
-    val rows = (0 until 16).map(i =>
-      PersonRow(i, s"n$i", s"u$i", i,
-        java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
-    ManifestReplica.snapshot(spark, rows.toDS(), dir, numBuckets = 4)
-    ManifestReplica.applyBatch(spark,
-      Seq(PersonChange(100L, "U", 1, Some("x1"), Some("u1"), Some(91), None))
-        .toDS(), dir, numBuckets = 4, batchId = 0L, compactEvery = 100)
-    // interleave: while compact() is between its manifest read and its
-    // commit attempt, a trigger lands delta batch=1. The fold's first
-    // commit must fail on the taken version and its retry must re-apply
-    // "consume exactly batch 0" on top of the winner's state — batch 1
-    // survives in the manifest and in the read view.
-    @volatile var fired = false
-    ManifestReplica.preCommitHook = () => {
-      if (!fired) {
-        fired = true // self-disarm BEFORE the nested commit recurses
-        ManifestReplica.applyBatch(spark,
-          Seq(PersonChange(200L, "U", 2, Some("x2"), Some("u2"), Some(92),
-            None)).toDS(), dir, numBuckets = 4, batchId = 1L,
-          compactEvery = 100)
+    Seq(typedPath, genericPath).foreach { p => withClue(s"${p.name}: ") {
+      val dir = tmp(s"man-cas-${p.name}")
+      val rows = (0 until 16).map(i =>
+        PersonRow(i, s"n$i", s"u$i", i,
+          java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
+      p.snapshot(dir, rows)
+      p.apply(dir,
+        PersonChange(100L, "U", 1, Some("x1"), Some("u1"), Some(91), None), 0L)
+      // interleave: while compact() is between its manifest read and its
+      // commit attempt, a trigger lands delta batch=1. The fold's first
+      // commit must fail on the taken version and its retry must re-apply
+      // "consume exactly batch 0" on top of the winner's state — batch 1
+      // survives in the manifest and in the read view.
+      @volatile var fired = false
+      ManifestReplica.preCommitHook = () => {
+        if (!fired) {
+          fired = true // self-disarm BEFORE the nested commit recurses
+          p.apply(dir, PersonChange(200L, "U", 2, Some("x2"), Some("u2"),
+            Some(92), None), 1L)
+        }
       }
-    }
-    try ManifestReplica.compact(spark, dir, numBuckets = 4)
-    finally ManifestReplica.preCommitHook = () => ()
-    assert(fired, "race hook never fired")
-    val got = asMap(dir)
-    assert(got(1) === (("x1", "u1", 91)), "folded delta lost")
-    assert(got(2) === (("x2", "u2", 92)),
-      "concurrently-committed delta lost by the fold's CAS retry")
-    // and the pending delta is still fold-able
-    ManifestReplica.compact(spark, dir, numBuckets = 4)
-    assert(asMap(dir)(2) === (("x2", "u2", 92)))
-    // a further compact with nothing pending is a no-op
-    ManifestReplica.compact(spark, dir, numBuckets = 4)
-    assert(asMap(dir)(2) === (("x2", "u2", 92)))
+      try p.compact(dir)
+      finally ManifestReplica.preCommitHook = () => ()
+      assert(fired, "race hook never fired")
+      val got = p.read(dir)
+      assert(got(1) === (("x1", "u1", 91)), "folded delta lost")
+      assert(got(2) === (("x2", "u2", 92)),
+        "concurrently-committed delta lost by the fold's CAS retry")
+      // and the pending delta is still fold-able
+      p.compact(dir)
+      assert(p.read(dir)(2) === (("x2", "u2", 92)))
+      // a further compact with nothing pending is a no-op
+      p.compact(dir)
+      assert(p.read(dir)(2) === (("x2", "u2", 92)))
+    } }
   }
 
   test("gc grace period spares young unnamed dirs (cross-process in-flight placements)") {

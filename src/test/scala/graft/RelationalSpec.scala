@@ -12,10 +12,13 @@ object SparkTestSession {
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    // FAIR so named scheduler pools exist (ConcurrentPipelinesSpec);
-    // undeclared pools get default weight/minShare — for the suites
-    // that never set a pool this behaves like FIFO in one pool
+    // FAIR so named scheduler pools exist (ConcurrentPipelinesSpec, the
+    // async CDC fold); the allocation file declares them with Spark's
+    // undeclared-pool defaults — for the suites that never set a pool
+    // this behaves like FIFO in one pool
     .config("spark.scheduler.mode", "FAIR")
+    .config("spark.scheduler.allocation.file",
+      getClass.getResource("/graft-test-pools.xml").toString)
     .getOrCreate()
   spark.sparkContext.setLogLevel("WARN")
 }
