@@ -1,10 +1,6 @@
 package graft.cdc
 
-import java.sql.Connection
-
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -17,21 +13,21 @@ import org.apache.spark.sql.types._
   * `rowSchema` (ANSI types, key column PRIMARY KEY), and each
   * micro-batch slice reduces to per-key summaries whose winning image
   * is projected to TYPED columns in Spark (one executor-side
-  * `from_json` + cast per surviving key — the same read-edge projection
-  * [[MultiTable.readTable]] uses) before the per-partition
-  * transaction binds them. Statement shapes, the three-phase
-  * `executeBatch` engine, created_at preservation (the UPDATE never
-  * touches the column), and the (target, epoch, partition) exactly-once
-  * markers are [[JdbcReplica]]'s, reused verbatim — every ordering and
-  * idempotency argument there carries over per table.
+  * `from_json` + cast per surviving key — [[MultiTable.typedRows]],
+  * the projection [[MultiTable.readTable]] uses) and handed to
+  * [[JdbcReplica.applySummaries]], the sink the single-table cell uses:
+  * statement shapes, the three-phase `executeBatch` engine, created_at
+  * preservation (the UPDATE never touches the column), and the
+  * (target, epoch, partition) exactly-once markers are one code path,
+  * so every ordering and idempotency argument there carries over per
+  * table.
   *
   * Like the single-table JDBC sink (and unlike the summary-fold
   * replicas), this applies destructively and requires micro-batches in
   * lsn order — the replication-slot / single-topic-partition
   * guarantee. */
 object JdbcMultiTable {
-  import JdbcReplica.{RowOp, applyOps, connect, epochSeen, markEpoch,
-    pruneEpochs}
+  import JdbcReplica.{connect, jdbcType}
 
   private def sqlType(f: StructField, isKey: Boolean): String =
     f.dataType match {
@@ -44,10 +40,10 @@ object JdbcMultiTable {
       case DateType => "DATE"
       case StringType =>
         // free-text columns get the widest portable VARCHAR (Derby's
-        // max; a 500-char default silently failed streams the other
-        // three matrix cells accept — r6 review). Keys stay modest so
-        // they index everywhere; override either via "maxLength" in
-        // the field's metadata.
+        // max; a 500-char default fails the stream on values the other
+        // three matrix cells accept). Keys stay modest so they index
+        // everywhere; override either via "maxLength" in the field's
+        // metadata.
         val len =
           if (f.metadata.contains("maxLength")) f.metadata.getLong("maxLength")
           else if (isKey) 500L else 32672L
@@ -56,27 +52,15 @@ object JdbcMultiTable {
         throw new IllegalArgumentException(s"no SQL mapping for $other")
     }
 
-  private def jdbcType(dt: DataType): Int = dt match {
-    case IntegerType => java.sql.Types.INTEGER
-    case LongType => java.sql.Types.BIGINT
-    case DoubleType => java.sql.Types.DOUBLE
-    case FloatType => java.sql.Types.REAL
-    case BooleanType => java.sql.Types.BOOLEAN
-    case TimestampType => java.sql.Types.TIMESTAMP
-    case DateType => java.sql.Types.DATE
-    case _ => java.sql.Types.VARCHAR
-  }
-
   /** Create one table's target (+ the shared epoch-marker table) if
     * absent, with DDL derived from the declared schema — or WIDEN an
     * existing one: declared columns missing from the live table are
     * added with `ALTER TABLE … ADD COLUMN` (nullable — pre-evolution
     * rows read SQL NULL, the same semantics as the parquet replicas'
-    * read-side widening; r7 verdict #5). DDL-first like the reference:
-    * the declared spec IS the contract, and only widening is handled —
-    * a dropped or retyped column is rejected HERE, before any row is
-    * written under the new spec (r10 verdict #5), never silently
-    * mis-applied. */
+    * read-side widening). DDL-first like the reference: the declared
+    * spec IS the contract, and only widening is handled — a dropped or
+    * retyped column is rejected HERE, before any row is written under
+    * the new spec, never silently mis-applied. */
   def ensureTable(url: String, spec: TableSpec): Unit = {
     JdbcReplica.ensureEpochTable(url)
     val c = connect(url)
@@ -95,12 +79,12 @@ object JdbcMultiTable {
         val declared = spec.rowSchema.fieldNames
           .map(_.toLowerCase).toSet
         // the schema-evolution contract against the PHYSICAL table
-        // (r10 verdict #5, the JDBC half of
-        // [[MultiTable.validateWidening]]): a live column the spec no
-        // longer declares, or whose declared type maps to a different
-        // SQL type, is rejected loudly — the sink would otherwise
-        // leave dropped columns silently stale on every upsert, and a
-        // retype would bind mismatched parameters at apply time.
+        // (the JDBC half of [[MultiTable.validateWidening]]): a live
+        // column the spec no longer declares, or whose declared type
+        // maps to a different SQL type, is rejected loudly — the sink
+        // would otherwise leave dropped columns silently stale on every
+        // upsert, and a retype would bind mismatched parameters at
+        // apply time.
         val dropped = existing.keySet -- declared
         require(dropped.isEmpty,
           s"schema evolution on '${spec.table}' drops live column(s) " +
@@ -127,37 +111,13 @@ object JdbcMultiTable {
   }
 
   /** Per-key summaries of one table's batch slice, projected to typed
-    * columns + action flags — the executor-side decode that keeps the
-    * JDBC partition loop free of JSON work. */
+    * columns + [[JdbcReplica.FlagCols]] — the executor-side decode that
+    * keeps the JDBC partition loop free of JSON work. */
   private[graft] def typedSummaries(slice: DataFrame, spec: TableSpec,
-      parallelism: Int): DataFrame = {
-    val byKey = Window.partitionBy("key")
-    val afterD = col("lsn") > coalesce(col("last_d_lsn"), lit(Long.MinValue))
-    val summarized = slice
-      .repartition(parallelism, col("key"))
-      .withColumn("last_d_lsn",
-        max(when(col("action") === "D", col("lsn"))).over(byKey))
-      .groupBy("key")
-      .agg(
-        max(when(col("action") =!= "D" && afterD,
-          struct(col("lsn"), col("img")))).as("last_img"),
-        min(when(col("action") === "I" && afterD,
-          struct(col("lsn"), col("created_at")))).as("first_ins"),
-        max(col("last_d_lsn")).as("last_d_lsn"))
-    val m = from_json(col("last_img.img"),
-      MapType(StringType, StringType)).as("m")
-    summarized
-      .select(col("key"), m, col("first_ins.created_at").as("__cat"),
-        col("last_img").isNotNull.as("has_img"),
-        col("first_ins").isNotNull.as("has_ins"),
-        col("last_d_lsn").isNotNull.as("has_del"))
-      .select(spec.rowSchema.fields.map { f =>
-        if (f.name == spec.keyCol) col("key").cast(f.dataType).as(f.name)
-        else if (spec.createdAtCol.contains(f.name))
-          col("__cat").cast(f.dataType).as(f.name)
-        else element_at(col("m"), f.name).cast(f.dataType).as(f.name)
-      }.toSeq ++ Seq(col("has_img"), col("has_ins"), col("has_del")): _*)
-  }
+      parallelism: Int): DataFrame =
+    MultiTable.typedRows(JdbcReplica.withFlags(Replicate.summarizeWith(
+      slice, MultiTable.MtShape, Seq("key"), Some(parallelism))),
+      spec, JdbcReplica.FlagCols)
 
   /** Apply one micro-batch of PARSED generic changes to every declared
     * table's SQL target — per table, one summary job feeding
@@ -166,67 +126,8 @@ object JdbcMultiTable {
   def applyBatch(spark: SparkSession, parsed: DataFrame, url: String,
       specs: Seq[TableSpec], batchId: Long, parallelism: Int = 4): Unit =
     MultiTable.forEachPresent(parsed, specs) { (spec, slice) =>
-      val fields = spec.rowSchema.fields
-      val keyIdx = fields.indexWhere(_.name == spec.keyCol)
-      val nonKey = fields.zipWithIndex.filter(_._1.name != spec.keyCol)
-      val updCols = nonKey.filterNot { case (f, _) =>
-        spec.createdAtCol.contains(f.name) } // never touch created_at
-      val delSql = s"DELETE FROM ${spec.table} WHERE ${spec.keyCol}=?"
-      // a spec whose only columns are the key and created_at has
-      // nothing to update — "SET key=key" keeps the statement valid
-      // AND its update count still answers "did the key exist", which
-      // the insert-on-miss decision needs (an empty SET list is a
-      // syntax error that would kill the stream)
-      val setList =
-        if (updCols.isEmpty) s"${spec.keyCol}=${spec.keyCol}"
-        else updCols.map(_._1.name + "=?").mkString(", ")
-      val updSql =
-        s"UPDATE ${spec.table} SET $setList WHERE ${spec.keyCol}=?"
-      val insSql = s"INSERT INTO ${spec.table} (${
-        fields.map(_.name).mkString(", ")}) VALUES (${
-        fields.map(_ => "?").mkString(",")})"
-      val table = spec.table
-      def bind(ps: java.sql.PreparedStatement, at: Int, r: Row,
-          idx: Int, dt: DataType): Unit =
-        if (r.isNullAt(idx)) ps.setNull(at, jdbcType(dt))
-        else ps.setObject(at, r.get(idx))
-      typedSummaries(slice, spec, parallelism)
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val buf = rows.toArray
-          if (buf.nonEmpty) {
-            val pid = org.apache.spark.TaskContext.getPartitionId()
-            val c = connect(url)
-            try {
-              c.setAutoCommit(false)
-              if (!epochSeen(c, table, batchId, pid)) {
-                val nFields = fields.length
-                applyOps(c, delSql, updSql, insSql,
-                  buf.iterator.map { r =>
-                    RowOp(
-                      bindDel = del =>
-                        bind(del, 1, r, keyIdx, fields(keyIdx).dataType),
-                      bindUpd = upd => {
-                        updCols.zipWithIndex.foreach {
-                          case ((f, i), at) => bind(upd, at + 1, r, i,
-                            f.dataType) }
-                        bind(upd, updCols.length + 1, r, keyIdx,
-                          fields(keyIdx).dataType)
-                      },
-                      bindIns = ins =>
-                        fields.zipWithIndex.foreach { case (f, i) =>
-                          bind(ins, i + 1, r, i, f.dataType) },
-                      hasDel = r.getBoolean(nFields + 2),
-                      hasIns = r.getBoolean(nFields + 1),
-                      hasImg = r.getBoolean(nFields))
-                  })
-                markEpoch(c, table, batchId, pid)
-                pruneEpochs(c, table, batchId)
-                c.commit()
-              } else c.rollback()
-            } catch { case e: Throwable => c.rollback(); throw e }
-            finally c.close()
-          }
-        }
+      JdbcReplica.applySummaries(typedSummaries(slice, spec, parallelism),
+        url, spec, batchId)
     }
 
   /** The continuous multi-table pipeline into SQL targets: one

@@ -1,10 +1,11 @@
 package graft.cdc
 
-import java.sql.{Connection, DriverManager, Timestamp}
+import java.sql.{Connection, DriverManager}
 
-import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types._
 
 /** JDBC source/sink for the CDC pipeline — S1's PRODUCTION form
   * (replicator/main.go:98-101 reads `SELECT id, name, uid, score,
@@ -23,19 +24,23 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    queries in parallel — the standard parallel-extract shape. One
   *    executor-side connection per partition.
   *  - **The sink ships SUMMARIES, not events**: each micro-batch first
-  *    reduces to ONE row per key ([[Replicate.summarize]] — the same
-  *    commutative algebra the parquet replicas fold), so the JDBC
-  *    round-trips are O(distinct keys), not O(events), and each key
-  *    needs at most a DELETE plus one upsert regardless of how many
-  *    events hit it. The summary maps exactly onto statement shapes:
-  *    a batch-final delete → DELETE (+ INSERT if re-inserted after);
-  *    inserts with no delete → upsert that PRESERVES the stored
-  *    created_at (the ON CONFLICT semantics); updates only → UPDATE,
-  *    a miss is a no-op (reference U semantics).
+  *    reduces to ONE row per key ([[Replicate.summarizeWith]] over the
+  *    person shape — the same commutative algebra the parquet replicas
+  *    fold), so the JDBC round-trips are O(distinct keys), not
+  *    O(events), and each key needs at most a DELETE plus one upsert
+  *    regardless of how many events hit it. The summary maps exactly
+  *    onto statement shapes ([[applyOps]]): a batch-final delete →
+  *    DELETE (+ INSERT if re-inserted after); inserts with no delete →
+  *    upsert that PRESERVES the stored created_at (the ON CONFLICT
+  *    semantics); updates only → UPDATE, a miss is a no-op (reference
+  *    U semantics).
   *  - **Exactly-once**: each partition applies inside ONE transaction
   *    that also records (epoch, partition) in `graft_epochs`; a crash
   *    replay sees the marker and skips — the transactional-sink pattern
   *    (idempotent writes keyed by epoch). Statements are JDBC-batched.
+  *  - **One sink for both JDBC cells**: [[applySummaries]] binds typed
+  *    summary rows of any declared [[TableSpec]]; this module hands it
+  *    the person table, [[JdbcMultiTable]] each declared table.
   *  - Embedded Derby is same-JVM by nature — fine under local[n] (and
   *    for tests); a cluster deployment points the same code at a
   *    networked database.
@@ -97,10 +102,10 @@ object JdbcReplica {
     * probes. Unquoted identifiers fold per engine — Derby stores them
     * upper-case, Postgres lower-case — so probe with the connection's
     * OWN folding rule (a hard-coded toUpperCase finds nothing on
-    * Postgres, r6 review). Metadata calls take SEARCH PATTERNS: an
-    * unescaped '_' matches any character and a null schema searches
-    * every schema, so names are escaped and scoped to the connection's
-    * current schema when the driver reports one (r6 review). */
+    * Postgres). Metadata calls take SEARCH PATTERNS: an unescaped '_'
+    * matches any character and a null schema searches every schema, so
+    * names are escaped and scoped to the connection's current schema
+    * when the driver reports one. */
   private def metaProbe(c: Connection, name: String)
       : (String, String => String, String) = {
     val md = c.getMetaData
@@ -225,7 +230,7 @@ object JdbcReplica {
 
   /** Exactly-once markers: (target, epoch, partition) rows committing
     * atomically with the data they guard. */
-  private[cdc] def epochSeen(c: Connection, target: String, epoch: Long,
+  private def epochSeen(c: Connection, target: String, epoch: Long,
       part: Int): Boolean = {
     val ps = c.prepareStatement(
       s"SELECT 1 FROM $EpochTable WHERE target=? AND epoch=? AND part=?")
@@ -236,7 +241,7 @@ object JdbcReplica {
     } finally ps.close()
   }
 
-  private[cdc] def markEpoch(c: Connection, target: String, epoch: Long,
+  private def markEpoch(c: Connection, target: String, epoch: Long,
       part: Int): Unit = {
     val ps = c.prepareStatement(s"INSERT INTO $EpochTable VALUES (?, ?, ?)")
     try {
@@ -250,7 +255,7 @@ object JdbcReplica {
     * below this epoch can never be consulted again — prune them in the
     * same transaction to keep the table O(partitions), not O(stream
     * lifetime). */
-  private[cdc] def pruneEpochs(c: Connection, target: String,
+  private def pruneEpochs(c: Connection, target: String,
       epoch: Long): Unit = {
     val ps = c.prepareStatement(
       s"DELETE FROM $EpochTable WHERE target=? AND epoch<?")
@@ -287,146 +292,148 @@ object JdbcReplica {
   }
 
   /** Apply one micro-batch: reduce to per-key summaries, then apply
-    * each partition in one marker-guarded transaction. Safe to replay
-    * with the same `batchId` (the marker skips); `batchId` must be the
-    * streaming epoch. */
+    * each partition in one marker-guarded transaction
+    * ([[applySummaries]]). Safe to replay with the same `batchId` (the
+    * marker skips); `batchId` must be the streaming epoch. */
   def applyBatch(batch: Dataset[PersonChange], url: String, table: String,
-      batchId: Long, parallelism: Int = 4): Unit = {
-    val summaries = Replicate.summarize(batch.toDF(), parallelism)
-      .select(col("id"),
-        col("last_img.lsn").as("img_lsn"), col("last_img.name").as("name"),
-        col("last_img.uid").as("uid"), col("last_img.score").as("score"),
-        col("first_ins.lsn").as("ins_lsn"),
-        col("first_ins.created_at").as("created_at"),
-        col("last_d_lsn"))
-    summaries.foreachPartition { (rows: Iterator[Row]) =>
+      batchId: Long, parallelism: Int = 4): Unit =
+    applySummaries(typedSummaries(batch.toDF(), parallelism), url,
+      TableSpec(table, "id", Some("created_at"),
+        Encoders.product[PersonRow].schema),
+      batchId)
+
+  /** Per-key summaries of a person batch as the sink binds them: the
+    * person columns, then [[FlagCols]]. */
+  private[graft] def typedSummaries(batch: DataFrame, parallelism: Int)
+      : DataFrame =
+    withFlags(Replicate.summarize(batch, parallelism))
+      .select(Replicate.personCols ++ FlagCols.map(col): _*)
+
+  /** Which parts of the per-key fold a batch held — image, insert,
+    * delete — named in the order the sink reads them after a summary
+    * row's typed columns. */
+  private[cdc] val FlagCols = Seq("has_img", "has_ins", "has_del")
+
+  /** `summaries` with [[FlagCols]] appended. */
+  private[cdc] def withFlags(summaries: DataFrame): DataFrame =
+    summaries.select(col("*"),
+      col("last_img").isNotNull.as("has_img"),
+      col("first_ins").isNotNull.as("has_ins"),
+      col("last_d_lsn").isNotNull.as("has_del"))
+
+  /** The JDBC sink both JDBC cells share. `typed` holds one summary row
+    * per key: `spec.rowSchema`'s columns in order, then [[FlagCols]].
+    * Each partition applies inside ONE transaction that also records
+    * (table, epoch, partition) in the marker table: the marker commits
+    * atomically WITH the rows, so a replayed epoch short-circuits. */
+  private[cdc] def applySummaries(typed: DataFrame, url: String,
+      spec: TableSpec, batchId: Long): Unit =
+    typed.foreachPartition { (rows: Iterator[Row]) =>
       val buf = rows.toArray
       if (buf.nonEmpty) {
         val pid = org.apache.spark.TaskContext.getPartitionId()
         val c = connect(url)
         try {
           c.setAutoCommit(false)
-          // exactly-once: the (target, epoch, partition) marker commits
-          // atomically WITH the rows; a replayed epoch short-circuits
-          if (!epochSeen(c, table, batchId, pid)) {
-            applyPartition(c, table, buf)
-            markEpoch(c, table, batchId, pid)
-            pruneEpochs(c, table, batchId)
+          if (!epochSeen(c, spec.table, batchId, pid)) {
+            applyOps(c, spec, buf)
+            markEpoch(c, spec.table, batchId, pid)
+            pruneEpochs(c, spec.table, batchId)
             c.commit()
           } else c.rollback()
         } catch { case e: Throwable => c.rollback(); throw e }
         finally c.close()
       }
     }
-  }
-
-  /** One decoded per-key summary, ready for statement binding. */
-  private final case class KeyOp(id: Int, name: String, uid: String,
-      score: Option[Int], cAt: Timestamp, hasDel: Boolean, hasIns: Boolean,
-      hasImg: Boolean) {
-    /** SQL NULL when the winning image carried no score — matching the
-      * parquet/state-store cells, which preserve null (a 0 coercion
-      * here silently diverged the matrix for null-score events). */
-    def bindScore(ps: java.sql.PreparedStatement, at: Int): Unit =
-      score match {
-        case Some(s) => ps.setInt(at, s)
-        case None    => ps.setNull(at, java.sql.Types.INTEGER)
-      }
-  }
 
   /** Keys per executeBatch round-trip (bounds driver-side batch
     * memory; 1k × 3 phases ≈ 3 round-trips per 1k keys). */
   private val JdbcBatchSize = 1000
 
-  /** One per-key summary in binder form — the shape-independent input
-    * to [[applyOps]], so the typed single-table sink and the generic
-    * multi-table sink ([[JdbcMultiTable]]) share one batch engine. */
-  private[cdc] final case class RowOp(
-      bindDel: java.sql.PreparedStatement => Unit,
-      bindUpd: java.sql.PreparedStatement => Unit,
-      bindIns: java.sql.PreparedStatement => Unit,
-      hasDel: Boolean, hasIns: Boolean, hasImg: Boolean)
-
-  /** The three-phase chunked batch engine (see [[applyPartition]]'s
-    * scaladoc for the round-trip and ordering argument): per
-    * [[JdbcBatchSize]] chunk — delete batch, update batch (counts
-    * drive insert-on-miss; SUCCESS_NO_INFO resolved with one exact
-    * single-row update), insert batch (rebirths + misses). */
-  private[cdc] def applyOps(c: Connection, delSql: String, updSql: String,
-      insSql: String, ops: Iterator[RowOp]): Unit = {
-    val del = c.prepareStatement(delSql)
-    val upd = c.prepareStatement(updSql)
-    val ins = c.prepareStatement(insSql)
+  /** Statement shapes for one partition of typed summaries, executed
+    * as THREE JDBC batches per [[JdbcBatchSize]] chunk — delete, then
+    * update, then insert — instead of one round-trip per key: against a
+    * networked database at ~1 ms RTT, 50k keys would otherwise be
+    * ~50-100 s of serialized executeUpdate. An insert with no delete
+    * is an UPDATE, then an INSERT on a miss; the UPDATE never sets the
+    * key or created_at, so a hit preserves the stored created_at (the
+    * ON CONFLICT semantics). Phase order
+    * preserves per-key statement order (each key is one summary row):
+    * its delete lands before its rebirth insert, its update before its
+    * insert-on-miss. A driver reporting SUCCESS_NO_INFO for an update
+    * (some drivers under batch rewrite) is resolved exactly with one
+    * follow-up single-row update for that key. Parameters bind by
+    * column index; a null binds as SQL NULL of the column's type. */
+  private def applyOps(c: Connection, spec: TableSpec,
+      rows: Array[Row]): Unit = {
+    val fields = spec.rowSchema.fields
+    val types = fields.map(f => jdbcType(f.dataType))
+    val keyIdx = fields.indexWhere(_.name == spec.keyCol)
+    val updIdx = fields.indices.filter(i =>
+      i != keyIdx && !spec.createdAtCol.contains(fields(i).name))
+    // a spec whose only columns are the key and created_at has nothing
+    // to update — "SET key=key" keeps the statement valid AND its update
+    // count still answers "did the key exist", which the insert-on-miss
+    // decision needs (an empty SET list is a syntax error that would
+    // kill the stream)
+    val setList =
+      if (updIdx.isEmpty) s"${spec.keyCol}=${spec.keyCol}"
+      else updIdx.map(fields(_).name + "=?").mkString(", ")
+    def bind(ps: java.sql.PreparedStatement, idx: Seq[Int], r: Row): Unit =
+      idx.iterator.zipWithIndex.foreach { case (i, at) =>
+        if (r.isNullAt(i)) ps.setNull(at + 1, types(i))
+        else ps.setObject(at + 1, r.get(i))
+      }
+    val updParams = updIdx :+ keyIdx
+    val n = fields.length
+    def hasImg(r: Row) = r.getBoolean(n)
+    def hasIns(r: Row) = r.getBoolean(n + 1)
+    def hasDel(r: Row) = r.getBoolean(n + 2)
+    val del = c.prepareStatement(
+      s"DELETE FROM ${spec.table} WHERE ${spec.keyCol}=?")
+    val upd = c.prepareStatement(
+      s"UPDATE ${spec.table} SET $setList WHERE ${spec.keyCol}=?")
+    val ins = c.prepareStatement(s"INSERT INTO ${spec.table} (${
+      fields.map(_.name).mkString(", ")}) VALUES (${
+      fields.map(_ => "?").mkString(",")})")
     try {
-      ops.grouped(JdbcBatchSize).foreach { chunk =>
-        val dels = chunk.filter(_.hasDel)
+      rows.grouped(JdbcBatchSize).foreach { chunk =>
+        val dels = chunk.filter(hasDel)
         if (dels.nonEmpty) {
-          dels.foreach { k => k.bindDel(del); del.addBatch() }
+          dels.foreach { r => bind(del, Seq(keyIdx), r); del.addBatch() }
           del.executeBatch()
         }
-        val upds = chunk.filter(k => !k.hasDel && (k.hasIns || k.hasImg))
+        val upds = chunk.filter(r => !hasDel(r) && (hasIns(r) || hasImg(r)))
         val counts =
           if (upds.isEmpty) Array.empty[Int]
-          else { upds.foreach { k => k.bindUpd(upd); upd.addBatch() }
+          else { upds.foreach { r => bind(upd, updParams, r); upd.addBatch() }
                  upd.executeBatch() }
         val missed = upds.iterator.zip(counts.iterator).collect {
-          case (k, n) if k.hasIns &&
-              (n == 0 || (n == java.sql.Statement.SUCCESS_NO_INFO &&
-                { k.bindUpd(upd); upd.executeUpdate() == 0 })) => k
+          case (r, k) if hasIns(r) &&
+              (k == 0 || (k == java.sql.Statement.SUCCESS_NO_INFO &&
+                { bind(upd, updParams, r); upd.executeUpdate() == 0 })) => r
         }.toSeq
-        val toInsert = dels.filter(_.hasIns) ++ missed
+        val toInsert = dels.filter(hasIns) ++ missed
         if (toInsert.nonEmpty) {
-          toInsert.foreach { k => k.bindIns(ins); ins.addBatch() }
+          toInsert.foreach { r => bind(ins, fields.indices, r); ins.addBatch() }
           ins.executeBatch()
         }
       }
     } finally { del.close(); upd.close(); ins.close() }
   }
 
-  /** Statement shapes for one partition of per-key summaries, executed
-    * as THREE JDBC batches per [[JdbcBatchSize]] chunk — delete, then
-    * update, then insert — instead of one round-trip per key (r6
-    * review: the scaladoc claimed batching the code didn't do; against
-    * a networked database at ~1 ms RTT, 50k keys was ~50-100 s of
-    * serialized executeUpdate). Phase order preserves per-key statement
-    * order (each key is one summary row): its delete lands before its
-    * rebirth insert, its update before its insert-on-miss. The update
-    * batch's per-statement counts drive the upsert's insert-on-miss; a
-    * driver reporting SUCCESS_NO_INFO (some drivers under batch
-    * rewrite) is resolved exactly with one follow-up single-row update
-    * for that key. */
-  private def applyPartition(c: Connection, table: String,
-      rows: Array[Row]): Unit =
-    applyOps(c,
-      s"DELETE FROM $table WHERE id=?",
-      s"UPDATE $table SET name=?, uid=?, score=? WHERE id=?",
-      s"INSERT INTO $table (id, name, uid, score, created_at) VALUES (?,?,?,?,?)",
-      rows.iterator.map { r =>
-        val k = KeyOp(
-          id = r.getInt(r.fieldIndex("id")),
-          name = r.getString(r.fieldIndex("name")),
-          uid = r.getString(r.fieldIndex("uid")),
-          score = if (r.isNullAt(r.fieldIndex("score"))) None
-                  else Some(r.getInt(r.fieldIndex("score"))),
-          cAt = r.getAs[Timestamp](r.fieldIndex("created_at")),
-          hasDel = !r.isNullAt(r.fieldIndex("last_d_lsn")),
-          hasIns = !r.isNullAt(r.fieldIndex("ins_lsn")),
-          hasImg = !r.isNullAt(r.fieldIndex("img_lsn")))
-        RowOp(
-          bindDel = del => del.setInt(1, k.id),
-          bindUpd = upd => {
-            // a HIT preserves the stored created_at by never touching
-            // the column (reference ON CONFLICT semantics)
-            upd.setString(1, k.name); upd.setString(2, k.uid)
-            k.bindScore(upd, 3); upd.setInt(4, k.id)
-          },
-          bindIns = ins => {
-            ins.setInt(1, k.id); ins.setString(2, k.name)
-            ins.setString(3, k.uid); k.bindScore(ins, 4)
-            ins.setTimestamp(5, k.cAt)
-          },
-          hasDel = k.hasDel, hasIns = k.hasIns, hasImg = k.hasImg)
-      })
+  /** JDBC parameter type of a declared column, for binding its nulls
+    * and checking a live table against the declared schema. */
+  private[cdc] def jdbcType(dt: DataType): Int = dt match {
+    case IntegerType => java.sql.Types.INTEGER
+    case LongType => java.sql.Types.BIGINT
+    case DoubleType => java.sql.Types.DOUBLE
+    case FloatType => java.sql.Types.REAL
+    case BooleanType => java.sql.Types.BOOLEAN
+    case TimestampType => java.sql.Types.TIMESTAMP
+    case DateType => java.sql.Types.DATE
+    case _ => java.sql.Types.VARCHAR
+  }
 
   /** Bulk-load rows into the JDBC target (snapshot phase of the
     * replicator): distributed append through Spark's JDBC writer, then

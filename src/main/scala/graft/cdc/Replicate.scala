@@ -21,8 +21,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   *
   *  - **Per trigger (O(batch), one job)**: reduce the micro-batch to
   *    one summary row per key with ONE shuffle ([[summarizeBucketed]] —
-  *    window + hash aggregate reuse the bucket partitioning, fully
-  *    whole-stage-codegen) and commit it as delta `batch=<epochId>` via
+  *    the window and the aggregate reuse the bucket partitioning) and
+  *    commit it as delta `batch=<epochId>` via
   *    tmp-write + rename. No base read, no bucket rewrite, no collect.
   *    Replay after a crash overwrites the same delta dir — idempotent.
   *  - **The base holds the SAME per-key summary state as the deltas**
@@ -86,8 +86,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   * unchanged.
   *
   * [[MultiTable]] stores its generic (key, JSON image) summaries with
-  * this same protocol: every storage helper here takes a [[Shape]]
-  * naming the summary schema, key column and key→bucket expression.
+  * this same protocol: every storage helper here, and the per-key
+  * batch summary [[summarizeWith]], takes a [[Shape]] naming the
+  * summary schema, key column and key→bucket expression.
   *
   * SCHEMA EVOLUTION — documented decision: this typed single-table path
   * fixes its schema at compile time BY DESIGN — [[PersonRow]] and the
@@ -115,10 +116,9 @@ object Replicate {
     if (!ok) throw new java.io.IOException(s"replica filesystem op failed: $what")
 
   /** Shuffle width for per-batch merge stages. CDC micro-batches are
-    * small relative to the replica; 32/200 shuffle tasks over a few
-    * hundred rows are pure overhead (the round-1 bench lost ~19× of its
-    * latency envelope to exactly this). Production tunes it to
-    * ~batchRows / 100k. */
+    * small relative to the replica, and 32/200 shuffle tasks over a few
+    * hundred rows are pure per-task overhead that dominates a trigger's
+    * latency. Production tunes it to ~batchRows / 100k. */
   val DefaultMergeParallelism = 8
 
   /** Bucket count scales with REPLICA size (target: a bucket rewrite ≈
@@ -131,8 +131,8 @@ object Replicate {
   /** Compact the delta log into the base every N triggers. Bounds both
     * read amplification (≤ N delta files union'd at read time) and the
     * worst-trigger latency (the compaction batch does the base rewrite;
-    * all other triggers are O(batch)). 1 = eager (rewrite per trigger,
-    * the round-3 behavior). */
+    * all other triggers are O(batch)). 1 = eager: every trigger folds
+    * its delta into the base at once. */
   val DefaultCompactEvery = 8
 
   /** Hidden delta-log dir under the replica root (leading dot: invisible
@@ -255,12 +255,15 @@ object Replicate {
     * insert's (the reference's ON CONFLICT preservation,
     * replicator/main.go:204-217). */
   def projectAlive(combined: DataFrame): DataFrame =
-    combined.filter(col("first_ins").isNotNull)
-      .select(col("id"),
-        col("last_img.name").as("name"),
-        col("last_img.uid").as("uid"),
-        col("last_img.score").as("score"),
-        col("first_ins.created_at").as("created_at"))
+    combined.filter(col("first_ins").isNotNull).select(personCols: _*)
+
+  /** A person summary's row columns: the key, the winning image's
+    * fields, and the first surviving insert's created_at. */
+  private[cdc] def personCols: Seq[Column] = Seq(col("id"),
+    col("last_img.name").as("name"),
+    col("last_img.uid").as("uid"),
+    col("last_img.score").as("score"),
+    col("first_ins.created_at").as("created_at"))
 
   /** Publication row filter (pubsub/main.go:79), with PostgreSQL's
     * row-filter UPDATE transformation semantics: an UPDATE whose new image
@@ -286,18 +289,6 @@ object Replicate {
     * `WHERE (score % 2 = 0)` (pubsub/main.go:79). */
   def parityPred: Column = col("score") % 2 === 0
 
-  /** Typed cogroup fold — the TEST ORACLE for the merge semantics
-    * (exact reference behavior, replicator/main.go:195-269):
-    *  - I on absent key inserts; I on present key updates name/uid/score
-    *    but PRESERVES created_at (ON CONFLICT DO UPDATE,
-    *    replicator/main.go:204-217);
-    *  - U on present key updates name/uid/score, created_at untouched
-    *    (replicator/main.go:234-243); U on absent key is a no-op;
-    *  - D removes (replicator/main.go:260-261).
-    * Changes are applied in lsn order (slot order, SURVEY.md §2.9 T3).
-    * Deliberately naive and readable; the engine path is
-    * [[summarize]] + [[combineSummaries]] + [[projectAlive]], which
-    * CdcSpec asserts equivalent on generated sequences. */
   /** Apply ONE change to a key's state — the reference's switch
     * statement as a pure function, shared by the cogroup oracle and the
     * state-store path ([[StatefulReplica]]). */
@@ -315,6 +306,18 @@ object Replicate {
       case _ => st
     }
 
+  /** Typed cogroup fold — the TEST ORACLE for the merge semantics
+    * (exact reference behavior, replicator/main.go:195-269):
+    *  - I on absent key inserts; I on present key updates name/uid/score
+    *    but PRESERVES created_at (ON CONFLICT DO UPDATE,
+    *    replicator/main.go:204-217);
+    *  - U on present key updates name/uid/score, created_at untouched
+    *    (replicator/main.go:234-243); U on absent key is a no-op;
+    *  - D removes (replicator/main.go:260-261).
+    * Changes are applied in lsn order (slot order, SURVEY.md §2.9 T3).
+    * Deliberately naive and readable; the engine path is
+    * [[summarize]] + [[combineSummaries]] + [[projectAlive]], which
+    * CdcSpec asserts equivalent on generated sequences. */
   def applyChanges(current: Dataset[PersonRow],
       changes: Dataset[PersonChange]): Dataset[PersonRow] = {
     val spark = current.sparkSession
@@ -335,32 +338,44 @@ object Replicate {
     *  - `first_ins`: the first INSERT after the last delete. If present
     *    the key ends the batch alive regardless of prior state; its
     *    created_at is used when the row wasn't already alive.
-    *  - `last_img`: image (name/uid/score) of the last non-delete event
-    *    after the last delete — the final image if the key ends alive.
-    *    With no delete in the batch this is just the last I/U image,
-    *    which also covers the all-UPDATE case.
+    *  - `last_img`: the image of the last non-delete event after the
+    *    last delete — the final image if the key ends alive. With no
+    *    delete in the batch this is just the last I/U image, which also
+    *    covers the all-UPDATE case. Its fields are `s`'s `last_img`
+    *    struct fields, read off the batch's columns.
     *
     * Struct max/min order by `lsn` first, so they are argmax/argmin by
-    * lsn (lsn is unique per change). Everything is codegen'd: one window
-    * (hash-partition by id) + one hash aggregate reusing the same
-    * partitioning — a single batch-sized shuffle. */
-  def summarize(batch: DataFrame, parallelism: Int = DefaultMergeParallelism)
-      : DataFrame = {
-    val byId = Window.partitionBy("id")
+    * lsn (lsn is unique per change). `keys` are the grouping keys, as
+    * [[combineSummaries]] takes them: `(BucketCol, s.key)` for a delta
+    * write (the batch already carries the bucket column), `s.key` for
+    * the JDBC sinks. One batch-sized shuffle on `keys.head` — `width`
+    * tasks wide, or sized by AQE when None — feeds the window and then
+    * a sort aggregate (struct max/min buffers rule out a hash
+    * aggregate) that reuses the window's partitioning and sort order. */
+  private[cdc] def summarizeWith(batch: DataFrame, s: Shape,
+      keys: Seq[String], width: Option[Int]): DataFrame = {
+    val kc = keys.map(col)
+    val byKey = Window.partitionBy(kc: _*)
     val afterD = col("lsn") > coalesce(col("last_d_lsn"), lit(Long.MinValue))
-    batch
-      .repartition(parallelism, col("id"))
+    val img = s.deltaSchema("last_img").dataType.asInstanceOf[StructType]
+      .fieldNames.map(col)
+    width.fold(batch.repartition(kc.head))(w => batch.repartition(w, kc.head))
       .withColumn("last_d_lsn",
-        max(when(col("action") === "D", col("lsn"))).over(byId))
-      .groupBy("id")
+        max(when(col("action") === "D", col("lsn"))).over(byKey))
+      .groupBy(kc: _*)
       .agg(
-        max(when(col("action") =!= "D" && afterD,
-          struct(col("lsn"), col("name"), col("uid"), col("score"))))
+        max(when(col("action") =!= "D" && afterD, struct(img: _*)))
           .as("last_img"),
         min(when(col("action") === "I" && afterD,
           struct(col("lsn"), col("created_at")))).as("first_ins"),
         max(col("last_d_lsn")).as("last_d_lsn"))
   }
+
+  /** [[summarizeWith]] over person changes, keyed on `id` with a fixed
+    * shuffle width. */
+  def summarize(batch: DataFrame, parallelism: Int = DefaultMergeParallelism)
+      : DataFrame =
+    summarizeWith(batch, PersonShape, Seq("id"), Some(parallelism))
 
   /** [[summarize]] with the shuffle keyed on `id_bucket` instead of raw
     * `id`: bucket is a function of id, so per-key grouping is preserved,
@@ -368,30 +383,15 @@ object Replicate {
     * cluster on (bucket, id) ⊇ {bucket} — the ENTIRE apply path runs off
     * this single batch-sized shuffle: no re-shuffle before the join, and
     * each write task holds exactly its bucket(s), emitting one file per
-    * bucket. */
+    * bucket. The exchange has no explicit width: AQE sizes it to the
+    * batch (a trigger-sized batch folds to one partition → one delta
+    * file; a bulk load fans out) — a fixed width either serialized bulk
+    * loads or sprayed 16 tiny files per trigger, tripling compaction's
+    * scan cost. */
   def summarizeBucketed(batch: DataFrame, numBuckets: Int = DefaultNumBuckets)
-      : DataFrame = {
-    val byKey = Window.partitionBy(BucketCol, "id")
-    val afterD = col("lsn") > coalesce(col("last_d_lsn"), lit(Long.MinValue))
-    batch
-      .withColumn(BucketCol, PersonShape.bucketOf(numBuckets))
-      // repartition WITHOUT an explicit count: AQE sizes the exchange to
-      // the batch (a trigger-sized batch folds to one partition → one
-      // delta file; a bulk load fans out) — the fixed-width variant
-      // either serialized bulk loads or sprayed 16 tiny files per
-      // trigger, tripling compaction's scan cost
-      .repartition(col(BucketCol))
-      .withColumn("last_d_lsn",
-        max(when(col("action") === "D", col("lsn"))).over(byKey))
-      .groupBy(BucketCol, "id")
-      .agg(
-        max(when(col("action") =!= "D" && afterD,
-          struct(col("lsn"), col("name"), col("uid"), col("score"))))
-          .as("last_img"),
-        min(when(col("action") === "I" && afterD,
-          struct(col("lsn"), col("created_at")))).as("first_ins"),
-        max(col("last_d_lsn")).as("last_d_lsn"))
-  }
+      : DataFrame =
+    summarizeWith(batch.withColumn(BucketCol, PersonShape.bucketOf(numBuckets)),
+      PersonShape, Seq(BucketCol, "id"), None)
 
   /** A committed bucket generation: a parquet dir, or the empty marker
     * file of a bucket whose keys were all vacuumed. */

@@ -65,7 +65,13 @@ class ConcurrentPipelinesSpec extends AnyFunSuite {
     val ckptC = Files.createTempDirectory("conc-cdc-ckpt").toString
     Replicate.snapshot(spark,
       ChangeGen.replay(snapOps).values.toSeq.toDS(), replica)
-    ChangeGen.writeBatches(changeDir, streamOps, batches = 6)
+    // five of the six epoch files land up front; the sixth only once
+    // the dedup stream has reported progress (in the drain loop), so the
+    // CDC stream's last progress event always follows the dedup
+    // stream's first — the overlap below holds however fast CDC runs
+    val per = ChangeGen.chunkSize(streamOps.size, 6)
+    val (early, last) = streamOps.splitAt(5 * per)
+    ChangeGen.writeBatches(changeDir, early, batches = 5)
 
     // ---- ML side: half the corpus seeds the store, the other half
     // streams in as 4 new-doc waves ------------------------------------
@@ -111,8 +117,14 @@ class ConcurrentPipelinesSpec extends AnyFunSuite {
       val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
       def cdcDone = cdcL.batches.count(_.inputRows > 0) >= 6
       def mlDone = mlL.batches.count(_.inputRows > 0) >= 4
-      while ((!cdcDone || !mlDone) && System.nanoTime() < deadline)
+      var lastWritten = false
+      while ((!cdcDone || !mlDone) && System.nanoTime() < deadline) {
+        if (!lastWritten && mlL.batches.nonEmpty) {
+          ChangeGen.writeBatches(changeDir, last, batches = 1, startIndex = 5)
+          lastWritten = true
+        }
         Thread.sleep(200)
+      }
     } finally {
       qCdc.stop(); qMl.stop()
       spark.streams.removeListener(cdcL)

@@ -182,7 +182,7 @@ class JdbcSpec extends AnyFunSuite {
   }
 
   test("jdbc batching: >1000 keys in one partition apply correctly across chunk boundaries") {
-    // applyPartition chunks at JdbcBatchSize=1000 and executes three
+    // applyOps chunks at JdbcBatchSize=1000 and executes three
     // batch phases per chunk; 2500 keys on parallelism=1 crosses two
     // chunk boundaries and exercises every statement path at volume:
     // insert-on-miss (fresh keys), update-hit, delete, delete+rebirth.

@@ -611,26 +611,35 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("JDBC multi-table summaries: one exchange serves repartition, window, and aggregate") {
-    // typedSummaries keys everything on `key`: the explicit
+    // typedSummaries keys everything on the key column: the explicit
     // repartition, the last-delete window, and the per-key aggregate
     // must share ONE hash exchange — a second one would re-shuffle the
     // batch between stages for nothing
     import spark.implicits._
-    val parsed = graft.cdc.MultiTable.parseAll(
-      graft.cdc.ChangeGen.ops(seed = 9L, n = 200)
-        .map(graft.cdc.ChangeGen.toJsonLine)
-        .toDF("value"), MtTestSpecs.both)
-    val typed = graft.cdc.JdbcMultiTable.typedSummaries(
-      parsed.filter(org.apache.spark.sql.functions.col("tbl") === "person")
-        .drop("tbl"), MtTestSpecs.person, parallelism = 4)
-    val qe = typed.queryExecution
-    qe.executedPlan.execute().foreach(_ => ())
-    val finalPlan = qe.executedPlan.toString
-      .split("== Initial Plan ==").head
-    val exchanges = finalPlan.linesIterator
-      .count(_.contains("Exchange hashpartitioning"))
-    assert(exchanges <= 1,
-      s"typedSummaries re-shuffles between stages:\n$finalPlan")
+    val ops = graft.cdc.ChangeGen.ops(seed = 9L, n = 200)
+    val generic = {
+      val parsed = graft.cdc.MultiTable.parseAll(
+        ops.map(graft.cdc.ChangeGen.toJsonLine).toDF("value"),
+        MtTestSpecs.both)
+      graft.cdc.JdbcMultiTable.typedSummaries(
+        parsed.filter(org.apache.spark.sql.functions.col("tbl") === "person")
+          .drop("tbl"), MtTestSpecs.person, parallelism = 4)
+    }
+    // the single-table JDBC cell's summaries over the same changes
+    val single = graft.cdc.JdbcReplica.typedSummaries(
+      graft.cdc.ChangeGen.toChanges(ops).toDS().toDF(), parallelism = 4)
+    Seq("generic" -> generic, "single" -> single).foreach {
+      case (name, typed) => withClue(s"$name: ") {
+        val qe = typed.queryExecution
+        qe.executedPlan.execute().foreach(_ => ())
+        val finalPlan = qe.executedPlan.toString
+          .split("== Initial Plan ==").head
+        val exchanges = finalPlan.linesIterator
+          .count(_.contains("Exchange hashpartitioning"))
+        assert(exchanges <= 1,
+          s"typedSummaries re-shuffles between stages:\n$finalPlan")
+      }
+    }
   }
 
   test("skew datum: partial agg absorbs a hot key; AQE splits a hot join partition") {
