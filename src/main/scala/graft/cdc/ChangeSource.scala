@@ -2,6 +2,7 @@ package graft.cdc
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parse wal2json v2 change lines into typed [[PersonChange]] rows.
   *
@@ -34,8 +35,8 @@ object ChangeSource {
   /** Raw change-log lines as an unparsed streaming frame — the ONE
     * reader every pipeline variant shares (single-table, multi-table,
     * both commit protocols), so a new source option or the documented
-    * Kafka swap lands in one place instead of drifting across three
-    * hand-rolled copies (r6 review). */
+    * Kafka swap lands in one place instead of drifting across
+    * hand-rolled copies. */
   def rawLines(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val reader = spark.readStream.format("text")
@@ -94,21 +95,29 @@ object ChangeSource {
     classify(lines).groupBy("verdict").agg(count(lit(1)).as("n"))
       .orderBy("verdict")
 
+  /** Decode each line's `value` with `schema` ONCE, into one column per
+    * top-level field. A plain `from_json` projection gets copied into
+    * every predicate the optimizer pushes below it, so a line would be
+    * decoded once per filter; the generator keeps the decode a single
+    * node the filters sit above. A null or malformed line yields all-null
+    * fields. */
+  private[cdc] def decode(lines: DataFrame, schema: StructType): DataFrame =
+    lines.select(inline(array(from_json(col("value"), schema))))
+
   /** envelope JSON → filter table='person' (F2) → pivot columns/identity
     * arrays to a map (X13, map_from_arrays) → typed columns. */
   def parse(lines: DataFrame): Dataset[PersonChange] = {
     val spark = lines.sparkSession
     import spark.implicits._
-    lines
-      .select(from_json(col("value"), envelope).as("c"))
-      .filter(col("c").isNotNull && col("c.action").isin("I", "U", "D"))
-      .filter(col("c.table") === "person") // replicator/main.go:191-193
+    decode(lines, envelope)
+      .filter(col("action").isin("I", "U", "D"))
+      .filter(col("table") === "person") // replicator/main.go:191-193
       .select(
-        col("c.lsn").as("lsn"),
-        col("c.action").as("action"),
-        map_from_arrays(col("c.columns.name"), col("c.columns.value"))
+        col("lsn"),
+        col("action"),
+        map_from_arrays(col("columns.name"), col("columns.value"))
           .as("cols"),
-        map_from_arrays(col("c.identity.name"), col("c.identity.value"))
+        map_from_arrays(col("identity.name"), col("identity.value"))
           .as("ident"))
       .select(
         col("lsn"), col("action"),

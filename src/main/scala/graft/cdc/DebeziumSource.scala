@@ -47,20 +47,19 @@ object DebeziumSource {
   def parse(lines: DataFrame): Dataset[PersonChange] = {
     val spark = lines.sparkSession
     import spark.implicits._
-    lines
-      .select(from_json(col("value"), envelope).as("e"))
-      .filter(col("e").isNotNull && col("e.op").isin("c", "u", "d", "r"))
-      .filter(col("e.source.table") === "person")
+    ChangeSource.decode(lines, envelope)
+      .filter(col("op").isin("c", "u", "d", "r"))
+      .filter(col("source.table") === "person")
       .select(
-        col("e.source.lsn").as("lsn"),
-        when(col("e.op") === "d", "D")
-          .when(col("e.op") === "u", "U")
+        col("source.lsn").as("lsn"),
+        when(col("op") === "d", "D")
+          .when(col("op") === "u", "U")
           .otherwise("I").as("action"), // c and r are both inserts
-        coalesce(col("e.after.id"), col("e.before.id")).as("id"),
-        col("e.after.name").as("name"),
-        col("e.after.uid").as("uid"),
-        col("e.after.score").as("score"),
-        timestamp_micros(col("e.after.created_at")).as("created_at"))
+        coalesce(col("after.id"), col("before.id")).as("id"),
+        col("after.name").as("name"),
+        col("after.uid").as("uid"),
+        col("after.score").as("score"),
+        timestamp_micros(col("after.created_at")).as("created_at"))
       .filter(col("id").isNotNull)
       .as[PersonChange]
   }

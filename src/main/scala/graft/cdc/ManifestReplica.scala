@@ -166,10 +166,10 @@ object ManifestReplica {
   private val StaleClaimMs = 30000L
 
   /** Cross-process exclusive create — the commit protocol's one true
-    * CAS primitive (round-6: replaces the check-then-act
-    * `!exists && rename`, which POSIX rename made a silent lost-update
-    * across processes). Local FS: `File.createNewFile`, documented
-    * atomic (O_EXCL). HDFS-like stores: `create(overwrite = false)`,
+    * CAS primitive. A check-then-act `!exists && rename` would not do:
+    * POSIX rename replaces an existing target, so two processes could
+    * both pass the check and one commit would silently vanish. Local
+    * FS: `File.createNewFile`, documented atomic (O_EXCL). HDFS-like stores: `create(overwrite = false)`,
     * an atomic namespace operation. S3-class stores have no conditional
     * create through the generic FileSystem API — a deployment there
     * must either plug a conditional-PUT implementation into this seam
@@ -223,8 +223,8 @@ object ManifestReplica {
       val lockPath = java.nio.file.Paths.get(
         root.toUri.getPath, s".reclaim-v$v.lock")
       try {
-        // ONE channel per lock path per JVM, cached and NEVER closed
-        // (r6 review): per the FileLock javadoc, closing ANY channel on
+        // ONE channel per lock path per JVM, cached and NEVER closed:
+        // per the FileLock javadoc, closing ANY channel on
         // the file releases every lock this JVM holds on it — so a
         // same-JVM loser's close would silently drop the holder's lock
         // mid-reclaim and let another process in. The cache is bounded
@@ -289,12 +289,12 @@ object ManifestReplica {
       // are SERIALIZED by withReclaimLock and re-check staleness under
       // it: a marker's mtime only moves forward through a reclaim, so
       // a fresh marker here means we raced a completed reclaim and must
-      // not touch it. (The r6 first cut renamed the stale marker aside
-      // on a PRE-lock mtime read — two racing reclaimers could
-      // leapfrog, one stealing the other's fresh re-claim; the race
-      // spec caught it.) Between our delete and claim a brand-new
-      // claimant can still slip in — then ITS exclusive create wins and
-      // ours fails: either way the version is awarded at most once.
+      // not touch it. (Renaming the stale marker aside on a PRE-lock
+      // mtime read instead would let two racing reclaimers leapfrog,
+      // one stealing the other's fresh re-claim.) Between our delete
+      // and claim a brand-new claimant can still slip in — then ITS
+      // exclusive create wins and ours fails: either way the version is
+      // awarded at most once.
       isStale && { fs.delete(marker, false); claim() }
     })
     if (!claimed) return false
@@ -361,11 +361,11 @@ object ManifestReplica {
               // Claim markers outlive their manifest by one extra
               // history window: a committer stalled between claim and
               // rename must still find (or miss) its marker when it
-              // wakes — trimming the marker with the manifest let a
-              // long-stalled committer rename its tmp onto the freed
-              // version number, resurrecting a bogus old version
-              // (r6 advice). tryCommit's pre-rename marker re-check is
-              // the second line of defense for stalls past BOTH windows.
+              // wakes — trimming the marker with the manifest would let
+              // a long-stalled committer rename its tmp onto the freed
+              // version number, resurrecting a bogus old version.
+              // tryCommit's pre-rename marker re-check is the second
+              // line of defense for stalls past BOTH windows.
               fs.listStatus(root).foreach { st =>
                 val n = st.getPath.getName
                 if (n.startsWith(ManifestPrefix) &&
@@ -728,25 +728,20 @@ object ManifestReplica {
   }
 
   /** The merge-on-read summaries `m` names: its bucket generations ∪
-    * its deltas, folded to one row per key (tombstones included). With
-    * no deltas the generations already hold one row per key, so the
-    * read is a pure scan. */
+    * its deltas, folded to one row per key (tombstones included), the
+    * base pruned by a pushed key filter under the manifest's modulus
+    * ([[Replicate.mergeOnRead]]; none recorded: no pruning). */
   private[cdc] def readAt(spark: SparkSession, dir: String, m: Manifest,
-      s: Shape): DataFrame = {
-    val base =
-      if (m.buckets.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.baseSchema)
-      else spark.read.schema(s.baseSchema)
-        .parquet(m.buckets.keys.toSeq.sorted.map(m.bucketDir(dir, _)): _*)
-    if (m.deltas.isEmpty) base
-    else {
-      val deltas = spark.read.schema(s.deltaSchema)
-        .parquet(m.deltas.toSeq.sorted.map(m.deltaDir(dir, _)): _*)
-        .select(s.baseSchema.fieldNames.map(col).toSeq: _*)
-      combineSummaries(base.unionAll(deltas), Seq(s.key))
-    }
-  }
+      s: Shape): DataFrame =
+    Replicate.mergeOnRead(spark, s, bucketPaths(m, dir, m.buckets.keys),
+      Some(m.mod).filter(_ > 0), deltaPaths(m, dir))
+
+  private def bucketPaths(m: Manifest, dir: String, bs: Iterable[Int])
+      : Map[Int, Path] =
+    bs.map(b => b -> new Path(m.bucketDir(dir, b))).toMap
+
+  private def deltaPaths(m: Manifest, dir: String): Seq[Path] =
+    m.deltas.toSeq.sorted.map(id => new Path(m.deltaDir(dir, id)))
 
   /** Concurrent-task cap for BACKGROUND folds: FAIR pool weights share
     * slots only as tasks FINISH — a 256-task merge launched into a
@@ -779,19 +774,13 @@ object ManifestReplica {
     val (_, m) = readManifest(fs, root)
     checkMod(m, numBuckets, "compact")
     if (m.deltas.isEmpty) return
-    val deltas = spark.read.schema(s.deltaSchema)
-      .parquet(m.deltas.toSeq.sorted.map(m.deltaDir(dir, _)): _*)
+    val deltas = ReplicaIndex.deltas(spark, s, deltaPaths(m, dir))
     // bounded by numBuckets (thousands at 100 TB): driver-side is fine,
     // and it is read off the O(pending batches) deltas, never the base
     val touched = deltas.select(BucketCol).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    val existing = touched.filter(m.buckets.contains)
-    val baseTouched =
-      if (existing.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.baseSchema)
-      else spark.read.schema(s.baseSchema)
-        .parquet(existing.map(m.bucketDir(dir, _)): _*)
+    val baseTouched = ReplicaIndex.base(spark, s,
+      bucketPaths(m, dir, touched.filter(m.buckets.contains)), None)
     val gen = m.gen + 1
     val cols = s.deltaSchema.fieldNames.map(col).toSeq
     val merged = combineSummaries(
@@ -851,8 +840,8 @@ object ManifestReplica {
       val (_, m) = readManifest(fs, root)
       checkMod(m, numBuckets, "vacuum")
       if (m.buckets.nonEmpty) {
-      val alive = spark.read.schema(s.baseSchema)
-        .parquet(m.buckets.keys.toSeq.sorted.map(m.bucketDir(dir, _)): _*)
+      val alive = ReplicaIndex.base(spark, s,
+          bucketPaths(m, dir, m.buckets.keys), None)
         .filter(col("first_ins").isNotNull)
         .withColumn(BucketCol, s.bucketOf(numBuckets))
         .repartition(numBuckets, col(BucketCol))
@@ -933,10 +922,10 @@ object ManifestReplica {
     }
   }
 
-  /** Reclaim everything NO retained manifest version names (round-6:
-    * retention-aware, the Delta/Iceberg VACUUM horizon — r5's gc kept
-    * only the newest version's files, collapsing the advertised
-    * time-travel window on first use). Kept live:
+  /** Reclaim everything NO retained manifest version names — the
+    * Delta/Iceberg VACUUM horizon: keeping only the newest version's
+    * files would collapse the time-travel window on first use. Kept
+    * live:
     *  - every bucket generation any retained manifest names
     *    ([[readReplicaAt]] must serve every version [[versions]] lists);
     *  - every delta dir a retained manifest names, plus every delta id

@@ -27,7 +27,7 @@ final case class TableSpec(
   *
   * Design (Spark-first, one scan per trigger):
   *  - **Parse once, route N ways.** [[parseAll]] decodes the wal2json
-  *    envelope in one codegen'd projection into a GENERIC change row —
+  *    envelope once per line into a GENERIC change row —
   *    `(tbl, lsn, action, key STRING, img JSON-string, created_at)` —
   *    for every declared table at once. The per-trigger fan-out caches
   *    that parsed batch and filters per table; the raw text is scanned
@@ -75,7 +75,7 @@ object MultiTable {
     StructField("last_d_lsn", LongType)))
 
   /** The generic summaries' storage shape, keyed on the string key. */
-  private[cdc] val MtShape = Replicate.Shape(MtDeltaSchema, "key",
+  private[graft] val MtShape = Replicate.Shape(MtDeltaSchema, "key",
     n => pmod(hash(col("key")), lit(n)))
 
   private[graft] val MtBaseSchema = MtShape.baseSchema
@@ -86,22 +86,21 @@ object MultiTable {
     s"$root/${spec.table}"
 
   /** Decode raw wal2json lines into generic change rows for ALL declared
-    * tables in one narrow codegen'd stage: no shuffle, no per-table
-    * rescan. Unknown tables and malformed lines drop here (the F2
-    * routing filter, generalized from `= "person"` to the declared
-    * set). */
+    * tables in one narrow stage, each line decoded once
+    * ([[ChangeSource.decode]]): no shuffle, no per-table rescan.
+    * Unknown tables and malformed lines drop here (the F2 routing
+    * filter, generalized from `= "person"` to the declared set). */
   def parseAll(lines: DataFrame, specs: Seq[TableSpec]): DataFrame = {
     import Wal2JsonSchema._
-    routeDecoded(lines
-      .select(from_json(col("value"), envelope).as("c"))
-      .filter(col("c").isNotNull && col("c.action").isin("I", "U", "D"))
+    routeDecoded(ChangeSource.decode(lines, envelope)
+      .filter(col("action").isin("I", "U", "D"))
       .select(
-        col("c.table").as("tbl"),
-        col("c.lsn").as("lsn"),
-        col("c.action").as("action"),
-        map_from_arrays(col("c.columns.name"), col("c.columns.value"))
+        col("table").as("tbl"),
+        col("lsn"),
+        col("action"),
+        map_from_arrays(col("columns.name"), col("columns.value"))
           .as("cols"),
-        map_from_arrays(col("c.identity.name"), col("c.identity.value"))
+        map_from_arrays(col("identity.name"), col("identity.value"))
           .as("ident")),
       specs, to_timestamp(_, tsFormat))
   }
@@ -126,17 +125,15 @@ object MultiTable {
         StructField("lsn", LongType),
         StructField("schema", StringType),
         StructField("table", StringType))))))
-    routeDecoded(lines
-      .select(from_json(col("value"), env).as("e"))
-      .filter(col("e").isNotNull &&
-        col("e.op").isin("c", "u", "d", "r"))
+    routeDecoded(ChangeSource.decode(lines, env)
+      .filter(col("op").isin("c", "u", "d", "r"))
       .select(
-        col("e.source.table").as("tbl"),
-        col("e.source.lsn").as("lsn"),
-        when(col("e.op") === "d", "D")
-          .when(col("e.op") === "u", "U")
+        col("source.table").as("tbl"),
+        col("source.lsn").as("lsn"),
+        when(col("op") === "d", "D")
+          .when(col("op") === "u", "U")
           .otherwise("I").as("action"), // c and r are both inserts
-        col("e.after").as("cols"), col("e.before").as("ident")),
+        col("after").as("cols"), col("before").as("ident")),
       specs, c => timestamp_micros(c.cast(LongType)))
   }
 

@@ -54,7 +54,15 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   *    the listing already holds, which the idempotent algebra absorbs,
   *    while the reverse order could pair an old generation with a
   *    delta list that already dropped what it lacks. With no pending
-  *    deltas the read is a pure scan + liveness filter.
+  *    deltas the read is a pure scan + liveness filter. The base scans
+  *    through a [[ReplicaIndex]] that maps each bucket to its newest
+  *    generation and lists a dir only when a scan selects it: a filter
+  *    `id = k` (or `IN`) pushed into the read reaches that scan through
+  *    the fold, which groups by key, and the index keeps only the
+  *    buckets of those literals under the `_layout` modulus — a point
+  *    lookup reads one bucket plus the pending deltas, and the result
+  *    is the same as an unpruned read's. Any other filter reads every
+  *    bucket.
   *  - **Reclamation is one fold late.** Each fold first deletes what
   *    the PREVIOUS fold superseded — older generations, emptied-bucket
   *    markers, consumed deltas, stray stage dirs of a killed fold —
@@ -168,36 +176,48 @@ object Replicate {
           s"replica $base laid out with numBuckets=$raced, caller passed $numBuckets")
       else {
         val p = new Path(base, LayoutFile)
-        if (fs.exists(p)) {
-          val in = fs.open(p)
-          val n = try new String(in.readAllBytes(), "UTF-8").trim.toInt
-            finally in.close()
-          check(n == numBuckets,
+        readLayout(fs, base) match {
+          case Some(n) => check(n == numBuckets,
             s"replica $base laid out with numBuckets=$n, caller passed $numBuckets")
-        } else {
-          // adopt — but never blindly: existing bucket dirs prove the
-          // real modulus' LOWER bound, and a dir with id >= the adopted
-          // count means the caller's modulus is provably wrong — stale
-          // higher buckets would hold duplicate keys the incremental
-          // compaction never rewrites. One cheap one-time LIST.
-          val existing = gensOf(listRoot(fs, base)).map(_.bucket)
-          check(existing.forall(_ < numBuckets),
-            s"replica $base has bucket dir id_bucket=${existing.max} — " +
-              s"cannot adopt numBuckets=$numBuckets")
-          // tmp+rename like every other small-file commit here, so a
-          // crash mid-write can never leave an empty marker that
-          // poisons later startups
-          val tmp = new Path(base, s".$LayoutFile.tmp")
-          val out = fs.create(tmp, true)
-          try out.write(numBuckets.toString.getBytes("UTF-8"))
-          finally out.close()
-          fs.delete(p, false)
-          check(fs.rename(tmp, p), s"commit layout marker $p")
+          case None =>
+            // adopt — but never blindly: existing bucket dirs prove the
+            // real modulus' LOWER bound, and a dir with id >= the adopted
+            // count means the caller's modulus is provably wrong — stale
+            // higher buckets would hold duplicate keys the incremental
+            // compaction never rewrites. One cheap one-time LIST.
+            val existing = gensOf(listRoot(fs, base)).map(_.bucket)
+            check(existing.forall(_ < numBuckets),
+              s"replica $base has bucket dir id_bucket=${existing.max} — " +
+                s"cannot adopt numBuckets=$numBuckets")
+            // tmp+rename like every other small-file commit here, so a
+            // crash mid-write can never leave an empty marker that
+            // poisons later startups
+            val tmp = new Path(base, s".$LayoutFile.tmp")
+            val out = fs.create(tmp, true)
+            try out.write(numBuckets.toString.getBytes("UTF-8"))
+            finally out.close()
+            fs.delete(p, false)
+            check(fs.rename(tmp, p), s"commit layout marker $p")
         }
         layoutSeen.put(base.toString, numBuckets)
       }
     }
   }
+
+  /** The bucket count in `base`'s layout marker, if it has one. */
+  private def readLayout(fs: FileSystem, base: Path): Option[Int] =
+    try {
+      val in = fs.open(new Path(base, LayoutFile))
+      Some(try new String(in.readAllBytes(), "UTF-8").trim.toInt
+        finally in.close())
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** The bucket count a reader prunes with: the cached layout, else the
+    * marker (never cached here, so a truncate's reset cannot race a
+    * reader into caching a stale count). */
+  private def layoutOf(fs: FileSystem, base: Path): Option[Int] =
+    Option(layoutSeen.get(base.toString)).map(_.intValue)
+      .orElse(readLayout(fs, base))
 
   /** Forget a replica's cached/persisted layout (snapshot = full
     * overwrite, truncate = fresh start — both may re-bucket). */
@@ -224,13 +244,13 @@ object Replicate {
     * the key column, and the key→bucket expression for a bucket count.
     * The typed path uses [[PersonShape]]; [[MultiTable]] declares the
     * generic (key, JSON image) twin. */
-  private[cdc] final case class Shape(deltaSchema: StructType, key: String,
+  private[graft] final case class Shape(deltaSchema: StructType, key: String,
       bucketOf: Int => Column) {
     val baseSchema: StructType =
       StructType(deltaSchema.fields.filterNot(_.name == BucketCol))
   }
 
-  private[cdc] val PersonShape = Shape(DeltaSchema, "id",
+  private[graft] val PersonShape = Shape(DeltaSchema, "id",
     n => pmod(col("id"), lit(n)).cast("int"))
 
   /** Base-bucket file schema: identical to the deltas minus the bucket
@@ -475,19 +495,9 @@ object Replicate {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def scanGens(spark: SparkSession, gens: Iterable[Gen],
-      schema: StructType): DataFrame = {
-    val dirs = gens.filter(_.isDir).map(_.path.toString).toSeq.sorted
-    if (dirs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(dirs: _*)
-  }
-
-  private def scanDeltas(spark: SparkSession, dirs: Seq[Path], s: Shape)
-      : DataFrame =
-    spark.read.schema(s.deltaSchema).parquet(dirs.map(_.toString): _*)
-      .select(s.deltaSchema.fieldNames.map(col).toSeq: _*)
+  /** Bucket id → dir of the parquet generations among `gens`. */
+  private def dirsOf(gens: Iterable[Gen]): Map[Int, Path] =
+    gens.filter(_.isDir).map(g => g.bucket -> g.path).toMap
 
   /** Fold per-key summaries (one row per key PER INPUT — deltas and/or
     * base) into one summary row per key. The algebra is commutative,
@@ -526,10 +536,24 @@ object Replicate {
       : DataFrame = {
     val (fs, root) = fsOf(spark, dir)
     val deltaDirs = listDeltas(fs, new Path(root, DeltaDirName))
-    val base = scanGens(spark, newest(gensOf(listRoot(fs, root))).values,
-      s.baseSchema)
-    if (deltaDirs.isEmpty) base
-    else combineSummaries(base.unionAll(scanDeltas(spark, deltaDirs, s)
+    val gens = dirsOf(newest(gensOf(listRoot(fs, root))).values)
+    // the modulus is read after the listing: a re-snapshot that
+    // re-buckets deletes every generation listed before it
+    mergeOnRead(spark, s, gens, layoutOf(fs, root), deltaDirs)
+  }
+
+  /** Both protocols' merge-on-read: the committed bucket dirs ∪ the
+    * pending delta dirs, folded to one row per key. Both scan through
+    * [[ReplicaIndex]], so a key filter pushed into the result prunes
+    * the base to its keys' buckets under modulus `mod` (None: no
+    * pruning). With no deltas the buckets already hold one row per key,
+    * so the read is a pure scan. */
+  private[cdc] def mergeOnRead(spark: SparkSession, s: Shape,
+      buckets: Map[Int, Path], mod: Option[Int], deltas: Seq[Path])
+      : DataFrame = {
+    val base = ReplicaIndex.base(spark, s, buckets, mod)
+    if (deltas.isEmpty) base
+    else combineSummaries(base.unionAll(ReplicaIndex.deltas(spark, s, deltas)
       .select(s.baseSchema.fieldNames.map(col).toSeq: _*)), Seq(s.key))
   }
 
@@ -760,12 +784,13 @@ object Replicate {
     val dRoot = new Path(root, DeltaDirName)
     val deltaDirs = listDeltas(fs, dRoot)
     val deltas = if (deltaDirs.isEmpty) None
-      else Some(scanDeltas(spark, deltaDirs, s))
+      else Some(ReplicaIndex.deltas(spark, s, deltaDirs))
     val touched = deltas.fold(Set.empty[Int])(
       _.select(BucketCol).distinct().collect().map(_.getInt(0)).toSet)
     val cover = if (vacuum) touched ++ live.keySet else touched
     if (cover.nonEmpty) {
-      val base = scanGens(spark, cover.flatMap(live.get), s.baseSchema)
+      val base = ReplicaIndex.base(spark, s,
+          dirsOf(cover.flatMap(live.get)), None)
         .withColumn(BucketCol, s.bucketOf(numBuckets))
         .select(s.deltaSchema.fieldNames.map(col).toSeq: _*)
       val merged = combineSummaries(deltas.fold(base)(base.unionAll),

@@ -407,6 +407,165 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges <= 1, s"unexpected extra exchange:\n$s")
   }
 
+  test("point lookup reads one bucket: the pushed key filter prunes the base scan on both commit protocols") {
+    import java.nio.file.{Files, Paths}
+    import java.sql.Timestamp
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    import org.apache.spark.sql.functions.{col, lit}
+    import scala.jdk.CollectionConverters._
+    import graft.cdc.{ManifestReplica, PersonChange, PersonRow, Replicate}
+    import spark.implicits._
+    val n = 8
+    val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
+    val snap = (0 until 200).map(i => PersonRow(i, s"n$i", s"u$i", i, t0))
+    // two pending deltas: updates, deletes, and a key the snapshot lacks
+    val batches = Seq(
+      (1 to 40).map(i => PersonChange(1000L + i, "U", i * 3, Some(s"x$i"),
+        Some(s"v$i"), Some(i), None)),
+      (1 to 20).map(i => PersonChange(2000L + i, "D", i * 5, None, None,
+        None, None)) :+
+        PersonChange(3000L, "I", 501, Some("new"), Some("nu"), Some(7),
+          Some(t0)))
+    def bucket(k: Int) = ((k % n) + n) % n
+    def filesIn(dir: String): Set[String] = {
+      val st = Files.list(Paths.get(dir))
+      try st.iterator().asScala.map(_.getFileName.toString)
+        .filterNot(f => f.startsWith(".") || f.startsWith("_"))
+        .map(f => Paths.get(dir, f).toString).toSet
+      finally st.close()
+    }
+    // the files the lookup's scans select, off the physical plan AQE
+    // starts from (its final plan drops scans whose stage came back
+    // empty)
+    def filesRead(df: Dataset[_]): Set[String] = {
+      df.collect()
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      plan.collect {
+        case s: FileSourceScanExec => s
+      }.flatMap(_.inputRDD.partitions.toSeq.flatMap {
+        case p: FilePartition =>
+          p.files.map(f => new Path(f.filePath.toString).toUri.getPath)
+      }).toSet
+    }
+    // per protocol: read, the newest generation dir of each bucket, and
+    // the pending delta dirs
+    final case class Proto(name: String, read: () => Dataset[PersonRow],
+        bucketDirs: () => Map[Int, String], deltaDirs: () => Seq[String])
+    val rDir = java.nio.file.Files.createTempDirectory("plan-lookup-r").toString
+    Replicate.snapshot(spark, snap.toDS(), rDir, numBuckets = n)
+    batches.zipWithIndex.foreach { case (b, i) =>
+      Replicate.applyBatch(spark, b.toDS(), rDir, numBuckets = n,
+        batchId = i.toLong, compactEvery = 100)
+    }
+    val mDir = java.nio.file.Files.createTempDirectory("plan-lookup-m").toString
+    ManifestReplica.snapshot(spark, snap.toDS(), mDir, numBuckets = n)
+    batches.zipWithIndex.foreach { case (b, i) =>
+      ManifestReplica.applyBatch(spark, b.toDS(), mDir, numBuckets = n,
+        batchId = i.toLong, compactEvery = 100)
+    }
+    def manifest = {
+      val root = new Path(mDir)
+      ManifestReplica.readManifestAt(
+        root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
+        ManifestReplica.versions(spark, mDir).max)
+    }
+    val protos = Seq(
+      Proto("rename", () => Replicate.readReplica(spark, rDir),
+        () => RenameLayout.newest(rDir).map { case (b, g) =>
+          b -> g.path.toString },
+        () => RenameLayout.pendingDeltas(rDir)
+          .map(id => Paths.get(rDir, ".__delta", s"batch=$id").toString)),
+      Proto("manifest", () => ManifestReplica.readReplica(spark, mDir),
+        () => manifest.buckets.keys.map(b => b -> manifest.bucketDir(mDir, b))
+          .toMap,
+        () => manifest.deltas.toSeq.map(manifest.deltaDir(mDir, _))))
+    protos.foreach { p => withClue(s"${p.name}: ") {
+      val deltaFiles = p.deltaDirs().flatMap(filesIn).toSet
+      assert(p.deltaDirs().size === 2, "the fixture needs pending deltas")
+      val bucketFiles = p.bucketDirs().map { case (b, d) => b -> filesIn(d) }
+      assert(bucketFiles.size === n)
+      val allBase = bucketFiles.values.flatten.toSet
+      val everything = p.read().collect().toSeq
+      // live, deleted (5), updated (3 = 1*3), inserted (501), never seen
+      Seq(7, 5, 3, 501, 777).foreach { k =>
+        val lookup = p.read().filter(col("id") === k)
+        assert(filesRead(lookup) === bucketFiles(bucket(k)) ++ deltaFiles,
+          s"lookup of $k must read bucket ${bucket(k)} and the deltas only")
+        assert(lookup.collect().toSeq === everything.filter(_.id == k))
+      }
+      val in = p.read().filter(col("id").isin(9, 12))
+      assert((filesRead(in) -- deltaFiles).map(new Path(_).getParent)
+        .size <= 2, "IN (a, b) reads at most two base buckets")
+      assert(in.collect().sortBy(_.id).toSeq ===
+        everything.filter(r => r.id == 9 || r.id == 12).sortBy(_.id))
+      // a widening cast never reaches the index: Spark's optimizer
+      // unwraps `cast(id as bigint) = 7L` to `id = 7`, an int literal
+      // of the key's own type, so the exact one-bucket prune applies
+      val widened = p.read().filter(col("id") === 7L)
+      assert(filesRead(widened) === bucketFiles(bucket(7)) ++ deltaFiles)
+      assert(widened.collect().toSeq === everything.filter(_.id == 7))
+      // shapes that must NOT prune: a non-key column, a cast key, a null
+      Seq[(String, Dataset[PersonRow] => Dataset[PersonRow],
+          PersonRow => Boolean)](
+        ("score = 7", _.filter(col("score") === 7), _.score == 7),
+        ("string(id) = '7'", _.filter(col("id").cast("string") === "7"),
+          _.id == 7),
+        ("id <=> null", _.filter(col("id") <=> lit(null)), _ => false)
+      ).foreach { case (what, f, want) =>
+        assert(filesRead(f(p.read())) === allBase ++ deltaFiles,
+          s"$what must read every bucket")
+        assert(f(p.read()).collect().sortBy(_.id).toSeq ===
+          everything.filter(want).sortBy(_.id), what)
+      }
+    } }
+    // a bucket dir is listed only when a scan selects it, and a vanished
+    // one fails the scan instead of reading as an empty bucket
+    val pruned = Replicate.readReplica(spark, rDir).filter(col("id") === 7)
+    val full = Replicate.readReplica(spark, rDir)
+    val other = RenameLayout.newest(rDir)(bucket(8)).path
+    scala.reflect.io.Directory(other.toFile).deleteRecursively()
+    assert(pruned.collect().map(_.id).toSeq === Seq(7))
+    val e = intercept[Exception](full.collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException]), e.toString)
+  }
+
+  test("change parsers decode each line once: no from_json copied into pushed filters") {
+    import graft.cdc.{ChangeGen, ChangeSource, DebeziumSource, MultiTable}
+    import spark.implicits._
+    // file-backed lines, as the stream reads them (a local relation
+    // would be evaluated away at planning)
+    def linesOf(lines: Seq[String]) = {
+      val dir = java.nio.file.Files.createTempDirectory("plan-parse")
+      java.nio.file.Files.write(dir.resolve("lines.json"),
+        lines.mkString("\n").getBytes("UTF-8"))
+      spark.read.text(dir.toString)
+    }
+    val wal = linesOf(ChangeGen.ops(seed = 3L, n = 50)
+      .map(ChangeGen.toJsonLine))
+    val dbz = linesOf(Seq("""{"before":null,"after":{"id":1,"name":"a","uid":"u","score":2,"created_at":0},"op":"c","ts_ms":0,"source":{"lsn":1,"schema":"public","table":"person"}}"""))
+    Seq(
+      "ChangeSource.parse" -> ChangeSource.parse(wal).toDF(),
+      "MultiTable.parseAll" -> MultiTable.parseAll(wal, MtTestSpecs.both),
+      "MultiTable.parseAllDebezium" ->
+        MultiTable.parseAllDebezium(dbz, MtTestSpecs.both),
+      "DebeziumSource.parse" -> DebeziumSource.parse(dbz).toDF()
+    ).foreach { case (name, df) =>
+      val decodes = "from_json".r
+        .findAllIn(planOf(df).toString.split("== Initial Plan ==").head)
+        .size
+      assert(decodes === 1, s"$name decodes a line $decodes times:\n${planOf(df)}")
+      assert(df.count() > 0, name)
+    }
+  }
+
   test("SRP bucket signatures are computed shuffle-free") {
     val s = planString(Similarity.srpBuckets(Tables(spark, sf, "embeddings")))
     assert(!s.contains("Exchange"),

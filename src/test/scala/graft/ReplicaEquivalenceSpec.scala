@@ -98,6 +98,28 @@ class ReplicaEquivalenceSpec extends AnyFunSuite {
     assert(gotManifest === want, "manifest replica diverged from replay")
     assert(gotState === want, "state-store replica diverged from replay")
 
+    // point lookups, which prune the base scan to the key's bucket, on
+    // both file protocols: sampled live keys, deleted keys, and keys no
+    // change ever named
+    import org.apache.spark.sql.functions.col
+    val seen = sharedBatches.flatten.map(_.id).toSet
+    val sample = new scala.util.Random(5L)
+    val probes =
+      sample.shuffle(want.keys.toSeq.sorted).take(8) ++
+        sample.shuffle((seen -- want.keys).toSeq.sorted).take(8) ++
+        Seq(-1, 0, 15000, Seeds * 10000 + 9999).filterNot(seen)
+    assert(probes.size === 20)
+    probes.foreach { k =>
+      Seq("rename" -> (() => Replicate.readReplica(spark, rDir)),
+        "manifest" -> (() => ManifestReplica.readReplica(spark, mDir))
+      ).foreach { case (name, read) =>
+        val got = read().filter(col("id") === k).collect()
+          .map(r => r.id -> ((r.name, r.uid, r.score))).toMap
+        assert(got === want.get(k).map(k -> _).toMap,
+          s"$name point lookup of $k diverged from replay")
+      }
+    }
+
     // JDBC sink (destructive apply; batches arrive in op order, which
     // the contiguous random splits preserve) — the fourth single-table
     // path joins the same schedules
@@ -124,6 +146,41 @@ class ReplicaEquivalenceSpec extends AnyFunSuite {
       } finally c.close()
     }
     assert(gotJdbc === want, "JDBC replica diverged from replay")
+  }
+
+  test("bucket-of-literal evaluator agrees with the dir every snapshot key was written to") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
+      EqualTo, Literal}
+    import org.apache.spark.sql.types.{IntegerType, StringType}
+    val n = 8
+    val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    // negative keys too: the bucket expression must match pmod's sign
+    val rows = ChangeGen.replay(ChangeGen.ops(7L, n = 3000)).values.toSeq ++
+      (1 to 50).map(i => PersonRow(-i * 7, s"neg$i", s"u$i", i, t0))
+    def check(dir: String, s: Replicate.Shape, key: AttributeReference)
+        : Int = {
+      val bucketsOf = ReplicaIndex.keyBuckets(spark, s, n)
+      val dirs = RenameLayout.newest(dir)
+      assert(dirs.size === n, dir)
+      dirs.toSeq.map { case (b, g) =>
+        val keys = spark.read.parquet(g.path.toString).select(key.name)
+          .collect().map(_.get(0))
+        keys.foreach { k =>
+          assert(bucketsOf(EqualTo(key, Literal(k))) === Some(Set(b)),
+            s"key $k was written to bucket $b")
+        }
+        keys.length
+      }.sum
+    }
+    val rDir = Files.createTempDirectory("eq-bucket-person").toString
+    Replicate.snapshot(spark, rows.toDS(), rDir, numBuckets = n)
+    assert(check(rDir, Replicate.PersonShape,
+      AttributeReference("id", IntegerType)()) === rows.size)
+    val mtRoot = Files.createTempDirectory("eq-bucket-mt").toString
+    MultiTable.snapshot(spark, rows.toDF(), mtRoot, MtTestSpecs.person,
+      numBuckets = n)
+    assert(check(s"$mtRoot/person", MultiTable.MtShape,
+      AttributeReference("key", StringType)()) === rows.size)
   }
 
   test("property: all four MULTI-TABLE paths equal replay over 30 seeds") {
