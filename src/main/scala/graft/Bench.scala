@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.cdc.{ChangeGen, ChangeSource, ManifestReplica, Replicate}
 import graft.streaming.BatchMetricsListener
@@ -53,35 +52,6 @@ import graft.streaming.BatchMetricsListener
   * the named keys for targeted A/B timing.
   */
 object Bench {
-  /** FAIR pool shares for the latency-sensitive session: the trigger's
-    * jobs run in the default pool (minShare 24 of 32 slots, weight 8),
-    * the async CDC fold in "graft-compact" (weight 1, no minShare) —
-    * the fold takes only slack slots, so its lumpy cost stretches the
-    * FOLD, not the trigger latency envelope. The same file is what a
-    * production deployment ships; pool names are fixed in Replicate /
-    * ManifestReplica. */
-  private def fairSchedulerXml(): String = {
-    val f = Files.createTempFile("graft-fair", ".xml")
-    // read by the scheduler for the session's whole life → JVM-exit
-    // cleanup, not the pre-line sweep
-    f.toFile.deleteOnExit()
-    Files.writeString(f,
-      """<?xml version="1.0"?>
-        |<allocations>
-        |  <pool name="default">
-        |    <schedulingMode>FIFO</schedulingMode>
-        |    <weight>8</weight>
-        |    <minShare>24</minShare>
-        |  </pool>
-        |  <pool name="graft-compact">
-        |    <schedulingMode>FIFO</schedulingMode>
-        |    <weight>1</weight>
-        |    <minShare>0</minShare>
-        |  </pool>
-        |</allocations>""".stripMargin)
-    f.toString
-  }
-
   /** Temp-dir registry (VERDICT r14 #1). Every `createTempDirectory`
     * in this main routes through here, and `sweepTempDirs()` removes
     * them all before the result line prints. A full-surface run makes
@@ -138,39 +108,9 @@ object Bench {
         .split("\\s+").take(3).toSeq.map(_.toDouble)
       catch { case _: Throwable => Seq(-1.0, -1.0, -1.0) }
     val loadStart = loadAvg()
-    // the driver contract benches at local[32]; env overrides for dev
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // FAIR so the async CDC fold's jobs (pool "graft-compact")
-      // time-slice with the trigger's instead of queueing ahead of
-      // them — under FIFO a 256-bucket fold's jobs occupy every task
-      // slot and its lumpy cost lands on the NEXT trigger's latency
-      // (the r8 100×-probe fold-epoch spikes). The allocation file
-      // pins the trigger pool's minShare/weight so the fold only
-      // consumes slack slots: equal-weight FAIR still halved the
-      // trigger's slots mid-fold (measured 2.5-3.5 s spikes).
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.scheduler.allocation.file", fairSchedulerXml())
-      // Whole-stage-codegen class cache (STATIC conf, so set here; r17
-      // optimization round, guide §1.2 step 3): the default caches 100
-      // generated classes while a full pass compiles ~10× that many
-      // distinct stages, so the untimed warm pass EVICTED ITSELF and
-      // every timed query recompiled its codegen from scratch —
-      // measured ~3 s of fixed overhead on a 50-document query
-      // (ml_lm_bigram at sf0.001). Sizing the cache to the workload's
-      // stage count is the production setting for any multi-query
-      // service; nothing about results or data is cached (same class
-      // of warmth as the JIT the warm pass already exists for).
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the driver contract benches at local[32]; env overrides for dev
+    val spark = GraftSession(defaultCpus = 32)
 
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
 
@@ -307,7 +247,7 @@ object Bench {
             spark.streams.removeListener(l)
             // in the finally: even on failure, never let an orphaned
             // daemon fold run on into the timed query phase
-            graft.cdc.ManifestReplica.awaitCompactions()
+            Replicate.awaitCompactions()
           }
           CdcRun(l.rowsPerSec, l.worstBatchSec,
             l.batches.count(_.inputRows > 0), l.processedRows,
@@ -482,7 +422,7 @@ object Bench {
             dirM, ckM, trigger = Trigger.AvailableNow(),
             numBuckets = 256, compactEvery = 4, compactAsync = true)
           try qM.awaitTermination() finally qM.stop()
-          ManifestReplica.awaitCompactions()
+          Replicate.awaitCompactions()
         } finally spark.streams.removeListener(lM)
         def timeReadM(): Double = {
           val t0 = System.nanoTime()
@@ -581,7 +521,7 @@ object Bench {
             dirMS, ckMS, trigger = Trigger.AvailableNow(),
             numBuckets = 64, compactEvery = 4, compactAsync = true)
           try qMS.awaitTermination() finally qMS.stop()
-          ManifestReplica.awaitCompactions()
+          Replicate.awaitCompactions()
         } finally spark.streams.removeListener(lMS)
         val hotShareMS = streamMS.count(_.id <= 10).toDouble / streamMS.size
         val bsMS = lMS.batches.filter(_.inputRows > 0)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only profiler for the shared maintain/build passes
   * (optimization rounds): replays Bench's exact warm-then-timed
@@ -20,16 +19,7 @@ object MaintainProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val which = if (args.length > 1) args(1) else "maint"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(defaultCpus = 32)
 
     val jobs = scala.collection.mutable.ArrayBuffer.empty[Job]
     val open = scala.collection.mutable.HashMap.empty[Int, Job]

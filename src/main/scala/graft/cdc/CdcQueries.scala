@@ -13,13 +13,14 @@ import graft.sql.Declared
   * log / snapshot) as parquet fixtures at fixed paths, and the oracle SQL
   * recomputes the same semantics over those fixtures via `read_parquet`
   * — last-writer-wins fold, created_at preservation, and the publication
-  * row-filter U→I/D transform, all in ANSI SQL (VERDICT r1 item 3).
+  * row-filter U→I/D transform, all in ANSI SQL, so an engine bug and
+  * an oracle bug would have to coincide to pass.
   */
 object CdcQueries {
   /** Fixture dir the oracle SQL reads back. The query functions (run by
     * Verify/Bench before the driver's DuckDB pass) write these files;
     * contents are deterministic in the seeds, so any run produces
-    * identical fixtures. PID-scoped (ADVICE r3): concurrent verify/bench
+    * identical fixtures. PID-scoped: concurrent verify/bench
     * runs never race on shared files, and an oracle run without a prior
     * Spark pass fails loudly on a missing dir instead of silently
     * comparing against a stale run's fixtures. The oracle SQL strings
@@ -470,7 +471,7 @@ object CdcQueries {
   private val mtSpecs = Seq(personSpecMt, accountSpecMt)
 
   /** Multi-table replication e2e, parameterized over the storage path
-    * (r5 VERDICT ask #3, extended round 6 to the full matrix): ONE
+    * (one declared row per multi-table cell of the matrix): ONE
     * interleaved change log carrying `person` and `account` rows fans
     * out to two independently-keyed replicas — person bootstrapped from
     * a snapshot, account purely from the stream (both bootstrap modes
@@ -623,8 +624,8 @@ object CdcQueries {
   private val jdbcStrPq = s"$FixtureDir/cdc_jdbc_stream.parquet"
 
   /** [[replicateE2e]]'s dataflow against a REAL SQL target over JDBC
-    * (S1's production form, previously documented-only — the Spark
-    * distribution ships embedded Derby, so the whole path executes
+    * (S1's production form — the Spark distribution ships embedded
+    * Derby, so the whole path executes
     * in-sandbox): bulk JDBC load → change stream → per-key summaries →
     * transactional prepared-statement apply ([[JdbcReplica]]) → final
     * table read back through the PARTITIONED `spark.read.jdbc` extract.
@@ -690,9 +691,9 @@ object CdcQueries {
     * ([[StatefulReplica]], flatMapGroupsWithState): the snapshot
     * bootstraps as an epoch-0 wave of lsn-0 inserts, the stream arrives
     * over real micro-batch boundaries, and the replica is the final
-    * live-key state read back from the emitted update stream — the
-    * driver-oracle signal the r6 verdict asked for on this cell (its
-    * only pin was the seeded equivalence property). */
+    * live-key state read back from the emitted update stream — so the
+    * oracle checks this cell too, not only the seeded equivalence
+    * property. */
   private val statefulE2e = Declared(
     "cdc_stateful_e2e",
     (s: SparkSession, _: String) => {
@@ -713,7 +714,7 @@ object CdcQueries {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import org.apache.spark.sql.functions.{col, lit, max_by, pmod, struct}
       val in = MemoryStream[PersonChange](s)
-      // Distributed sink (VERDICT r7 #2): each batch's update stream
+      // Distributed sink: each batch's update stream
       // lands as a hash-bucketed parquet APPEND — the same bucketed
       // layout the file replicas use — with the epoch stamped, and the
       // final replica materializes as a distributed last-update-per-key
@@ -773,7 +774,7 @@ object CdcQueries {
       import org.apache.spark.sql.functions.{col, hash, lit, max_by, pmod,
         struct}
       val in = MemoryStream[String](s)
-      // Distributed sink (VERDICT r7 #2, multi-table cell): per-batch
+      // Distributed sink (multi-table cell): per-batch
       // updates append into a per-table hash-bucketed layout — the mt
       // replica directory shape — and each table's replica materializes
       // as a distributed last-update-per-(table, key) fold. No
@@ -825,7 +826,7 @@ object CdcQueries {
 
   private val ivmStrPq = s"$FixtureDir/cdc_ivm_stream.parquet"
 
-  /** IVM-maintained aggregate as a declared oracle row (r8 verdict #6):
+  /** IVM-maintained aggregate as a declared oracle row:
     * the retraction stream ([[Ivm.deltas]] — `-old, +new` per key
     * transition) feeds a downstream parity → (count, sum(score)) view
     * maintained by PURE ADDITION over the delta log; the oracle fully
@@ -896,8 +897,8 @@ object CdcQueries {
   private val ivmjPStrPq = s"$FixtureDir/cdc_ivmj_person_stream.parquet"
   private val ivmjAStrPq = s"$FixtureDir/cdc_ivmj_account_stream.parquet"
 
-  /** Incrementally-maintained JOIN view as a declared oracle row (r10
-    * verdict #2): one interleaved two-table change log →
+  /** Incrementally-maintained JOIN view as a declared oracle row: one
+    * interleaved two-table change log →
     * [[Ivm.mtDeltas]] per-table full-image retraction deltas →
     * [[Ivm.applyJoinBatch]]'s delta-join maintenance
     * (dP ⋈ A_post ∪ P_pre ⋈ dA — the exact bilinear identity, so
@@ -1064,8 +1065,8 @@ object CdcQueries {
 
   /** Per-table manifest time travel — [[timeTravel]]'s prefix-dump
     * contract graduated to the MULTI-TABLE manifest protocol
-    * ([[ManifestMultiTable.readTableAt]], previously spec-only — r10
-    * verdict #8). Snapshot + five interleaved epochs commit per-table
+    * ([[ManifestMultiTable.readTableAt]]). Snapshot + five interleaved
+    * epochs commit per-table
     * manifest versions; each table is then read AS OF the version that
     * covers exactly the first THREE epochs, while the oracle's
     * ground-truth dumps contain ONLY each table's rows from those
@@ -1366,11 +1367,10 @@ object CdcQueries {
   private val svStreamPq = s"$FixtureDir/cdc_sv_stream.parquet"
   private val svSourcePq = s"$FixtureDir/cdc_sv_source.parquet"
 
-  /** The monitor's in-sync verdict as a declared oracle row (r10
-    * verdict #9) — the reference's own correctness oracle
-    * (pubsub/main.go:184-198: source count, target count,
-    * source-rows-passing-filter count, ✓/⟳ verdict), previously
-    * test-only ([[Monitor]]). One parity-filtered replication runs
+  /** The monitor's in-sync verdict as a declared oracle row — the
+    * reference's own correctness oracle (pubsub/main.go:184-198: source
+    * count, target count, source-rows-passing-filter count, ✓/⟳
+    * verdict), through [[Monitor]]. One parity-filtered replication runs
     * end-to-end; [[Monitor.status]] then compares the replica against
     * the full source state twice — once under the publication filter
     * (in sync: target == σ_filter(source)) and once without (syncing:

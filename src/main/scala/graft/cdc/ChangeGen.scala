@@ -75,7 +75,7 @@ object ChangeGen {
     }
   }
 
-  /** [[ops]] with a HOT-KEY skewed schedule (r10 verdict #4): the
+  /** [[ops]] with a HOT-KEY skewed schedule: the
     * first `hotKeys` ops insert the hot keys; afterwards each op
     * targets a hot key with probability `hotFrac` (always an UPDATE —
     * hot keys stay live so the skew persists for the whole run), else

@@ -2,15 +2,18 @@ package graft.cdc
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Parse wal2json v2 change lines into typed [[PersonChange]] rows.
   *
   * Reference dataflow: `pg_logical_slot_get_changes` → `json.Unmarshal` →
-  * route/filter → apply (replicator/main.go:159-193). Here the whole parse
-  * + pivot + filter is ONE narrow codegen'd stage — no shuffle until the
-  * keyed apply, so at 100 TB/day of change volume it scales linearly with
-  * executors reading the source partitions.
+  * route/filter → apply (replicator/main.go:159-193). Here the parse is
+  * narrow: one JSON decode per line ([[decode]], a `Generate` that runs
+  * outside whole-stage codegen), then the filter, pivot and typed
+  * projection as one whole-stage-codegen'd stage — no shuffle until the
+  * keyed apply, so at 100 TB/day of change volume it scales linearly
+  * with executors reading the source partitions.
   *
   * Malformed JSON lines parse to null and are dropped, mirroring the
   * reference's log-and-continue (replicator/main.go:186-188); count them
@@ -45,6 +48,17 @@ object ChangeSource {
       .load(dir)
   }
 
+  /** The one streaming driver every replica pipeline starts through:
+    * `input` runs as query `queryName`, checkpointed under
+    * `checkpointDir`, and each micro-batch goes to `apply` with its
+    * epoch id — the delta identity a crash replay reuses. */
+  private[cdc] def run[T](input: Dataset[T], queryName: String,
+      checkpointDir: String, trigger: Trigger)
+      (apply: (Dataset[T], Long) => Unit): StreamingQuery =
+    input.writeStream.queryName(queryName)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger).foreachBatch(apply).start()
+
   /** Lines that failed to parse (batch-side audit). */
   def malformedCount(spark: SparkSession, dir: String): Long =
     spark.read.text(dir)
@@ -65,9 +79,10 @@ object ChangeSource {
     * raw line gets a verdict — `malformed_json` (unparseable),
     * `bad_action` (action missing or ∉ I/U/D), `unknown_table` (routing
     * reject, replicator/main.go:191-193), `missing_id` (no PK in either
-    * image), or `ok`. One narrow codegen'd projection, no shuffle; a
-    * production pipeline writes the non-ok rows to a quarantine sink and
-    * feeds the `ok` rows to [[parse]]. */
+    * image), or `ok`. Two narrow projections (decode, verdict) that run
+    * outside whole-stage codegen, no shuffle; a production pipeline
+    * writes the non-ok rows to a quarantine sink and feeds the `ok` rows
+    * to [[parse]]. */
   def classify(lines: DataFrame): DataFrame = {
     val c = from_json(col("value"), quarantineSchema,
       Map("columnNameOfCorruptRecord" -> "_corrupt"))

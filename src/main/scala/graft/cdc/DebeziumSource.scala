@@ -18,9 +18,10 @@ import org.apache.spark.sql.types._
   *  - the after image carries the row; deletes carry only `before`
   *  - `source.lsn` is the commit LSN — our explicit ordering column
   *
-  * Same single narrow codegen stage as [[ChangeSource.parse]]: at
-  * production scale this runs map-side on the Kafka partitions with no
-  * shuffle before the keyed merge.
+  * Same narrow plan as [[ChangeSource.parse]] — one decode per line,
+  * then one whole-stage-codegen'd filter and projection: at production
+  * scale this runs map-side on the Kafka partitions with no shuffle
+  * before the keyed merge.
   */
 object DebeziumSource {
   private val rowStruct = StructType(Seq(

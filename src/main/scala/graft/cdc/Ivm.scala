@@ -63,9 +63,10 @@ object Ivm {
     * micro-batch folds to its old→new transition with
     * [[StatefulMultiTable]]'s exact replica semantics, emitted as
     * `-old, +new` full-image retraction deltas. This is the per-table
-    * retraction input delta-join view maintenance needs (r10 verdict
-    * #2) — [[StatefulMultiTable.liveUpdates]] carries only the new
-    * image, so a join view could never subtract the old one. */
+    * retraction input delta-join view maintenance needs
+    * ([[applyJoinBatch]]) — [[StatefulMultiTable.liveUpdates]] carries
+    * only the new image, so a join view could never subtract the old
+    * one. */
   def mtDeltas(parsed: DataFrame): Dataset[MtDelta] = {
     val spark = parsed.sparkSession
     import spark.implicits._
@@ -92,7 +93,7 @@ object Ivm {
       }
   }
 
-  // ---- delta-join view maintenance (r10 verdict #2) -------------------
+  // ---- delta-join view maintenance -----------------------------------
   //
   // The maintained view V = P ⋈ A (both relations keyed, so join
   // multiplicity is 0/1). Per micro-batch b with per-table signed
@@ -227,7 +228,7 @@ object Ivm {
       case None => // no epochs landed yet: empty view
         // Value columns carry the specs' REAL types (the same rowSchema
         // lookup as keyType), so consumers see one schema whether or
-        // not an epoch has landed (ADVICE r11).
+        // not an epoch has landed.
         def valType(n: String) =
           (if (pSpec.rowSchema.fieldNames.contains(n)) pSpec.rowSchema
            else aSpec.rowSchema)(n).dataType

@@ -141,14 +141,11 @@ object JdbcMultiTable {
       parser: (DataFrame, Seq[TableSpec]) => DataFrame =
         MultiTable.parseAll): StreamingQuery = {
     specs.foreach(ensureTable(url, _))
-    ChangeSource.rawLines(spark, changeDir, maxFilesPerTrigger).writeStream
-      .queryName("graft-replicate-multitable-jdbc")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        applyBatch(spark, parser(batch, specs), url, specs,
-          batchId = epochId, parallelism = parallelism)
-      }
-      .start()
+    ChangeSource.run(ChangeSource.rawLines(spark, changeDir,
+        maxFilesPerTrigger), "graft-replicate-multitable-jdbc", checkpointDir,
+        trigger) { (batch, epochId) =>
+      applyBatch(spark, parser(batch, specs), url, specs,
+        batchId = epochId, parallelism = parallelism)
+    }
   }
 }

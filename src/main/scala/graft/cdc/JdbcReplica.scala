@@ -12,10 +12,9 @@ import org.apache.spark.sql.types._
   * created_at FROM person` over pgx; main.go:195-269 applies I/U/D with
   * prepared statements), exercised against a REAL SQL database: the
   * Spark distribution ships embedded Derby, so the whole path runs
-  * in-sandbox (SURVEY §2.1's `spark.read.jdbc`, previously documented
-  * but never executed). A production deployment swaps the URL/driver
-  * for Postgres; every statement below is ANSI (update-then-insert
-  * upsert, no vendor MERGE).
+  * in-sandbox (SURVEY §2.1's `spark.read.jdbc`). A production
+  * deployment swaps the URL/driver for Postgres; every statement below
+  * is ANSI (update-then-insert upsert, no vendor MERGE).
   *
   * ## Scale design
   *
@@ -454,15 +453,10 @@ object JdbcReplica {
       trigger: Trigger = Trigger.ProcessingTime("2 seconds"),
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     ensureTables(url, table)
-    ChangeSource.readStream(spark, changeDir, maxFilesPerTrigger)
-      .writeStream
-      .queryName("graft-replicate-jdbc")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[PersonChange], epochId: Long) =>
-        applyBatch(batch, url, table, batchId = epochId)
-      }
-      .start()
+    ChangeSource.run(ChangeSource.readStream(spark, changeDir,
+        maxFilesPerTrigger), "graft-replicate-jdbc", checkpointDir, trigger) {
+      (batch, epochId) => applyBatch(batch, url, table, batchId = epochId)
+    }
   }
 
   /** The reference monitor's parity probe (pubsub/main.go:131-209) in

@@ -125,16 +125,12 @@ object ManifestMultiTable {
       maxFilesPerTrigger: Option[Int] = None,
       compactEvery: Int = Replicate.DefaultCompactEvery,
       parser: (DataFrame, Seq[TableSpec]) => DataFrame =
-        MultiTable.parseAll): StreamingQuery = {
-    ChangeSource.rawLines(spark, changeDir, maxFilesPerTrigger).writeStream
-      .queryName("graft-replicate-multitable-manifest")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        applyBatch(spark, parser(batch, specs), root, specs,
-          batchId = epochId, numBuckets = numBuckets,
-          compactEvery = compactEvery)
-      }
-      .start()
-  }
+        MultiTable.parseAll): StreamingQuery =
+    ChangeSource.run(ChangeSource.rawLines(spark, changeDir,
+        maxFilesPerTrigger), "graft-replicate-multitable-manifest",
+        checkpointDir, trigger) { (batch, epochId) =>
+      applyBatch(spark, parser(batch, specs), root, specs,
+        batchId = epochId, numBuckets = numBuckets,
+        compactEvery = compactEvery)
+    }
 }

@@ -83,7 +83,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * whose JSON image map makes a widened schema a read-side change. */
 object ManifestReplica {
   import Replicate.{BucketCol, PersonShape, Shape, check, combineSummaries,
-    projectAlive, rowsAsSummaries, summarizeBucketed, withRowFilter}
+    fsOf, projectAlive, rowsAsSummaries, summarizeBucketed, withRowFilter}
 
   /** One committed replica state. `gen` is the high-water generation
     * counter (monotone across commits, never reused — so a crashed
@@ -116,11 +116,6 @@ object ManifestReplica {
     * Production tunes this to the retention the deployment owes its
     * readers (the Delta/Iceberg VACUUM trade). */
   val ManifestHistory = 4
-
-  private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
-    val p = new Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
 
   /** Committed manifest versions on disk, ascending (history depth =
     * [[ManifestHistory]] until [[gc]]/[[vacuum]] prune). */
@@ -424,8 +419,7 @@ object ManifestReplica {
   private[cdc] def snapshotWith(spark: SparkSession, dir: String,
       numBuckets: Int, summaries: DataFrame, s: Shape): Unit = {
     val (fs, root) = fsOf(spark, dir)
-    withLifecycle(dir) {
-    awaitCompactions(dir)
+    FoldRunner.withLifecycle(dir) {
     foldLock(dir).synchronized {
       val (_, m) = readManifest(fs, root)
       val gen = m.gen + 1
@@ -452,22 +446,6 @@ object ManifestReplica {
     }
   }
 
-  /** In-flight background compactions, one slot per replica dir —
-    * [[Replicate]]'s async pattern; the CAS commit makes the
-    * compactor's fold and the trigger's delta-adds safe to land in
-    * either order. */
-  private val compacting =
-    new java.util.concurrent.ConcurrentHashMap[String, Thread]()
-
-  /** Replica dirs with a bulk lifecycle op (snapshot/vacuum/truncate) in
-    * flight. [[applyWith]] refuses to START a compaction fold while set:
-    * a fold reads its base OUTSIDE the commit lock, so one racing a
-    * vacuum's full rewrite would re-commit buckets folded from the
-    * pre-vacuum base — CAS-safe but semantically stale. Delta adds stay
-    * allowed: vacuum's commit merges `cur.deltas` explicitly. */
-  private val lifecycleOps =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Per-replica monitors serializing whole FOLD/REWRITE bodies
     * (compact, vacuum's rewrite) in-JVM. The commit itself is already
     * CAS-safe; this closes the narrower stage-dir hazard:
@@ -482,11 +460,6 @@ object ManifestReplica {
 
   private[cdc] def foldLock(dir: String): Object =
     foldLocks.computeIfAbsent(dir, _ => new Object)
-
-  private[graft] def withLifecycle[A](dir: String)(body: => A): A = {
-    check(lifecycleOps.add(dir), s"lifecycle op already in flight at $dir")
-    try body finally lifecycleOps.remove(dir)
-  }
 
   /** Paths an in-JVM writer is currently materializing OUTSIDE the
     * commit lock — the heavy parquet writes (delta tmp dirs, stage
@@ -505,16 +478,6 @@ object ManifestReplica {
     inFlightWrites.add(p.toUri.getPath)
     try body finally inFlightWrites.remove(p.toUri.getPath)
   }
-
-  /** Join any in-flight background compactions (clean-shutdown hook). */
-  def awaitCompactions(): Unit =
-    compacting.values().toArray(Array.empty[Thread]).foreach(_.join())
-
-  /** Join only one replica dir's in-flight async fold (the global join
-    * would stall one table's lifecycle op on every other table's
-    * fold). */
-  private[cdc] def awaitCompactions(dir: String): Unit =
-    Option(compacting.get(dir)).foreach(_.join())
 
   /** Apply one micro-batch: O(batch) summary → delta dir → one-PUT
     * commit. Replaying a committed or already-compacted `batchId` is a
@@ -580,26 +543,10 @@ object ManifestReplica {
     // no new fold while a lifecycle op runs: it would race the op's
     // rewrite for the same gen+1 stage dir, or re-commit buckets folded
     // from a base read that predates it
-    if (committed.deltas.size >= compactEvery &&
-        !lifecycleOps.contains(dir)) {
+    if (committed.deltas.size >= compactEvery && !FoldRunner.busy(dir)) {
       if (!compactAsync) compactWith(spark, dir, numBuckets, s, None)
-      else if (!compacting.containsKey(dir)) {
-        val t = new Thread(() => {
-          // own scheduler pool so the fold's jobs time-slice with the
-          // trigger's under FAIR instead of starving them under FIFO
-          // (see Replicate's async fold for the full rationale)
-          spark.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", "graft-compact")
-          // bounded footprint: the background fold may hold at most
-          // [[AsyncFoldMaxTasks]] slots at any instant (see its doc)
-          try compactWith(spark, dir, numBuckets, s, Some(AsyncFoldMaxTasks))
-          catch { case e: Throwable =>
-            System.err.println(s"[cdc] async manifest compaction failed (deltas stay live, next trigger retries): $e")
-          } finally compacting.remove(dir)
-        }, s"graft-man-compact-$batchId")
-        t.setDaemon(true)
-        if (compacting.putIfAbsent(dir, t) == null) t.start()
-      }
+      else FoldRunner.start(spark, dir)(
+        compactWith(spark, dir, numBuckets, s, Some(FoldRunner.MaxTasks)))
     }
   }
 
@@ -743,17 +690,6 @@ object ManifestReplica {
   private def deltaPaths(m: Manifest, dir: String): Seq[Path] =
     m.deltas.toSeq.sorted.map(id => new Path(m.deltaDir(dir, id)))
 
-  /** Concurrent-task cap for BACKGROUND folds: FAIR pool weights share
-    * slots only as tasks FINISH — a 256-task merge launched into a
-    * trigger gap grabs every free slot and the next trigger's delta
-    * write convoys behind whole fold-task durations. Capping the fold's
-    * merge/write stage to this many partitions bounds its footprint
-    * STRUCTURALLY: the trigger pool's minShare is then free at every
-    * instant, not just at task boundaries. Foreground folds (compact,
-    * vacuum, bench final folds) stay full-width — nothing contends with
-    * them. */
-  val AsyncFoldMaxTasks = 8
-
   /** Fold pending deltas into new generations of ONLY the buckets they
     * touch, then commit. Untouched buckets keep their generation (and
     * their bytes). */
@@ -762,7 +698,7 @@ object ManifestReplica {
     compactWith(spark, dir, numBuckets, PersonShape, None)
 
   /** [[compact]] for any [[Replicate.Shape]]; `maxTasks` caps the
-    * merge/write width ([[AsyncFoldMaxTasks]] for background folds).
+    * merge/write width ([[FoldRunner.MaxTasks]] for background folds).
     * Reclaims nothing: superseded generations and consumed deltas stay
     * on disk until [[gc]]/[[vacuum]], so a reader that resolved the
     * previous manifest finishes its scan against intact files and every
@@ -829,8 +765,8 @@ object ManifestReplica {
   /** [[vacuum]] for any [[Replicate.Shape]]. */
   private[cdc] def vacuumWith(spark: SparkSession, dir: String,
       numBuckets: Int, s: Shape): Unit = {
-    withLifecycle(dir) {
-      awaitCompactions(dir) // never rewrite under an in-flight async fold
+    // the flag joins any in-flight async fold before the rewrite
+    FoldRunner.withLifecycle(dir) {
       // the whole rewrite holds the fold monitor: a trigger fold that
       // raced the lifecycle flag parks until the rewrite commits, then
       // re-reads the post-vacuum manifest (reentrant for the fold below)
@@ -897,14 +833,14 @@ object ManifestReplica {
     * generation, delta, and manifest, leaving an empty root that
     * accepts a fresh [[snapshot]]. */
   def truncate(spark: SparkSession, dir: String): Unit = {
-    withLifecycle(dir) {
-      awaitCompactions(dir) // a daemon fold may outlive its stopped stream
+    // the flag joins a daemon fold that outlived its stopped stream
+    FoldRunner.withLifecycle(dir) {
       val (fs, root) = fsOf(spark, dir)
       // exclusive vs the trigger's SHARED delta section (which is the
       // one writer foldLock/lockFor do not cover)
       Replicate.exclusive(dir) {
-      // fold monitor excludes a trigger's INLINE fold (awaitCompactions
-      // only joins async ones: an inline fold runs on the trigger
+      // fold monitor excludes a trigger's INLINE fold (the flag only
+      // joins async ones: an inline fold runs on the trigger
       // thread and would otherwise re-commit a manifest over the
       // freshly truncated root); the commit lock excludes a
       // delta commit interleaving the manifest deletes
@@ -1004,16 +940,11 @@ object ManifestReplica {
       numBuckets: Int = Replicate.DefaultNumBuckets,
       trigger: Trigger = Trigger.ProcessingTime("2 seconds"),
       compactEvery: Int = Replicate.DefaultCompactEvery,
-      compactAsync: Boolean = false): StreamingQuery = {
-    val filtered = rowFilter.map(withRowFilter(changes, _)).getOrElse(changes)
-    filtered.writeStream
-      .queryName("graft-replicate-manifest")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[PersonChange], epochId: Long) =>
-        applyBatch(spark, batch, dir, numBuckets, batchId = epochId,
-          compactEvery = compactEvery, compactAsync = compactAsync)
-      }
-      .start()
-  }
+      compactAsync: Boolean = false): StreamingQuery =
+    ChangeSource.run(rowFilter.map(withRowFilter(changes, _))
+        .getOrElse(changes), "graft-replicate-manifest", checkpointDir,
+        trigger) { (batch, epochId) =>
+      applyBatch(spark, batch, dir, numBuckets, batchId = epochId,
+        compactEvery = compactEvery, compactAsync = compactAsync)
+    }
 }

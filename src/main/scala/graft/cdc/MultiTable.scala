@@ -396,15 +396,12 @@ object MultiTable {
       parser: (DataFrame, Seq[TableSpec]) => DataFrame = parseAll)
       : StreamingQuery = {
     specs.foreach(recordSchema(spark, root, _))
-    ChangeSource.rawLines(spark, changeDir, maxFilesPerTrigger).writeStream
-      .queryName("graft-replicate-multitable")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        applyBatch(spark, parser(batch, specs), root, specs,
-          batchId = epochId, numBuckets = numBuckets,
-          compactEvery = compactEvery)
-      }
-      .start()
+    ChangeSource.run(ChangeSource.rawLines(spark, changeDir,
+        maxFilesPerTrigger), "graft-replicate-multitable", checkpointDir,
+        trigger) { (batch, epochId) =>
+      applyBatch(spark, parser(batch, specs), root, specs,
+        batchId = epochId, numBuckets = numBuckets,
+        compactEvery = compactEvery)
+    }
   }
 }

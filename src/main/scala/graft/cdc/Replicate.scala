@@ -82,10 +82,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   *
   * The streaming path runs compaction ASYNCHRONOUSLY (the Hudi pattern):
   * every trigger is O(batch), the fold happens on a background thread
-  * guarded per replica, and change VISIBILITY never waits on it because
-  * reads are merge-on-read anyway — the fold only bounds read
-  * amplification. Deltas committed during a fold stay untouched (the
-  * consumed set is listed once; the watermark rises only to its max).
+  * guarded per replica ([[FoldRunner]]), and change VISIBILITY never
+  * waits on it because reads are merge-on-read anyway — the fold only
+  * bounds read amplification. Deltas committed during a fold stay
+  * untouched (the consumed set is listed once; the watermark rises only
+  * to its max).
   * Direct `applyBatch` callers default to the synchronous fold
   * (deterministic for tests/layout assertions). At 100 TB: thousands of
   * buckets, only touched buckets re-generated per fold, and an
@@ -100,8 +101,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   *
   * SCHEMA EVOLUTION — documented decision: this typed single-table path
   * fixes its schema at compile time BY DESIGN — [[PersonRow]] and the
-  * summary structs ([[DeltaSchema]]/[[BaseSchema]]) are what buy fully
-  * codegen'd folds with no JSON round-trip per column. A deployment
+  * summary structs ([[DeltaSchema]]/[[BaseSchema]]) keep every image
+  * column a native typed field, so no column is JSON-encoded on write
+  * or decoded on read. The per-key fold itself plans the same on both
+  * paths: one exchange, then a window and a sort aggregate over struct
+  * max/min buffers that run outside whole-stage codegen. A deployment
   * that needs to widen a table's schema without a rewrite uses the
   * generic declared-schema path ([[MultiTable]] /
   * [[ManifestMultiTable]] with a single [[TableSpec]]): its replicas
@@ -152,9 +156,10 @@ object Replicate {
     * replica was written with. `numBuckets` defines the key→bucket
     * mapping on DISK, so a caller passing a different value would remap
     * keys into fresh dirs while stale copies survive in the old ones —
-    * silent duplicates. Was doc-only ("must stay constant"); since the
-    * incremental compaction no longer re-buckets the whole base as a
-    * side effect, the constraint is now ENFORCED. Underscore prefix =
+    * silent duplicates. Every writer checks its `numBuckets` against
+    * the marker ([[checkLayout]]) and fails on a mismatch; the first
+    * writer of a replica records it; only [[snapshot]] and [[truncate]]
+    * reset it. Readers prune point lookups with it. Underscore prefix =
     * invisible to Spark/Hadoop data listings. */
   private val LayoutFile = "_layout"
   private val layoutSeen =
@@ -349,46 +354,40 @@ object Replicate {
     }
   }
 
-  /** Reduce a micro-batch to ONE row per key — the per-key fold algebra,
-    * expressed so the only state-dependent part is explicit:
-    *
-    *  - `last_d_lsn`: lsn of the key's last delete in the batch (null if
-    *    none). Every event before it is irrelevant (state is absent right
-    *    after it); every later event is I or U.
-    *  - `first_ins`: the first INSERT after the last delete. If present
-    *    the key ends the batch alive regardless of prior state; its
-    *    created_at is used when the row wasn't already alive.
-    *  - `last_img`: the image of the last non-delete event after the
-    *    last delete — the final image if the key ends alive. With no
-    *    delete in the batch this is just the last I/U image, which also
-    *    covers the all-UPDATE case. Its fields are `s`'s `last_img`
-    *    struct fields, read off the batch's columns.
-    *
-    * Struct max/min order by `lsn` first, so they are argmax/argmin by
-    * lsn (lsn is unique per change). `keys` are the grouping keys, as
-    * [[combineSummaries]] takes them: `(BucketCol, s.key)` for a delta
-    * write (the batch already carries the bucket column), `s.key` for
-    * the JDBC sinks. One batch-sized shuffle on `keys.head` — `width`
-    * tasks wide, or sized by AQE when None — feeds the window and then
-    * a sort aggregate (struct max/min buffers rule out a hash
-    * aggregate) that reuses the window's partitioning and sort order. */
-  private[cdc] def summarizeWith(batch: DataFrame, s: Shape,
-      keys: Seq[String], width: Option[Int]): DataFrame = {
-    val kc = keys.map(col)
-    val byKey = Window.partitionBy(kc: _*)
-    val afterD = col("lsn") > coalesce(col("last_d_lsn"), lit(Long.MinValue))
+  /** Lift change events into summary form, one row per event — the
+    * change-event twin of [[rowsAsSummaries]]. A non-delete event gives
+    * `last_img`: its image (`s`'s `last_img` struct fields, read off the
+    * event's columns, lsn first) stamped at its lsn; an insert gives
+    * `first_ins = (lsn, created_at)`; a delete gives `last_d_lsn = lsn`.
+    * Each lifted row is a one-event batch's summary, so
+    * [[combineSummaries]] folds a batch exactly as it folds deltas into
+    * a base: the last delete cuts every earlier event, `last_img` is the
+    * last write past it, `first_ins` the first insert past it. */
+  private[cdc] def eventsAsSummaries(events: DataFrame, s: Shape,
+      keys: Seq[String]): DataFrame = {
     val img = s.deltaSchema("last_img").dataType.asInstanceOf[StructType]
       .fieldNames.map(col)
-    width.fold(batch.repartition(kc.head))(w => batch.repartition(w, kc.head))
-      .withColumn("last_d_lsn",
-        max(when(col("action") === "D", col("lsn"))).over(byKey))
-      .groupBy(kc: _*)
-      .agg(
-        max(when(col("action") =!= "D" && afterD, struct(img: _*)))
-          .as("last_img"),
-        min(when(col("action") === "I" && afterD,
-          struct(col("lsn"), col("created_at")))).as("first_ins"),
-        max(col("last_d_lsn")).as("last_d_lsn"))
+    events.select(keys.map(col) ++ Seq(
+      when(col("action") =!= "D", struct(img: _*)).as("last_img"),
+      when(col("action") === "I", struct(col("lsn"), col("created_at")))
+        .as("first_ins"),
+      when(col("action") === "D", col("lsn")).as("last_d_lsn")): _*)
+  }
+
+  /** Reduce a micro-batch to ONE row per key: [[eventsAsSummaries]]
+    * folded by [[combineSummaries]]. `keys` are the grouping keys:
+    * `(BucketCol, s.key)` for a delta write (the batch already carries
+    * the bucket column), `s.key` for the JDBC sinks. One batch-sized
+    * shuffle on `keys.head` — `width` tasks wide, or sized by AQE when
+    * None — feeds the window and then a sort aggregate (struct max/min
+    * buffers rule out a hash aggregate) that reuses the window's
+    * partitioning and sort order. */
+  private[cdc] def summarizeWith(batch: DataFrame, s: Shape,
+      keys: Seq[String], width: Option[Int]): DataFrame = {
+    val k = col(keys.head)
+    combineSummaries(eventsAsSummaries(
+      width.fold(batch.repartition(k))(batch.repartition(_, k)), s, keys),
+      keys)
   }
 
   /** [[summarizeWith]] over person changes, keyed on `id` with a fixed
@@ -490,7 +489,8 @@ object Replicate {
     deltaDirsOf(fs, dRoot).filter(batchIdOf(_) > wm)
   }
 
-  private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
+  private[cdc] def fsOf(spark: SparkSession, dir: String)
+      : (FileSystem, Path) = {
     val p = new Path(dir)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
@@ -565,12 +565,6 @@ object Replicate {
     projectAlive(readWith(spark, replicaDir, PersonShape)).as[PersonRow]
   }
 
-  /** In-flight background compactions, one slot per replica dir: at
-    * most one async fold per replica, and the handle
-    * [[awaitCompactions]] joins. */
-  private val compacting =
-    new java.util.concurrent.ConcurrentHashMap[String, Thread]()
-
   /** Triggers per replica dir since its last fold ended. The next async
     * fold waits for `compactEvery` of them, so what a fold supersedes
     * survives at least `compactEvery` triggers past its commit even
@@ -579,19 +573,6 @@ object Replicate {
     * long one. */
   private val triggersSinceFold =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-  /** Replica dirs with a bulk lifecycle op (snapshot, vacuum, truncate)
-    * in flight — the twin of [[ManifestReplica]]'s flag. Concurrent
-    * bulk ops fail fast on it, and triggers skip the compaction
-    * threshold while it is set, so new folds neither starve the op's
-    * write lock nor run a base read from before its rewrite; delta
-    * writes stay allowed (the next fold consumes them against the
-    * post-op base). */
-  private val lifecycleOps =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def lifecycleBusy(dir: String): Boolean =
-    lifecycleOps.contains(dir)
 
   /** Per-replica-dir READ-WRITE locks: the trigger (delta write/commit,
     * threshold folds) and the async fold take the SHARED side — they
@@ -618,22 +599,11 @@ object Replicate {
     try body finally l.unlock()
   }
 
-  private[graft] def withLifecycle[A](dir: String)(body: => A): A = {
-    check(lifecycleOps.add(dir), s"lifecycle op already in flight at $dir")
-    try body finally lifecycleOps.remove(dir)
-  }
-
-  /** Join any in-flight background compactions (clean-shutdown hook:
-    * call before `spark.stop()` so a mid-flight fold isn't killed with
-    * the context — killed folds are still crash-safe, just wasted). */
-  def awaitCompactions(): Unit =
-    compacting.values().toArray(Array.empty[Thread]).foreach(_.join())
-
-  /** Join only ONE replica dir's in-flight async fold — what a
-    * lifecycle op needs (the global join would stall on unrelated
-    * tables' folds in a multi-table deployment). */
-  private def awaitCompactions(replicaDir: String): Unit =
-    Option(compacting.get(replicaDir)).foreach(_.join())
+  /** Join every in-flight background fold, of both commit protocols
+    * (clean-shutdown hook: call before `spark.stop()` so a mid-flight
+    * fold isn't killed with the context — killed folds are still
+    * crash-safe, just wasted). */
+  def awaitCompactions(): Unit = FoldRunner.awaitAll()
 
   /** Apply one micro-batch to the bucketed replica. Idempotent: replaying
     * the last batch after a crash converges to the same state.
@@ -678,47 +648,20 @@ object Replicate {
       fs.delete(dst, true)
       check(fs.rename(tmp, dst), s"commit delta $dst")
       val due = listDeltas(fs, dRoot).size >= compactEvery &&
-        !lifecycleBusy(dir)
+        !FoldRunner.busy(dir)
       if (!compactAsync) { if (due) foldWith(spark, fs, dir, numBuckets, s) }
       else if (triggersSinceFold.merge(dir, 1, _ + _) >= compactEvery && due)
-        foldAsync(spark, fs, dir, numBuckets, s, batchId)
+        FoldRunner.start(spark, dir) {
+          // a fold that raced a starting lifecycle op parks here until
+          // the op finishes, then re-checks the flag
+          shared(dir) {
+            if (!FoldRunner.busy(dir))
+              foldWith(spark, fs, dir, numBuckets, s,
+                maxTasks = Some(FoldRunner.MaxTasks))
+          }
+        }
     }
   }
-
-  /** Start a background fold unless one is already running for `dir`
-    * (the Hudi pattern): the trigger path stays O(batch) — readers
-    * already merge deltas, so visibility gains nothing from an inline
-    * fold, and the fold's lumpy cost leaves the latency envelope. */
-  private def foldAsync(spark: SparkSession, fs: FileSystem, dir: String,
-      numBuckets: Int, s: Shape, batchId: Long): Unit =
-    if (!compacting.containsKey(dir)) {
-      val t = new Thread(() => {
-        // the fold's jobs run in their OWN scheduler pool: under a FAIR
-        // session (spark.scheduler.mode=FAIR — Bench and any
-        // latency-sensitive deployment set it) the pool time-slices
-        // task slots with the trigger's default pool, so a fold's jobs
-        // never queue ahead of the next trigger's. Inert under FIFO.
-        spark.sparkContext.setLocalProperty(
-          "spark.scheduler.pool", "graft-compact")
-        // a spawn that raced a starting lifecycle op parks here until
-        // the op finishes, then re-checks the flag
-        try shared(dir) {
-          // bounded footprint: at most [[ManifestReplica.AsyncFoldMaxTasks]]
-          // slots at any instant — FAIR weights share slots only at
-          // task boundaries, so a full-width merge launched into a
-          // trigger gap would convoy the next trigger's write behind
-          // whole fold-task durations
-          if (!lifecycleBusy(dir))
-            foldWith(spark, fs, dir, numBuckets, s,
-              maxTasks = Some(ManifestReplica.AsyncFoldMaxTasks))
-        }
-        catch { case e: Throwable =>
-          System.err.println(s"[cdc] async compaction failed (deltas stay live, next trigger retries): $e")
-        } finally compacting.remove(dir)
-      }, s"graft-compact-$batchId")
-      t.setDaemon(true)
-      if (compacting.putIfAbsent(dir, t) == null) t.start()
-    }
 
   /** Delete what earlier folds superseded: stray stage dirs of a killed
     * fold, every generation below its bucket's newest, the marker of an
@@ -811,7 +754,7 @@ object Replicate {
     * dir's async fold, then folds under the exclusive lock. */
   private[cdc] def compactWith(spark: SparkSession, dir: String,
       numBuckets: Int, s: Shape): Unit = {
-    awaitCompactions(dir)
+    FoldRunner.await(dir)
     exclusive(dir) {
       val (fs, root) = fsOf(spark, dir)
       checkLayout(fs, root, numBuckets)
@@ -830,8 +773,7 @@ object Replicate {
     * fold parked on the shared side while holding it would deadlock). */
   private[cdc] def vacuumWith(spark: SparkSession, dir: String,
       numBuckets: Int, s: Shape): Unit =
-    withLifecycle(dir) {
-      awaitCompactions(dir)
+    FoldRunner.withLifecycle(dir) {
       exclusive(dir) {
         val (fs, root) = fsOf(spark, dir)
         checkLayout(fs, root, numBuckets)
@@ -858,8 +800,7 @@ object Replicate {
     * watermark, leaving an empty replica root ready for a fresh
     * [[snapshot]] + stream. */
   def truncate(spark: SparkSession, replicaDir: String): Unit =
-    withLifecycle(replicaDir) {
-      awaitCompactions(replicaDir)
+    FoldRunner.withLifecycle(replicaDir) {
       exclusive(replicaDir) { truncateLocked(spark, replicaDir) }
     }
 
@@ -878,8 +819,7 @@ object Replicate {
     * bucket column) fully replace the replica as generation 1. */
   private[cdc] def snapshotWith(spark: SparkSession, dir: String,
       numBuckets: Int, summaries: DataFrame, s: Shape): Unit =
-    withLifecycle(dir) {
-      awaitCompactions(dir)
+    FoldRunner.withLifecycle(dir) {
       exclusive(dir) {
         val (fs, root) = fsOf(spark, dir)
         truncateLocked(spark, dir)
@@ -965,33 +905,23 @@ object Replicate {
       numBuckets: Int = DefaultNumBuckets,
       trigger: Trigger = Trigger.ProcessingTime("2 seconds"),
       maxFilesPerTrigger: Option[Int] = None,
-      compactEvery: Int = DefaultCompactEvery): StreamingQuery = {
-    val reader = spark.readStream.format("text")
-    val lines = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .load(changeDir)
-    lines.writeStream
-      .queryName("graft-replicate")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val classified = ChangeSource.classify(batch)
+      compactEvery: Int = DefaultCompactEvery): StreamingQuery =
+    ChangeSource.run(ChangeSource.rawLines(spark, changeDir,
+        maxFilesPerTrigger), "graft-replicate", checkpointDir, trigger) {
+      (batch, epochId) =>
         // one OVERWRITTEN dir per epoch, not a blind append: replaying
         // the epoch after a crash rewrites the same dir instead of
         // duplicating its dead letters — the sink stays exactly-once
         // like the replica. Readers see `batch` as a partition column.
-        classified.filter(col("verdict") =!= "ok")
+        ChangeSource.classify(batch).filter(col("verdict") =!= "ok")
           .write.mode(SaveMode.Overwrite)
           .parquet(s"$quarantineDir/batch=$epochId")
         val parsed = ChangeSource.parse(batch)
-        val filtered =
-          rowFilter.map(withRowFilter(parsed, _)).getOrElse(parsed)
-        applyBatch(spark, filtered, replicaDir, numBuckets,
-          batchId = epochId, compactEvery = compactEvery,
-          compactAsync = true)
-      }
-      .start()
-  }
+        applyBatch(spark,
+          rowFilter.map(withRowFilter(parsed, _)).getOrElse(parsed),
+          replicaDir, numBuckets, batchId = epochId,
+          compactEvery = compactEvery, compactAsync = true)
+    }
 
   /** Source-agnostic pipeline entry: any parsed change stream
     * (wal2json, Debezium, Kafka+either envelope) drives the same
@@ -1002,17 +932,11 @@ object Replicate {
       numBuckets: Int = DefaultNumBuckets,
       trigger: Trigger = Trigger.ProcessingTime("2 seconds"),
       compactEvery: Int = DefaultCompactEvery)
-      : StreamingQuery = {
-    val filtered = rowFilter.map(withRowFilter(changes, _)).getOrElse(changes)
-    filtered.writeStream
-      .queryName("graft-replicate")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[PersonChange], epochId: Long) =>
-        applyBatch(spark, batch, replicaDir, numBuckets,
-          batchId = epochId, compactEvery = compactEvery,
-          compactAsync = true)
-      }
-      .start()
-  }
+      : StreamingQuery =
+    ChangeSource.run(rowFilter.map(withRowFilter(changes, _))
+        .getOrElse(changes), "graft-replicate", checkpointDir, trigger) {
+      (batch, epochId) =>
+        applyBatch(spark, batch, replicaDir, numBuckets, batchId = epochId,
+          compactEvery = compactEvery, compactAsync = true)
+    }
 }

@@ -52,7 +52,7 @@ object StatefulMultiTable {
             }
           }
           // dead keys REMOVE their state rather than parking a
-          // tombstone (r6 review: NoTimeout tombstones grew state with
+          // tombstone (under NoTimeout a tombstone would grow state with
           // every key ever seen). Removal is semantics-preserving:
           // this path is order-dependent by contract, a later U on
           // absent state is already a no-op, and a later I re-creates

@@ -47,7 +47,7 @@ object StatefulReplica {
           // dead keys remove their state outright — a retained
           // tombstone buys nothing on this order-dependent path (U on
           // absent is a no-op, I re-creates) and would grow state with
-          // every key ever seen instead of the live set (r6 review)
+          // every key ever seen instead of the live set
           if (fin.isDefined) state.update(ReplicaState(fin))
           else if (state.exists) state.remove()
           Iterator(ReplicaUpdate(id, fin.isDefined, fin))

@@ -720,8 +720,43 @@ class ManifestSpec extends AnyFunSuite {
       trigger = Trigger.ProcessingTime("1 second"), compactEvery = 2,
       compactAsync = true)
     try q.processAllAvailable() finally q.stop()
-    ManifestReplica.awaitCompactions()
+    Replicate.awaitCompactions()
     assert(asMap(dir) === wantMap(ops))
+  }
+
+  test("Replicate.awaitCompactions joins an in-flight manifest async fold") {
+    val ops = ChangeGen.ops(seed = 56, n = 600)
+    val (snapOps, streamOps) = ops.splitAt(200)
+    val dir = tmp("man-join")
+    ManifestReplica.snapshot(spark,
+      ChangeGen.replay(snapOps).values.toSeq.toDS(), dir, numBuckets = 4)
+    // compactEvery = 1: this trigger's delta starts a background fold
+    ManifestReplica.applyBatch(spark, ChangeGen.toChanges(streamOps).toDS(),
+      dir, numBuckets = 4, batchId = 0L, compactEvery = 1,
+      compactAsync = true)
+    Replicate.awaitCompactions()
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val m = ManifestReplica.readManifestAt(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
+      ManifestReplica.versions(spark, dir).last)
+    assert(m.deltas.isEmpty && m.watermark === 0L,
+      s"the fold of batch 0 had not committed when the join returned: $m")
+    assert(asMap(dir) === wantMap(ops))
+  }
+
+  test("the manifest stream runs as query graft-replicate-manifest") {
+    // the name Bench's BatchMetricsListener filters the manifest cells on
+    val changeDir = tmp("man-q-log"); val dir = tmp("man-q-replica")
+    ChangeGen.writeBatches(changeDir, ChangeGen.ops(seed = 57, n = 50),
+      batches = 1)
+    val q = ManifestReplica.startFrom(spark,
+      ChangeSource.readStream(spark, changeDir), dir, tmp("man-q-ckpt"),
+      numBuckets = 4, trigger = Trigger.ProcessingTime("1 second"))
+    try {
+      assert(q.name === "graft-replicate-manifest")
+      q.processAllAvailable()
+      assert(q.lastProgress.name === "graft-replicate-manifest")
+    } finally q.stop()
   }
 
   test("manifest stream drives the replicate dataflow end to end") {
@@ -809,7 +844,7 @@ class ManifestSpec extends AnyFunSuite {
           s"bucket generations accumulating at trigger $n: $dataPeak")
       }
     }
-    ManifestReplica.awaitCompactions()
+    Replicate.awaitCompactions()
     assert(asMap(dir) === wantMap(ops), "soak must converge to the replay")
     // no upward read-latency trend: last-third mean within 3× the
     // first-third mean (+0.5 s noise floor on this box)

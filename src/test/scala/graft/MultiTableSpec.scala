@@ -506,7 +506,7 @@ class MultiTableSpec extends AnyFunSuite {
     val rows = Seq((1, "a", "u", 1,
       java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
       .toDF("id", "name", "uid", "score", "created_at")
-    Replicate.withLifecycle(dir) {
+    FoldRunner.withLifecycle(dir) {
       intercept[java.io.IOException] {
         MultiTable.snapshot(spark, rows, root, personSpec)
       }
@@ -522,7 +522,7 @@ class MultiTableSpec extends AnyFunSuite {
     assert(personMap(root) === Map(1 -> (("a", "u", 1))))
     val rootM = Files.createTempDirectory("mtm-conflict").toString
     val dirM = s"$rootM/person"
-    ManifestReplica.withLifecycle(dirM) {
+    FoldRunner.withLifecycle(dirM) {
       intercept[java.io.IOException] {
         ManifestMultiTable.snapshot(spark, rows, rootM, personSpec)
       }
@@ -551,7 +551,7 @@ class MultiTableSpec extends AnyFunSuite {
     val stray = java.nio.file.Paths.get(dir, ".__stage-g99", "id_bucket=0")
     Files.createDirectories(stray)
     val gensBefore = RenameLayout.gens(dir).toSet
-    Replicate.withLifecycle(dir) { apply(1L) }
+    FoldRunner.withLifecycle(dir) { apply(1L) }
     assert(RenameLayout.pendingDeltas(dir) === Seq(1L),
       "compactEvery=1 must NOT fold under the lifecycle flag")
     assert(RenameLayout.gens(dir).toSet === gensBefore)
@@ -567,7 +567,7 @@ class MultiTableSpec extends AnyFunSuite {
       MultiTable.parseAll(pOps.map(ChangeGen.toJsonLine).toDF("value"),
         specs), rootM, specs, batchId = b, compactEvery = 1)
     val dirM = s"$rootM/person"
-    ManifestReplica.withLifecycle(dirM) { applyM(0L) }
+    FoldRunner.withLifecycle(dirM) { applyM(0L) }
     assert(ManifestReplica.versions(spark, dirM).size === 1,
       "compactEvery=1 must NOT fold under the lifecycle flag (one delta commit only)")
     applyM(1L)
