@@ -634,8 +634,10 @@ object Bench {
     val results: Map[String, Double] =
       if (only.exists(_ != "queries")) Map.empty
       else {
-        // pass 1 (untimed): JIT, codegen cache, file listing, parquet
-        // footers — steady-state warm-up, reported nowhere
+        // pass 1 (untimed): JIT, codegen cache, file listing, fixture
+        // schemas (`core.Tables`) — steady-state warm-up, reported
+        // nowhere. The schemas hold no rows and no plan and are keyed by
+        // file identity, so the memo resets below do not clear them
         qmap.foreach { case (name, fn) =>
           try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           catch { case e: Throwable =>

@@ -5,6 +5,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sql.{Relational, SqlQueries}
 
 object SparkTestSession {
+  private def poolFile: String = {
+    val f = java.nio.file.Files.createTempFile("graft-test-pools", ".xml")
+    f.toFile.deleteOnExit()
+    val in = getClass.getResourceAsStream("/graft-test-pools.xml")
+    try java.nio.file.Files.copy(in, f,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    finally in.close()
+    f.toUri.toString
+  }
+
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
@@ -15,10 +25,11 @@ object SparkTestSession {
     // FAIR so named scheduler pools exist (ConcurrentPipelinesSpec, the
     // async CDC fold); the allocation file declares them with Spark's
     // undeclared-pool defaults — for the suites that never set a pool
-    // this behaves like FIFO in one pool
+    // this behaves like FIFO in one pool. The resource is copied to a
+    // file: under `Test/runMain` it sits in a jar, and Spark cannot open
+    // a `jar:` URI as the allocation file
     .config("spark.scheduler.mode", "FAIR")
-    .config("spark.scheduler.allocation.file",
-      getClass.getResource("/graft-test-pools.xml").toString)
+    .config("spark.scheduler.allocation.file", poolFile)
     .getOrCreate()
   spark.sparkContext.setLogLevel("WARN")
 }
