@@ -6,63 +6,39 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.cdc.{ChangeGen, ChangeSource, ManifestReplica, Replicate}
 import graft.streaming.BatchMetricsListener
 
-/** Benchmark main (driver-run per round → BENCH_r{N}.json).
+/** Benchmark main: prints one JSON result line.
   *
-  * Round-1 fixes (VERDICT item 4): queries materialize through the noop
-  * sink — `count()` let Catalyst drop top-level sorts and prune columns,
-  * under-measuring every ORDER BY-terminated plan; the side-effectful CDC
-  * pipeline is OUT of the per-query map and measured separately as
-  * throughput + worst-micro-batch latency (its envelope in BASELINE.md is
-  * latency, not a one-shot wall time); failures are reported loudly in
-  * the JSON instead of silently becoming -1.
-  *
-  * Round-4 fixes (VERDICT r3 items 4/6): the query map runs TWICE — an
-  * untimed warm pass (JIT/codegen/listing caches; a production cluster
-  * is warm) then the timed pass that is reported.
-  *
-  * Round-6 fix (VERDICT r5 item 1, third attempt): the r5 artifact
-  * proves the driver window is 2000 RAW chars of combined output whose
-  * last ~73 chars are always sbt's "[success] Total time" line, so the
-  * whole printed line must fit ~1927 chars. A 96-key JSON object has a
-  * structural floor ~1970 (see the rendering comment below) — no value
-  * trimming can save it — so the per-query timings are emitted as
-  * parallel arrays ("qk" csv + "qv" integer deciseconds), which fits
-  * with >100 chars margin. Full-precision map + per-batch CDC detail:
-  * /tmp/graft_bench.json and BENCHFULL_r06.json. The shared LSH
-  * signature+pair pass stays its own timed `lsh_shared_pass` entry
-  * after the memo reset, so the six dedup-family queries report their
-  * MARGINAL cost instead of whichever ran first absorbing the family's
-  * corpus pass.
-  *
-  * Round-8 fixes (VERDICT r7 items 1/3): contention robustness. The
-  * r7 artifact captured a contended host (15-min load ~10 at judging
-  * time) and the committed record breached the 2 s CDC budget on
-  * UNCHANGED code. Contention is one-sided noise — it can only inflate
-  * a batch — so (a) the graded CDC cells (rename + manifest) now run
-  * the timed stream `SPARK_GRAFT_CDC_RUNS` times (default 3, fresh
-  * replica each) and report the BEST run, with every run's detail in
-  * the backstop; (b) the host load average (1/5/15-min, sampled before
-  * the run's own load pollutes it) rides both the printed line (`ld`)
-  * and the backstop, so a future contended artifact carries its own
-  * evidence; (c) the 100× probe records per-batch times so bulk
-  * catch-up spikes separate from steady state.
+  * - CDC: the graded replication cells (rename and manifest protocols)
+  *   measure throughput and worst micro-batch latency, the envelope
+  *   BASELINE.md states. Host contention can only slow a batch, so each
+  *   cell runs its timed stream `SPARK_GRAFT_CDC_RUNS` times (default 3,
+  *   fresh replica each) and reports the best run; every run's detail
+  *   goes to the full record. Scale and skew probes follow, each in its
+  *   own failure scope.
+  * - Queries: every declared row except the `cdc_*` fixtures and the
+  *   stream-harness rows runs twice, an untimed warm pass (JIT, codegen,
+  *   listing and schema caches) and the timed pass. In between, each
+  *   [[graft.ml.SharedPass]] resets its memo tags and is timed as its
+  *   own line. Rows materialize through the `noop` sink: `count()` would
+  *   let Catalyst drop top-level sorts and prune columns.
+  * - Output: the printed line carries only bounded aggregates (total,
+  *   pre-run load average `ld`, the graded CDC cell, the slowest rows
+  *   that fit a fixed budget, failed keys), because the reader parses
+  *   the last ~2000 chars of output. Full timings and per-batch CDC
+  *   detail go to /tmp/graft_bench.json and BENCHFULL_latest.json.
+  *   Failures are recorded under their key, never as silent -1s.
   *
   * `SPARK_GRAFT_ONLY=cdc|queries` restricts the run while iterating;
   * `SPARK_GRAFT_QUERIES=a,b,c` (dev-only) restricts the query map to
   * the named keys for targeted A/B timing.
   */
 object Bench {
-  /** Temp-dir registry (VERDICT r14 #1). Every `createTempDirectory`
-    * in this main routes through here, and `sweepTempDirs()` removes
-    * them all before the result line prints. A full-surface run makes
-    * 33 dirs (the 100×/1000× probes' change logs alone are ~600 MB);
-    * left behind they accumulated ~25 GB of /tmp across records — the
-    * disk-pressure source BENCH_NOTE diagnosed for cross-record "host
-    * wander". The sweep runs AFTER all timing and backstop writes, so
-    * deletion cost never lands in a measured query. Note for the
-    * record: the r14 BENCH_NOTE described this registry before the
-    * code existed (commit 27e9d79 changed only prose); this is the
-    * actual implementation.
+  /** Temp-dir registry. Every `createTempDirectory` in this main routes
+    * through here, and `sweepTempDirs()` removes them all before the
+    * result line prints: a full-surface run makes 33 dirs (the 100× and
+    * 1000× probes' change logs alone are ~600 MB), which left behind
+    * fill /tmp across runs. The sweep runs AFTER all timing and record
+    * writes, so deletion cost never lands in a measured query.
     */
   private val tempDirs =
     scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
@@ -113,6 +89,9 @@ object Bench {
     val spark = GraftSession(defaultCpus = 32)
 
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    def firstLine(e: Throwable): String =
+      Option(e.getMessage).getOrElse(e.getClass.getName)
+        .linesIterator.take(1).mkString
 
     // locale-pinned number rendering: the f-interpolator uses the JVM
     // default locale, and a comma-decimal locale would corrupt the JSON
@@ -262,8 +241,7 @@ object Bench {
           .mkString("[", ",", "]")
       } catch { case e: Throwable =>
         System.err.println(s"[bench] manifest CDC FAILED: $e")
-        errors("cdc_manifest") = Option(e.getMessage)
-          .getOrElse(e.getClass.getName).linesIterator.take(1).mkString
+        errors("cdc_manifest") = firstLine(e)
       }
 
       // 10× scale probe (r5 verdict ask #6, backstop-only): 150k stream
@@ -320,8 +298,7 @@ object Bench {
         s""","cdc10x":{"rows":150000,"buckets":64,"rows_per_sec":${num(l10.rowsPerSec, 1)},"worst_batch_sec":${num(l10.worstBatchSec, 3)},"batch_secs":$bs10,"read_premerge_sec":${num(readPre, 3)},"final_fold_sec":${num(foldSec, 3)},"read_compacted_sec":${num(readPost, 3)}}"""
       } catch { case e: Throwable =>
         System.err.println(s"[bench] 10x CDC probe FAILED: $e")
-        errors("cdc10x") = Option(e.getMessage)
-          .getOrElse(e.getClass.getName).linesIterator.take(1).mkString
+        errors("cdc10x") = firstLine(e)
         ""
       }
 
@@ -380,8 +357,7 @@ object Bench {
         s""","cdc100x":{"rows":1500000,"buckets":256,"batches":20,"rows_per_sec":${num(l100.rowsPerSec, 1)},"worst_batch_sec":${num(l100.worstBatchSec, 3)},"batch_secs":$bs100,"read_premerge_sec":${num(readPre, 3)},"final_fold_sec":${num(foldSec, 3)},"read_compacted_sec":${num(readPost, 3)}}"""
       } catch { case e: Throwable =>
         System.err.println(s"[bench] 100x CDC probe FAILED: $e")
-        errors("cdc100x") = Option(e.getMessage)
-          .getOrElse(e.getClass.getName).linesIterator.take(1).mkString
+        errors("cdc100x") = firstLine(e)
         ""
       }
 
@@ -446,8 +422,7 @@ object Bench {
         s""","man100x":{"rows":1500000,"buckets":256,"batches":20,"rows_per_sec":${num(lM.rowsPerSec, 1)},"worst_batch_sec":${num(lM.worstBatchSec, 3)},"batch_secs":$bsM,"read_premerge_sec":${num(readPre, 3)},"final_fold_sec":${num(foldSec, 3)},"read_compacted_sec":${num(readPost, 3)},"tt_versions":${vs.size},"tt_oldest_rows":$ttRows}"""
       } catch { case e: Throwable =>
         System.err.println(s"[bench] manifest 100x probe FAILED: $e")
-        errors("man100x") = Option(e.getMessage)
-          .getOrElse(e.getClass.getName).linesIterator.take(1).mkString
+        errors("man100x") = firstLine(e)
         ""
       }
 
@@ -487,8 +462,7 @@ object Bench {
         s""","cdcskew":{"rows":150000,"buckets":64,"hot_keys":10,"hot_share":${num(hotShare, 3)},"rows_per_sec":${num(lS.rowsPerSec, 1)},"worst_batch_sec":${num(lS.worstBatchSec, 3)},"batch_secs":$bsS}"""
       } catch { case e: Throwable =>
         System.err.println(s"[bench] skew probe FAILED: $e")
-        errors("cdcskew") = Option(e.getMessage)
-          .getOrElse(e.getClass.getName).linesIterator.take(1).mkString
+        errors("cdcskew") = firstLine(e)
         ""
       }
 
@@ -529,8 +503,7 @@ object Bench {
         s""","manskew":{"rows":150000,"buckets":64,"hot_keys":10,"hot_share":${num(hotShareMS, 3)},"rows_per_sec":${num(lMS.rowsPerSec, 1)},"worst_batch_sec":${num(lMS.worstBatchSec, 3)},"batch_secs":$bsMS}"""
       } catch { case e: Throwable =>
         System.err.println(s"[bench] manifest skew probe FAILED: $e")
-        errors("manskew") = Option(e.getMessage)
-          .getOrElse(e.getClass.getName).linesIterator.take(1).mkString
+        errors("manskew") = firstLine(e)
         ""
       }
 
@@ -592,8 +565,7 @@ object Bench {
         s""","cdc1000x":{"rows":15000000,"buckets":1024,"batches":40,"snapshot_sec":${num(snapSec, 3)},"rows_per_sec":${num(l1k.rowsPerSec, 1)},"worst_batch_sec":${num(l1k.worstBatchSec, 3)},"batch_secs":$bs1k,"read_premerge_sec":${num(readPre, 3)},"final_fold_sec":${num(foldSec, 3)},"read_compacted_sec":${num(readPost, 3)}}"""
       } catch { case e: Throwable =>
         System.err.println(s"[bench] 1000x CDC probe FAILED: $e")
-        errors("cdc1000x") = Option(e.getMessage)
-          .getOrElse(e.getClass.getName).linesIterator.take(1).mkString
+        errors("cdc1000x") = firstLine(e)
         ""
       }
 
@@ -608,8 +580,7 @@ object Bench {
         s"""{"rows_per_sec":${num(bestRun.rowsPerSec, 1)},"worst_batch_sec":${num(bestRun.worst, 3)},"batches":${bestRun.batches},"rows":${bestRun.rows},"batch_secs":${bestRun.batchSecs},"runs":$renameRunsJson,"bulk_rows_per_sec":${num(bulkListener.rowsPerSec, 1)}$manFields$probe10x$probe100x$probeMan100x$probeSkew$probeManSkew$probe1000x}""")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] CDC FAILED: $e")
-      errors("cdc_pipeline") = Option(e.getMessage).getOrElse(e.getClass.getName)
-        .linesIterator.take(1).mkString
+      errors("cdc_pipeline") = firstLine(e)
       ("""{"rows_per_sec":-1}""", """{"rows_per_sec":-1}""")
     }
 
@@ -643,136 +614,39 @@ object Bench {
           catch { case e: Throwable =>
             System.err.println(s"[bench] warm-pass FAILED $name: $e") }
         }
-        // the warm pass populated the dedup memo; drop it, then pay the
-        // family's ONE corpus-wide signature+pair pass as its own timed
-        // line — the six dedup-family queries then report marginal cost
-        // instead of whichever ran first absorbing the shared pass.
-        // Skipped when a SPARK_GRAFT_QUERIES filter selects no
-        // memo-backed query — a targeted A/B run must not pay (or fold
-        // into its total) the most expensive line in the map.
-        graft.ml.Dedup.clearCache()
-        val lshConsumers = Set("ml_dedup_near", "ml_levenshtein_near",
-          "ml_chargram_jaccard", "ml_dedup_corpus", "ml_dedup_clusters",
-          "ml_dedup_corpus_cc", "ml_minhash_sig", "ml_dedup_increment",
-          "ml_dedup_stream")
-        val lshLine: Map[String, Double] =
-          if (!qmap.keys.exists(lshConsumers)) Map.empty
+        // each family's shared work (SharedPass) is reset and paid once
+        // as its own timed line, so its consumer rows report marginal
+        // cost. A pass whose consumers the SPARK_GRAFT_QUERIES filter
+        // leaves out is reset but not run: a targeted A/B run must not
+        // pay (or fold into its total) the most expensive lines.
+        val passLines = graft.ml.SharedPass.all.flatMap { p =>
+          graft.ml.Memo.clear(p.memoTags: _*)
+          if (!qmap.keys.exists(p.consumers)) None
           else {
-            val lshT0 = System.nanoTime()
-            try {
-              graft.ml.Dedup
-                .nearDupPairs(graft.core.Tables(spark, sfDir, "documents"))
-                .write.format("noop").mode("overwrite").save()
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] lsh_shared_pass FAILED: $e")
-              errors("lsh_shared_pass") = Option(e.getMessage)
-                .getOrElse(e.getClass.getName).linesIterator.take(1).mkString
-            }
-            Map("lsh_shared_pass" -> (System.nanoTime() - lshT0) / 1e9)
-          }
-        // the same discipline for the ANN model family (r13 verdict
-        // #3): the warm pass populated the model memo (coarse
-        // centroids, raw + residual PQ codebooks shared by ml_pq_ann /
-        // ml_ivfadc / ml_ivfadc_indexed / ml_ann_recall_multi /
-        // ml_ann_filtered_indexed / ml_ann_cdc_index); drop it and pay
-        // ONE timed shared-model line so each row reports marginal
-        // cost. The index WRITE stays on whichever indexed row runs
-        // first (the write is that row's point; the other serves from
-        // the artifact — exactly the operational build/serve split).
-        graft.ml.Similarity.clearModelCache()
-        val annConsumers = Set("ml_pq_ann", "ml_ivfadc",
-          "ml_ivfadc_indexed", "ml_ann_recall_multi",
-          "ml_ann_filtered_indexed", "ml_ann_cdc_index",
-          "ml_ann_cell_split")
-        val annLine: Map[String, Double] =
-          if (!qmap.keys.exists(annConsumers)) Map.empty
-          else {
-            val annT0 = System.nanoTime()
-            try {
-              val emb = graft.core.Tables(spark, sfDir, "embeddings")
-              graft.ml.Similarity.pqTrain(emb)
-              graft.ml.Similarity.ivfAdcTrain(emb)
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] ann_model_shared_pass FAILED: $e")
-              errors("ann_model_shared_pass") = Option(e.getMessage)
-                .getOrElse(e.getClass.getName).linesIterator.take(1).mkString
-            }
-            Map("ann_model_shared_pass" ->
-              (System.nanoTime() - annT0) / 1e9)
-          }
-        // the same discipline for the maintained-index family (r14
-        // verdict #5): the warm pass built and memoized the four
-        // CDC-e2e rows' maintained artifacts; drop the handles and pay
-        // the four fixtures' stream-and-maintain cost as ONE timed
-        // line, so the family rows report marginal (serve) cost — the
-        // operational shape, where a standing maintainer keeps each
-        // index warm and a serving job only reads it.
-        // tag-scoped: only the CDC maintain entries reset (repaid by
-        // the timed line below); build-memo entries (cell-split /
-        // hot-split serving artifacts) stay warm per the index-build
-        // precedent above
-        graft.ml.MaintainedMemo.clearCache(
-          "anncdc", "annss", "txtcdc", "txtss", "dedupcdc", "hybcdc",
-          "expcdc", "gatecdc")
-        val maintConsumers = Set("ml_ann_cdc_index", "ml_ann_stream_split",
-          "ml_bm25_cdc_index", "ml_bm25_stream_split",
-          "ml_dedup_cdc_index", "ml_hybrid_cdc_serve",
-          "ml_export_incremental", "ml_dedup_gate_index")
-        val maintLine: Map[String, Double] =
-          if (!qmap.keys.exists(maintConsumers)) Map.empty
-          else {
-            val maintT0 = System.nanoTime()
-            try graft.ml.MlQueries.cdcMaintainSharedPass(spark, sfDir)
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] cdc_maint_shared_pass FAILED: $e")
-              errors("cdc_maint_shared_pass") = Option(e.getMessage)
-                .getOrElse(e.getClass.getName).linesIterator.take(1).mkString
-            }
-            Map("cdc_maint_shared_pass" ->
-              (System.nanoTime() - maintT0) / 1e9)
-          }
-        // and the split-serving rows' BUILD memos (ADVICE r15 #5):
-        // txtsplit/ddxsplit/cellsplit previously stayed warm across the
-        // reset, so their build+split cost appeared in NO timed line —
-        // the common-N total understated that work. Reset them and
-        // repay the builds as one timed index_build_shared_pass line;
-        // the three rows then report marginal (serve) cost like the
-        // CDC family.
-        graft.ml.MaintainedMemo.clearCache(
-          "txtsplit", "ddxsplit", "cellsplit")
-        val splitConsumers = Set("ml_bm25_split_serve",
-          "ml_dedup_split_screen", "ml_ann_cell_split")
-        val splitLine: Map[String, Double] =
-          if (!qmap.keys.exists(splitConsumers)) Map.empty
-          else {
-            val splitT0 = System.nanoTime()
-            try graft.ml.MlQueries.indexBuildSharedPass(spark, sfDir)
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] index_build_shared_pass FAILED: $e")
-              errors("index_build_shared_pass") = Option(e.getMessage)
-                .getOrElse(e.getClass.getName).linesIterator.take(1).mkString
-            }
-            Map("index_build_shared_pass" ->
-              (System.nanoTime() - splitT0) / 1e9)
-          }
-        // pass 2 (timed, reported). Guard (r16 VERDICT #5): a
-        // maintain-conf span leaking past its owner would plan every
-        // later row at width 8 with AQE off — assert none is live
-        // before each timed row (spans opened BY a row's own rebuild
-        // close inside it, so this only trips on a genuine leak).
-        lshLine ++ annLine ++ maintLine ++ splitLine ++
-          qmap.map { case (name, fn) =>
-            require(!graft.streaming.StreamHygiene.inMaintainSpan(spark),
-              s"maintain-conf span leaked into timed row $name")
             val t0 = System.nanoTime()
-            try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            try p.run(spark, sfDir)
             catch { case e: Throwable =>
-              errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-                .linesIterator.take(1).mkString
-              System.err.println(s"[bench] FAILED $name: $e")
+              System.err.println(s"[bench] ${p.name} FAILED: $e")
+              errors(p.name) = firstLine(e)
             }
-            name -> (System.nanoTime() - t0) / 1e9
+            Some(p.name -> (System.nanoTime() - t0) / 1e9)
           }
+        }
+        // pass 2 (timed, reported). A maintain-conf span leaking past
+        // its owner would plan every later row at width 8 with AQE off,
+        // so none may be live before a timed row (spans opened BY a
+        // row's own rebuild close inside it).
+        passLines.toMap ++ qmap.map { case (name, fn) =>
+          require(!graft.streaming.StreamHygiene.inMaintainSpan(spark),
+            s"maintain-conf span leaked into timed row $name")
+          val t0 = System.nanoTime()
+          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          catch { case e: Throwable =>
+            errors(name) = firstLine(e)
+            System.err.println(s"[bench] FAILED $name: $e")
+          }
+          name -> (System.nanoTime() - t0) / 1e9
+        }
       }
 
     def jstr(s: String): String = "\"" + s.flatMap {

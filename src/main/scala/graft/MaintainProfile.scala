@@ -72,9 +72,8 @@ object MaintainProfile {
     // warm pass (Bench pass-1 analog), then reset the memo tags Bench
     // resets so the profiled pass rebuilds exactly what Bench times
     runPass()
-    graft.ml.MaintainedMemo.clearCache("txtsplit", "ddxsplit",
-      "cellsplit", "anncdc", "annss", "txtcdc", "txtss", "dedupcdc",
-      "hybcdc", "expcdc", "gatecdc")
+    graft.ml.Memo.clear(Seq("index_build_shared_pass", "cdc_maint_shared_pass")
+      .flatMap(graft.ml.SharedPass.named(_).memoTags): _*)
 
     spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()

@@ -874,13 +874,13 @@ object AnnIndex {
       k: Int = PqTopK, nprobe: Int = IvfAdcProbe): DataFrame = {
     import spark.implicits._
     // build + split are memoized per (session, fixture paths) — the
-    // build/serve split every indexed row follows ([[MaintainedMemo]]):
+    // build/serve split every indexed row follows ([[Memo]]):
     // the timed row is the post-re-balance SERVE, the one-time build
     // and 2-means train ride the shared accounting
-    val (indexPath, newCents, cb) = MaintainedMemo.maintained(
-        (spark, "cellsplit", cent0Path, cent1Path, cbPath)) {
+    val (indexPath, newCents, cb) = Memo.get("cellsplit",
+        (spark, cent0Path, cent1Path, cbPath)) {
       val (cents, cb0) = Similarity.ivfAdcModel(emb, cent0Path, cbPath)
-      val idxRoot = MaintainedMemo.keepUntilExit(
+      val idxRoot = Memo.keepUntilExit(
         Files.createTempDirectory("graft-split-idx").toString)
       val idx = s"$idxRoot/index"
       val corpusQ = Similarity.quantized(emb).select("vec_id", "q")
@@ -1046,8 +1046,8 @@ object AnnIndex {
   final case class MaintainedAnn(indexPath: String,
       cents: Seq[Seq[Long]], cb: Seq[Seq[Seq[Long]]])
 
-  /** The stream-and-maintain pass, memoized per (session, ops path) —
-    * [[MaintainedMemo]]'s doctrine: the fixture stream is
+  /** The stream-and-maintain pass, memoized per (session, ops path)
+    * in [[Memo]]: the fixture stream is
     * deterministic, so one pass per JVM serves every later invocation
     * (Bench's warm + timed passes; its timed `cdc_maint_shared_pass`
     * line pays this cost explicitly after the reset). The change-log
@@ -1057,7 +1057,7 @@ object AnnIndex {
   def cdcMaintain(spark: SparkSession, emb: DataFrame,
       centroidPath: String, codebookPath: String, opsDumpPath: String,
       epochs: Int = 3): MaintainedAnn =
-    MaintainedMemo.maintained((spark, "anncdc", opsDumpPath)) {
+    Memo.get("anncdc", (spark, opsDumpPath)) {
       import spark.implicits._
       val (cents, cb) = Similarity.ivfAdcModel(emb, centroidPath,
         codebookPath)
@@ -1072,7 +1072,7 @@ object AnnIndex {
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(opsDumpPath)
       val changeDir = Files.createTempDirectory("graft-anncdc-log").toString
       val ckptDir = Files.createTempDirectory("graft-anncdc-ckpt").toString
-      val idxRoot = MaintainedMemo.keepUntilExit(
+      val idxRoot = Memo.keepUntilExit(
         Files.createTempDirectory("graft-anncdc-idx").toString)
       val indexPath = s"$idxRoot/index"
       try {
@@ -1143,7 +1143,7 @@ object AnnIndex {
   def cdcMaintainRebalanced(spark: SparkSession, emb: DataFrame,
       centroidPath: String, codebookPath: String, opsDumpPath: String,
       logDumpPath: String, epochs: Int = 3): MaintainedAnnLog =
-    MaintainedMemo.maintained((spark, "annss", opsDumpPath)) {
+    Memo.get("annss", (spark, opsDumpPath)) {
       import spark.implicits._
       val (root, cb) = Similarity.ivfAdcModel(emb, centroidPath,
         codebookPath)
@@ -1159,7 +1159,7 @@ object AnnIndex {
       IndexFs.deleteDir(spark, logDumpPath)
       val changeDir = Files.createTempDirectory("graft-annss-log").toString
       val ckptDir = Files.createTempDirectory("graft-annss-ckpt").toString
-      val idxRoot = MaintainedMemo.keepUntilExit(
+      val idxRoot = Memo.keepUntilExit(
         Files.createTempDirectory("graft-annss-idx").toString)
       val indexPath = s"$idxRoot/index"
       val replicaPath = s"$idxRoot/replica"

@@ -57,92 +57,24 @@ object Dedup {
       .agg(min(col("doc_id")).as("keeper_id"),
         count(lit(1)).as("dup_cnt"))
 
-  // -------------------------------------------------------------------
-  // Session-scoped memo for the staged intermediates (VERDICT r3 #2):
-  // the verified pair list feeds SIX declared queries (near/levenshtein/
-  // chargram/corpus/clusters/corpus_cc) — without sharing, each re-runs
-  // the full corpus-wide LSH pass. Both memoized values are
-  // localCheckpoint'ed (lineage-cut) and O(docs·64 longs) / O(true
-  // near-dups) — tiny relative to the corpus — so holding them leaks
-  // nothing meaningful. Keyed by the CANONICALIZED analyzed plan
-  // (Catalyst `sameResult` semantics — exact, not a hash) plus the
-  // session identity, so different fixtures / sessions never collide.
-  // At 100 TB the operational shape is [[pipeline]], which stages each
-  // intermediate to parquet instead of executor memory.
-  // -------------------------------------------------------------------
-  /** Memo capacity: one corpus uses 2 entries (sigs + pairs); 8 covers
-    * ~3-4 concurrently-scanned corpora. A long-lived service scanning
-    * many corpora evicts least-recently-used entries instead of
-    * accumulating checkpointed blocks for the session lifetime
-    * (VERDICT r4 #3). */
-  val MaxMemoEntries = 8
-
-  // access-ordered LRU. Eviction only FORGETS the entry — it must NOT
-  // unpersist: a handed-out localCheckpoint'ed frame whose blocks are
-  // dropped cannot be recomputed, so eager release would crash any
-  // caller still holding (or lazily building on) the evicted frame.
-  // The ContextCleaner reaps the blocks once the frame is unreachable —
-  // exactly the wanted lifetime. clearCache() stays eager: it is the
-  // explicit isolation call whose contract is "no outstanding readers".
-  private val memo =
-    new java.util.LinkedHashMap[AnyRef, DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[AnyRef, DataFrame]): Boolean =
-        size > MaxMemoEntries
-    }
-
-  /** Unpersist the RDD behind a `localCheckpoint(true)`-produced frame
-    * (its analyzed plan is a `LogicalRDD` over the checkpointed RDD).
-    * Best-effort: anything unexpected just leaves the blocks to the
-    * ContextCleaner, as before. */
-  private def releaseBlocks(df: DataFrame): Unit =
-    try df.queryExecution.analyzed match {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
-      case _ => ()
-    } catch { case _: Throwable => () }
-
-  // the session REFERENCE itself (reference equality), not its identity
-  // hash code — hash codes can collide across two live sessions reading
-  // the same fixture, which would hand one session a DataFrame bound to
-  // the other's plan
+  // The staged intermediates live in [[Memo]]: the verified pair list
+  // feeds six declared queries (near/levenshtein/chargram/corpus/
+  // clusters/corpus_cc), which would otherwise each re-run the
+  // corpus-wide LSH pass. The values are localCheckpoint'ed (lineage
+  // cut) and O(docs·64 longs) / O(true near-dups), small next to the
+  // corpus. Keys hold the session reference and the CANONICALIZED
+  // analyzed plan (Catalyst `sameResult` semantics, not a hash), so
+  // different fixtures or sessions never collide. At 100 TB the
+  // operational shape is [[pipeline]], which stages each intermediate
+  // to parquet instead of executor memory.
   private def docsKey(docs: DataFrame): AnyRef =
     (docs.sparkSession, docs.queryExecution.analyzed.canonicalized)
-
-  // builds (corpus-scale Spark jobs) run OUTSIDE the monitor: a
-  // minutes-long signature pass for corpus A must not block a cache hit
-  // for corpus B, and the nested build chain (pairs → sigs) needs no
-  // reentrancy games. Two threads racing the same cold key both build;
-  // the first put wins and the loser's duplicate frame is reaped by the
-  // ContextCleaner — wasted work in a rare race, never a wrong result.
-  private def memoized(key: AnyRef)(build: => DataFrame): DataFrame = {
-    val hit = memo.synchronized(memo.get(key))
-    if (hit != null) hit
-    else {
-      val built = build
-      memo.synchronized {
-        val winner = memo.get(key)
-        if (winner != null) winner
-        else { memo.put(key, built); built }
-      }
-    }
-  }
-
-  /** Drop all memoized intermediates (tests / bench isolation), eagerly
-    * releasing their checkpointed blocks. */
-  def clearCache(): Unit = memo.synchronized {
-    memo.values().forEach(releaseBlocks(_))
-    memo.clear()
-  }
-
-  /** Memoized-entry count (observability + spec assertions). */
-  def cacheSize: Int = memo.synchronized(memo.size())
 
   /** Materialized wide MinHash signatures for `docs` — ONE corpus pass
     * per (corpus, k) per session, shared by [[minhashLong]] and the LSH
     * pipeline. */
   def signatures(docs: DataFrame, k: Int = 3): DataFrame =
-    memoized(("sigs", docsKey(docs), k)) {
+    Memo.get("sigs", (docsKey(docs), k)) {
       minhashWide(docs, k).localCheckpoint(true)
     }
 
@@ -249,11 +181,11 @@ object Dedup {
   /** Near-dup pairs: LSH candidates verified by exact shingle-set Jaccard
     * ≥ `minJaccard`. Returns (doc_a, doc_b, jaccard). Memoized per
     * (corpus, minJaccard, k): the SIX consumer queries share one LSH
-    * pass (VERDICT r3 #2) — the cached value is the lineage-cut pair
+    * pass — the cached value is the lineage-cut pair
     * list, costing O(true near-dups) executor memory. */
   def nearDupPairs(docs: DataFrame, minJaccard: Double = 0.7, k: Int = 3)
       : DataFrame =
-    memoized(("pairs", docsKey(docs), minJaccard, k)) {
+    Memo.get("pairs", (docsKey(docs), minJaccard, k)) {
       verifiedPairsFrom(signatures(docs, k), docs, minJaccard, k)
     }.orderBy("doc_a", "doc_b")
 
@@ -382,7 +314,7 @@ object Dedup {
     * A≁C is ONE cluster keeping min-id, where the greedy drop-doc_b pass
     * would over-drop). */
   def dedupClusters(docs: DataFrame, minJaccard: Double = 0.7): DataFrame =
-    memoized(("clusters", docsKey(docs), minJaccard)) {
+    Memo.get("clusters", (docsKey(docs), minJaccard)) {
       clustersOf(nearDupPairs(docs, minJaccard).select("doc_a", "doc_b"))
     }.orderBy("doc_id")
 

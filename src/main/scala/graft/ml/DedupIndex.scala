@@ -160,9 +160,9 @@ object DedupIndex {
     * per (session, corpus plan); the screen is the row's marginal
     * cost. */
   def splitScreen(spark: SparkSession, docs: DataFrame): DataFrame = {
-    val built = MaintainedMemo.maintained(
-        (spark, "ddxsplit", docs.queryExecution.analyzed.canonicalized)) {
-      val root = MaintainedMemo.keepUntilExit(
+    val built = Memo.get("ddxsplit",
+        (spark, docs.queryExecution.analyzed.canonicalized)) {
+      val root = Memo.keepUntilExit(
         Files.createTempDirectory("graft-ddxsplit").toString)
       val (bp, sp) = (s"$root/bands", s"$root/sigs")
       buildIndex(docs.select("doc_id", "text"), bp, sp)
@@ -649,12 +649,12 @@ object DedupIndex {
   final case class MaintainedDedup(bandsPath: String, sigsPath: String)
 
   /** The stream-and-maintain pass, memoized per (session, ops path) —
-    * see [[MaintainedMemo]]: one pass per JVM; the change-log and
+    * see [[Memo]]: one pass per JVM; the change-log and
     * checkpoint temp dirs are removed as soon as the stream finishes,
     * the band + signature sub-artifacts live until JVM exit. */
   def cdcMaintain(spark: SparkSession, docs: DataFrame,
       opsDumpPath: String, epochs: Int = 3): MaintainedDedup =
-    MaintainedMemo.maintained((spark, "dedupcdc", opsDumpPath)) {
+    Memo.get("dedupcdc", (spark, opsDumpPath)) {
       import spark.implicits._
       val snap: Seq[(Long, String)] =
         docs.select("doc_id", "text").collect()
@@ -665,7 +665,7 @@ object DedupIndex {
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(opsDumpPath)
       val changeDir = Files.createTempDirectory("graft-dedupcdc-log").toString
       val ckptDir = Files.createTempDirectory("graft-dedupcdc-ckpt").toString
-      val idxRoot = MaintainedMemo.keepUntilExit(
+      val idxRoot = Memo.keepUntilExit(
         Files.createTempDirectory("graft-dedupcdc-idx").toString)
       val bandsPath = s"$idxRoot/bands"
       val sigsPath = s"$idxRoot/sigs"

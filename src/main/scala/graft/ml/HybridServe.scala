@@ -100,15 +100,14 @@ object HybridServe {
       annIdx: String, cents: Seq[Seq[Long]], cb: Seq[Seq[Seq[Long]]])
 
   /** The one-stream-two-maintainers pass, memoized per (session, ops
-    * paths) — see [[MaintainedMemo]]: one pass per JVM; the change-log
+    * paths) — see [[Memo]]: one pass per JVM; the change-log
     * and checkpoint temp dirs are removed as soon as the stream
     * finishes, both index artifacts live until JVM exit. */
   def cdcMaintain(spark: SparkSession, docs: DataFrame,
       emb: DataFrame, centroidPath: String, codebookPath: String,
       docOpsPath: String, embOpsPath: String, epochs: Int = 3)
       : MaintainedHybrid =
-    MaintainedMemo.maintained(
-      (spark, "hybcdc", docOpsPath, embOpsPath)) {
+    Memo.get("hybcdc", (spark, docOpsPath, embOpsPath)) {
       import spark.implicits._
       val (cents, cb) = Similarity.ivfAdcModel(emb, centroidPath,
         codebookPath)
@@ -128,7 +127,7 @@ object HybridServe {
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(embOpsPath)
       val changeDir = Files.createTempDirectory("graft-hyb-log").toString
       val ckptDir = Files.createTempDirectory("graft-hyb-ckpt").toString
-      val idxRoot = MaintainedMemo.keepUntilExit(
+      val idxRoot = Memo.keepUntilExit(
         Files.createTempDirectory("graft-hyb-idx").toString)
       val txtIdx = s"$idxRoot/postings"
       val txtStats = s"$idxRoot/stats"

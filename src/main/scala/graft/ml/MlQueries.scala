@@ -4572,16 +4572,11 @@ object MlQueries {
     mediaNearDup, mediaTemporal,
     audioDecode, audioVad, audioResample)
 
-  /** The maintained-index family's shared stream-and-maintain pass
-    * (the `lsh_shared_pass` / `ann_model_shared_pass` precedent,
-    * VERDICT r14 #5): Bench resets [[MaintainedMemo]] after its warm
-    * pass and pays the four CDC-e2e fixtures' maintenance here as ONE
-    * timed `cdc_maint_shared_pass` line, so `ml_ann_cdc_index` /
-    * `ml_bm25_cdc_index` / `ml_dedup_cdc_index` / `ml_hybrid_cdc_serve`
-    * report their marginal (serve) cost — the operational shape, where
-    * a standing maintainer keeps each index warm and the serving job
-    * only reads it. Uses this object's private fixture paths so the
-    * memo keys match the declared rows'. */
+  /** The maintained-index family's shared stream-and-maintain pass,
+    * the body of [[SharedPass]] `cdc_maint_shared_pass`: it builds the
+    * eight maintained artifacts the CDC-e2e rows serve from. Uses this
+    * object's private fixture paths so the memo keys match the declared
+    * rows'. */
   def cdcMaintainSharedPass(s: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     // per-maintain stderr breakdown so the one timed line stays
@@ -4659,19 +4654,13 @@ object MlQueries {
     ()
   }
 
-  /** The split-serving rows' shared BUILD pass (ADVICE r15 #5): the
-    * `txtsplit` / `ddxsplit` / `cellsplit` build memos (index build +
-    * hot-bucket/cell splits + genealogy persistence behind
-    * `ml_bm25_split_serve` / `ml_dedup_split_screen` /
-    * `ml_ann_cell_split`) previously reset in NO timed line — their
-    * cost rode only the untimed warm pass, so the common-N total
-    * silently excluded that work. Bench now clears those memos after
-    * the warm pass and repays them here as one timed
-    * `index_build_shared_pass` line, the same contract as
-    * `cdc_maint_shared_pass`: the rows report marginal (serve) cost
-    * AND the build cost appears in a timed aggregate. Each callee
-    * builds eagerly inside its memo block; the returned serve frames
-    * are the rows' marginal work and are not executed here. */
+  /** The split-serving rows' shared BUILD pass, the body of
+    * [[SharedPass]] `index_build_shared_pass`: the index builds, the
+    * hot-bucket/cell splits and the genealogy persistence behind
+    * `ml_bm25_split_serve`, `ml_dedup_split_screen` and
+    * `ml_ann_cell_split`. Each callee builds eagerly inside its memo
+    * block; the returned serve frames are the rows' marginal work and
+    * are not executed here. */
   def indexBuildSharedPass(s: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     // three INDEPENDENT builds (disjoint memo tags + artifact roots,

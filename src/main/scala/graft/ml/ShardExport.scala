@@ -208,12 +208,12 @@ object ShardExport {
       manifestPath: String)
 
   /** The stream-and-maintain pass, memoized per (session, ops path) —
-    * see [[MaintainedMemo]]: one pass per JVM; the change-log and
+    * see [[Memo]]: one pass per JVM; the change-log and
     * checkpoint temp dirs are removed as soon as the stream finishes,
     * the shards + manifest artifacts live until JVM exit. */
   def cdcMaintain(spark: SparkSession, docs: DataFrame,
       opsDumpPath: String, epochs: Int = 3): MaintainedExport =
-    MaintainedMemo.maintained((spark, "expcdc", opsDumpPath)) {
+    Memo.get("expcdc", (spark, opsDumpPath)) {
       import spark.implicits._
       val snap: Seq[(Long, String)] =
         docs.select("doc_id", "text").collect()
@@ -224,7 +224,7 @@ object ShardExport {
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(opsDumpPath)
       val changeDir = Files.createTempDirectory("graft-expcdc-log").toString
       val ckptDir = Files.createTempDirectory("graft-expcdc-ckpt").toString
-      val expRoot = MaintainedMemo.keepUntilExit(
+      val expRoot = Memo.keepUntilExit(
         Files.createTempDirectory("graft-expcdc-out").toString)
       val shardsPath = s"$expRoot/shards"
       val manifestPath = s"$expRoot/manifest"

@@ -34,48 +34,16 @@ object Similarity {
   /** Every 50th vector doubles as a query (10 queries at sf0.01). */
   val QueryStride = 50
 
-  // ---- shared model memo (VERDICT r13 next #3) -------------------------
-  // One bench/verify pass trains the SAME bounded models repeatedly:
+  // One bench or verify pass trains the SAME bounded models repeatedly:
   // coarse centroids and PQ codebooks are re-derived by ml_pq_ann,
-  // ml_ivfadc, ml_ivfadc_indexed, ml_ann_recall_multi, and the CDC-
-  // maintained index row — identical deterministic training over
-  // identical inputs. Keyed by (session, CANONICALIZED analyzed plan of
-  // the training frame) — the Dedup signature-pass doctrine — so
-  // different fixtures/sessions never collide; values are bounded model
-  // state (KB of longs), eviction LRU. Each declared row still DUMPS
-  // the model to its own fixture path (the oracle contract); only the
-  // training computation is shared.
-  private val MaxModelMemo = 32
-  private val modelMemo =
-    new java.util.LinkedHashMap[AnyRef, AnyRef](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[AnyRef, AnyRef]): Boolean =
-        size > MaxModelMemo
-    }
-  private def memoModel[T <: AnyRef](key: AnyRef)(build: => T): T = {
-    val hit = modelMemo.synchronized(modelMemo.get(key))
-    if (hit != null) hit.asInstanceOf[T]
-    else {
-      // build outside the monitor (it runs Spark jobs); a cold-key race
-      // means duplicate work, never a wrong result — training is
-      // deterministic, first put wins
-      val built = build
-      modelMemo.synchronized {
-        val winner = modelMemo.get(key)
-        if (winner != null) winner.asInstanceOf[T]
-        else { modelMemo.put(key, built); built }
-      }
-    }
-  }
-  /** Drop memoized models and index-build markers (test/bench
-    * isolation). */
-  def clearModelCache(): Unit = {
-    modelMemo.synchronized(modelMemo.clear())
-    indexMemo.clear()
-  }
-  /** Memoized-model count (observability + spec assertions). */
-  def modelCacheSize: Int = modelMemo.synchronized(modelMemo.size())
-
+  // ml_ivfadc, ml_ivfadc_indexed, ml_ann_recall_multi and the
+  // CDC-maintained index row, identical deterministic training over
+  // identical inputs. The trainers share them through [[Memo]], keyed by
+  // (session, CANONICALIZED analyzed plan of the training frame), so
+  // different fixtures or sessions never collide; values are bounded
+  // model state (KB of longs). Each declared row still DUMPS the model
+  // to its own fixture path (the oracle contract); only the training
+  // computation is shared.
   private def planKey(df: DataFrame): AnyRef =
     (df.sparkSession, df.queryExecution.analyzed.canonicalized)
 
@@ -1149,7 +1117,7 @@ object Similarity {
     * 100 TB the one collect stays ≤ sample-bound; the corpus-sized
     * work (encode, ADC, rerank) remains distributed. */
   private def pqTrainOn(qdf: DataFrame): Seq[Seq[Seq[Long]]] =
-      memoModel(("pqcb", planKey(qdf))) {
+      Memo.get("pqcb", planKey(qdf)) {
     val sample: Array[Array[Long]] = qdf.select(col("vec_id"), col("q"))
       .orderBy("vec_id").limit(PqTrainSample).collect()
       .map(_.getSeq[Long](1).toArray)
@@ -1285,7 +1253,7 @@ object Similarity {
     * Labels must be contiguous 0-based (the fixture contract) so the
     * literal lookup is a plain index — fail fast otherwise. */
   def coarseCentroids(emb: DataFrame): Seq[Seq[Long]] =
-      memoModel(("coarse", planKey(emb))) {
+      Memo.get("coarse", planKey(emb)) {
     val rows = quantized(emb)
       .select(col("label"), posexplode(col("q")).as(Seq("d", "v")))
       .groupBy("label", "d")
@@ -1353,8 +1321,8 @@ object Similarity {
       cb, k)
   }
 
-  /** BUILD entry point of the r13 fused row, split out (VERDICT r13
-    * next #4) and memoized per (session, corpus, paths): the expensive
+  /** BUILD entry point of the indexed IVFADC rows, memoized per
+    * (session, corpus, paths) in [[Memo]]: the expensive
     * index write happens once; every serving query — the plain search,
     * the pre-filtered search, a fresh query batch — reads the written
     * artifact back through partition pruning. The index rows carry the
@@ -1369,26 +1337,22 @@ object Similarity {
       codebookPath: String, indexPath: String)
       : (Seq[Seq[Long]], Seq[Seq[Seq[Long]]]) = {
     // keyed BY THE PATH with the corpus identity in the value: a
-    // different corpus writing the same path must rebuild (and replace
-    // the entry), or the first corpus's memo would point at the second
-    // corpus's files — the plan-keyed memoModel can't express that
-    // overwrite, hence the dedicated map
+    // different corpus writing the same path must rebuild, or the first
+    // corpus's entry would point at the second corpus's files. A
+    // mismatch forgets the tag's entries (other paths only rebuild)
     val pk = (planKey(emb), centroidPath, codebookPath)
-    val hit = indexMemo.get(indexPath)
-    if (hit != null && hit._1 == pk) hit._2
-    else {
+    def ensure() = Memo.get("annidx", indexPath) {
       val (cents, cb) = ivfAdcModel(emb, centroidPath, codebookPath)
       ivfAdcEncoded(emb, cents, cb)
         .withColumn("cat", pmod(col("vec_id"), lit(FilterMod)))
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(indexPath)
-      indexMemo.put(indexPath, (pk, (cents, cb)))
-      (cents, cb)
+      (pk, (cents, cb))
     }
+    val (owner, model) = ensure()
+    if (owner == pk) model
+    else { Memo.clear("annidx"); ensure()._2 }
   }
-
-  private val indexMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (AnyRef, (Seq[Seq[Long]], Seq[Seq[Seq[Long]]]))]()
 
   /** Pre-filtered SERVE over the written index (VERDICT r13 next #7 —
     * L101's wedge composed onto L91's layout): only category-`cat`
@@ -1434,8 +1398,8 @@ object Similarity {
     * model state. */
   /** Train-only entry: the frozen (coarse centroids, residual
     * codebooks) pair with no dumps — both halves memoized, so the
-    * bench's shared model pass (the `lsh_shared_pass` precedent) and
-    * every IVFADC row pay the training exactly once per corpus. */
+    * bench's `ann_model_shared_pass` ([[SharedPass]]) and every IVFADC
+    * row pay the training exactly once per corpus. */
   def ivfAdcTrain(emb: DataFrame)
       : (Seq[Seq[Long]], Seq[Seq[Seq[Long]]]) = {
     val cents = coarseCentroids(emb)

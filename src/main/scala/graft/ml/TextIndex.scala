@@ -942,9 +942,9 @@ object TextIndex {
     * (session, corpus plan) — the serve is the row's marginal cost. */
   def splitServe(spark: SparkSession, docs: DataFrame,
       k: Int = Bm25K): DataFrame = {
-    val built = MaintainedMemo.maintained(
-        (spark, "txtsplit", docs.queryExecution.analyzed.canonicalized)) {
-      val root = MaintainedMemo.keepUntilExit(
+    val built = Memo.get("txtsplit",
+        (spark, docs.queryExecution.analyzed.canonicalized)) {
+      val root = Memo.keepUntilExit(
         Files.createTempDirectory("graft-txtsplit").toString)
       val (idx, st) = (s"$root/index", s"$root/stats")
       buildIndex(docs.select("doc_id", "text"), idx)
@@ -1003,7 +1003,7 @@ object TextIndex {
     * artifact. */
   def cdcMaintainRebalanced(spark: SparkSession, docs: DataFrame,
       opsDumpPath: String, epochs: Int = 3): MaintainedTextLog =
-    MaintainedMemo.maintained((spark, "txtss", opsDumpPath)) {
+    Memo.get("txtss", (spark, opsDumpPath)) {
       import spark.implicits._
       val snap: Seq[(Long, String)] =
         docs.select("doc_id", "text").collect()
@@ -1018,7 +1018,7 @@ object TextIndex {
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(opsDumpPath)
       val changeDir = Files.createTempDirectory("graft-txtss-log").toString
       val ckptDir = Files.createTempDirectory("graft-txtss-ckpt").toString
-      val idxRoot = MaintainedMemo.keepUntilExit(
+      val idxRoot = Memo.keepUntilExit(
         Files.createTempDirectory("graft-txtss-idx").toString)
       val indexPath = s"$idxRoot/index"
       val statsPath = s"$idxRoot/stats"
@@ -1058,12 +1058,12 @@ object TextIndex {
     }
 
   /** The stream-and-maintain pass, memoized per (session, ops path) —
-    * see [[MaintainedMemo]]: one pass per JVM; the change-log and
+    * see [[Memo]]: one pass per JVM; the change-log and
     * checkpoint temp dirs are removed as soon as the stream finishes,
     * the postings + stats artifact lives until JVM exit. */
   def cdcMaintain(spark: SparkSession, docs: DataFrame,
       opsDumpPath: String, epochs: Int = 3): MaintainedText =
-    MaintainedMemo.maintained((spark, "txtcdc", opsDumpPath)) {
+    Memo.get("txtcdc", (spark, opsDumpPath)) {
       import spark.implicits._
       val snap: Seq[(Long, String)] =
         docs.select("doc_id", "text").collect()
@@ -1074,7 +1074,7 @@ object TextIndex {
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(opsDumpPath)
       val changeDir = Files.createTempDirectory("graft-txtcdc-log").toString
       val ckptDir = Files.createTempDirectory("graft-txtcdc-ckpt").toString
-      val idxRoot = MaintainedMemo.keepUntilExit(
+      val idxRoot = Memo.keepUntilExit(
         Files.createTempDirectory("graft-txtcdc-idx").toString)
       val indexPath = s"$idxRoot/index"
       val statsPath = s"$idxRoot/stats"

@@ -161,7 +161,7 @@ object StreamHygiene {
     * §5: maintains measured ~70% slower inside the 8-family pass than
     * isolated). Callers release ONLY frames they own that cannot
     * escape (checkpointed locals, dead once the epoch's writes commit)
-    * — NEVER a frame handed out to a memo ([[graft.ml.Dedup]]'s cache
+    * — NEVER a frame handed out to a memo ([[graft.ml.Memo]]'s eviction
     * comment: an unpersisted localCheckpoint cannot be recomputed).
     * Best-effort: anything unexpected leaves the blocks to the
     * ContextCleaner, exactly as before. */

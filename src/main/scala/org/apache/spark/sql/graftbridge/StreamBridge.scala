@@ -8,8 +8,8 @@ import org.apache.spark.sql.execution.streaming.runtime
   * `MemoryStream` lives in a `private[sql]`-adjacent package that has
   * already MOVED once (`execution.streaming` → `….runtime` in Spark 4),
   * so the version-brittle import is confined to this one audited shim
-  * (ADVICE r13 #4) — a future relocation is a one-file fix. Same
-  * pattern as [[RegistryBridge]]/[[ColumnBridge]]. */
+  * — a future relocation is a one-file fix. Same pattern as
+  * [[ColumnBridge]]. */
 object StreamBridge {
   type MemStream[A] = runtime.MemoryStream[A]
 

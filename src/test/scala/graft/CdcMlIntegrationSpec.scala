@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc.{ChangeGen, MultiTable, TableSpec}
-import graft.ml.Dedup
+import graft.ml.{Dedup, Memo, SharedPass}
 
 /** The two halves of the engine composed: a `documents` corpus
   * maintained as a CDC replica (the live-ingest shape — crawl workers
@@ -100,18 +100,19 @@ class CdcMlIntegrationSpec extends AnyFunSuite {
     // deleted) → 7; unique doc 5 survives alone
     assert(survivors === Set(1L, 2L, 4L, 5L, 7L))
 
+    val lshTags = SharedPass.named("lsh_shared_pass").memoTags
     // the LSH banding path composes too: near-dup pairs computed off
     // the replica read equal pairs off the ground truth (identical
     // texts are J=1.0 pairs, so every planted group must surface)
-    Dedup.clearCache() // replica and expected must not share a memo key
+    Memo.clear(lshTags: _*) // replica and expected must not share a memo key
     def pairsOf(df: org.apache.spark.sql.DataFrame) =
       Dedup.nearDupPairs(df).select("doc_a", "doc_b")
         .as[(Long, Long)].collect().toSet
     val fromReplica = pairsOf(replica)
-    Dedup.clearCache()
+    Memo.clear(lshTags: _*)
     assert(fromReplica === pairsOf(expected))
     assert(fromReplica.contains((4L, 8L)) && fromReplica.contains((1L, 9L)),
       "planted exact-dup pairs must surface through the banding join")
-    Dedup.clearCache()
+    Memo.clear(lshTags: _*)
   }
 }

@@ -36,31 +36,35 @@ class MlSpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet === SparkEntry.queries.keySet)
   }
 
+  private val lshTags = SharedPass.named("lsh_shared_pass").memoTags
+  private val modelTags = SharedPass.named("ann_model_shared_pass").memoTags
+  private def held(tags: Seq[String]): Int = tags.map(Memo.size).sum
+
   test("LSH memo: same corpus+params hit the cache, different params miss") {
-    Dedup.clearCache()
+    Memo.clear(lshTags: _*)
     val p1 = Dedup.nearDupPairs(docs).collect()
-    val afterFirst = Dedup.cacheSize // sigs + pairs
+    val afterFirst = held(lshTags) // sigs + pairs
     val p2 = Dedup.nearDupPairs(docs).collect()
-    assert(Dedup.cacheSize === afterFirst, "second identical call must hit")
+    assert(held(lshTags) === afterFirst, "second identical call must hit")
     assert(p1.map(_.toString).sorted.toSeq === p2.map(_.toString).sorted.toSeq)
     Dedup.nearDupPairs(docs, minJaccard = 0.9)
-    assert(Dedup.cacheSize > afterFirst, "different threshold must miss")
+    assert(held(lshTags) > afterFirst, "different threshold must miss")
     // a DIFFERENT corpus with the same schema must not collide
     val other = Seq((1L, "totally different corpus", "en", "t", 24L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     assert(Dedup.nearDupPairs(other).isEmpty)
     assert(p1.nonEmpty)
-    Dedup.clearCache()
-    assert(Dedup.cacheSize === 0)
+    Memo.clear(lshTags: _*)
+    assert(held(lshTags) === 0)
   }
 
   test("model memo: trainers hit the cache; index write reused; corpus change rebuilds") {
-    Similarity.clearModelCache()
+    Memo.clear(modelTags: _*)
     val c1 = Similarity.coarseCentroids(emb)
-    val n1 = Similarity.modelCacheSize
+    val n1 = held(modelTags)
     assert(n1 >= 1)
     assert(Similarity.coarseCentroids(emb) === c1)
-    assert(Similarity.modelCacheSize === n1, "second call must hit")
+    assert(held(modelTags) === n1, "second call must hit")
     // the index build memo: a second serve over the same corpus+paths
     // must NOT rewrite the index files (the build/serve split, r13 #4)
     val dir = java.nio.file.Files.createTempDirectory("idx-memo").toString
@@ -84,8 +88,8 @@ class MlSpec extends AnyFunSuite {
     Similarity.ivfAdcTopKIndexed(emb.filter(col("label") < 8),
       s"$dir/cent", s"$dir/cb", s"$dir/idx").collect()
     assert(fp() !== f1, "corpus change must rebuild the index")
-    Similarity.clearModelCache()
-    assert(Similarity.modelCacheSize === 0)
+    Memo.clear(modelTags: _*)
+    assert(held(modelTags) === 0)
   }
 
   test("filtered index serve: result == pre-filter derivation over the same model") {
@@ -226,26 +230,26 @@ class MlSpec extends AnyFunSuite {
   }
 
   test("LSH memo: LRU-bounded — eviction under pressure, clearCache releases blocks") {
-    Dedup.clearCache()
+    Memo.clear(lshTags: _*)
     val tiny = Seq(
       (1L, "a b c d e f", "en", "t", 11L),
       (2L, "a b c d e g", "en", "t", 11L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     // each distinct threshold is its own pairs entry (signatures shared):
     // overfill past the cap and the map must stay bounded
-    val jacs = (1 to Dedup.MaxMemoEntries + 3).map(i => 0.05 * i)
+    val jacs = (1 to Memo.MaxEntries + 3).map(i => 0.05 * i)
     jacs.foreach(j => Dedup.nearDupPairs(tiny, minJaccard = j).collect())
-    assert(Dedup.cacheSize <= Dedup.MaxMemoEntries,
-      s"memo must LRU-evict past ${Dedup.MaxMemoEntries} entries")
+    assert(Memo.size("pairs") <= Memo.MaxEntries,
+      s"memo must LRU-evict past ${Memo.MaxEntries} entries per tag")
     // the least-recently-used entry was evicted; asking again rebuilds
     // a fresh, correct pair list (2-doc fixture: jaccard 5/7 ≥ 0.05)
     val again = Dedup.nearDupPairs(tiny, minJaccard = jacs.head).collect()
     assert(again.nonEmpty)
     val persistedBefore = spark.sparkContext.getPersistentRDDs.size
-    Dedup.clearCache()
-    assert(Dedup.cacheSize === 0)
+    Memo.clear(lshTags: _*)
+    assert(held(lshTags) === 0)
     assert(spark.sparkContext.getPersistentRDDs.size < persistedBefore,
-      "clearCache must release the checkpointed blocks, not just the refs")
+      "clear must release the checkpointed blocks, not just the refs")
   }
 
   test("cosine top-k: self excluded, k per query, rank orders cos desc") {
@@ -366,41 +370,6 @@ class MlSpec extends AnyFunSuite {
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val overlap = (fast intersect quant).size.toDouble / quant.size
     assert(overlap >= 0.9, f"fast/quantized top-k overlap $overlap%.2f")
-  }
-
-  test("native kernels are SQL functions: extension path == Column API") {
-    import graft.functions.{GraftExtensions, VectorFunctions => VF}
-    GraftExtensions.register(spark)
-    val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(3.0f, 2.0f, 1.0f),
-        Array(7L, 1L, 5L, 2L), Seq("a", "b", "a", "c")))
-      .toDF("fa", "fb", "la", "toks")
-    df.createOrReplaceTempView("kern_in")
-    val viaSql = spark.sql(
-      """SELECT cosine_sim_f(fa, fb) AS c, dot_product_long(la, la) AS d,
-        |       sliding_min_long(la, 2) AS s, gram_stats(toks) AS g,
-        |       simhash_tokens(toks) AS h,
-        |       hilbert2(la[0], la[1], 8) AS hv
-        |FROM kern_in""".stripMargin).collect()(0)
-    val viaCol = df.select(VF.cosineSimF(col("fa"), col("fb")).as("c"),
-      VF.dotLong(col("la"), col("la")).as("d"),
-      VF.slidingMin(col("la"), 2).as("s"),
-      VF.gramStats(col("toks")).as("g"),
-      VF.simhashTokens(col("toks")).as("h"),
-      VF.hilbert2(col("la").getItem(0), col("la").getItem(1), 8).as("hv"))
-      .collect()(0)
-    assert(viaSql.toSeq.map(String.valueOf) ===
-      viaCol.toSeq.map(String.valueOf),
-      "SQL registration must resolve to the identical expressions")
-    // the spark.sql.extensions entry point carries the same table
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext) // registers all six, must not throw
-    // misuse surfaces the usage string, not a MatchError
-    val err = intercept[Exception] {
-      spark.sql("SELECT sliding_min_long(la, la) FROM kern_in").collect()
-    }
-    assert(err.getMessage.contains("sliding_min_long usage") ||
-      Option(err.getCause).exists(_.getMessage.contains("sliding_min_long usage")),
-      s"unexpected misuse error: ${err.getMessage}")
   }
 
   test("native sliding min: codegen == interpreted == Scala reference") {
@@ -1362,33 +1331,25 @@ class MlSpec extends AnyFunSuite {
   }
 
   test("ngram generator: SQL LATERAL VIEW == Column API, exact windows, clean misuse") {
-    import graft.functions.{GraftExtensions, VectorFunctions => VF}
-    GraftExtensions.register(spark)
+    import graft.functions.{VectorFunctions => VF}
     val df = Seq((1L, Seq("a", "b", "c", "d")), (2L, Seq("x")),
       (3L, Seq.empty[String])).toDF("id", "toks")
-    df.createOrReplaceTempView("ng_in")
     val viaCol = df.select(col("id"),
         VF.ngramWindows(col("toks"), 2).as(Seq("pos", "gram")))
       .orderBy("id", "pos").collect()
     assert(viaCol.map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq
       === Seq((1L, 0, "a b"), (1L, 1, "b c"), (1L, 2, "c d")),
       "short and empty arrays must generate nothing")
-    val viaSql = spark.sql(
-      """SELECT id, pos, gram FROM ng_in
-        |LATERAL VIEW ngram_windows(toks, 2) t AS pos, gram
-        |ORDER BY id, pos""".stripMargin).collect()
-    assert(viaSql.toSeq.map(_.toSeq) === viaCol.toSeq.map(_.toSeq),
-      "SQL registration must resolve to the same generator")
     // n = 1 degenerates to posexplode of the tokens themselves
     val unit = df.filter(col("id") === 1)
       .select(VF.ngramWindows(col("toks"), 1).as(Seq("pos", "gram")))
       .collect().map(r => (r.getInt(0), r.getString(1)))
     assert(unit.toSeq === Seq((0, "a"), (1, "b"), (2, "c"), (3, "d")))
-    // misuse surfaces the usage string, not a MatchError
-    val err = intercept[Exception] {
-      spark.sql("SELECT ngram_windows(toks, toks) FROM ng_in").collect()
+    // misuse surfaces the requirement, not a MatchError
+    val err = intercept[IllegalArgumentException] {
+      VF.ngramWindows(col("toks"), 0)
     }
-    assert(err.getMessage.contains("ngram_windows usage"))
+    assert(err.getMessage.contains("ngram_windows: n must be >= 1"))
   }
 
   test("dq suite: one row per constraint, both verdict polarities, exact rationals") {

@@ -538,7 +538,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("change parsers decode each line once: no from_json copied into pushed filters") {
-    import graft.cdc.{ChangeGen, ChangeSource, DebeziumSource, MultiTable}
+    import graft.cdc.{ChangeGen, ChangeSource, MultiTable}
     import spark.implicits._
     // file-backed lines, as the stream reads them (a local relation
     // would be evaluated away at planning)
@@ -555,8 +555,7 @@ class PlanSpec extends AnyFunSuite {
       "ChangeSource.parse" -> ChangeSource.parse(wal).toDF(),
       "MultiTable.parseAll" -> MultiTable.parseAll(wal, MtTestSpecs.both),
       "MultiTable.parseAllDebezium" ->
-        MultiTable.parseAllDebezium(dbz, MtTestSpecs.both),
-      "DebeziumSource.parse" -> DebeziumSource.parse(dbz).toDF()
+        MultiTable.parseAllDebezium(dbz, MtTestSpecs.both)
     ).foreach { case (name, df) =>
       val decodes = "from_json".r
         .findAllIn(planOf(df).toString.split("== Initial Plan ==").head)

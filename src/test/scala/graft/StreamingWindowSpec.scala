@@ -17,7 +17,6 @@ private[graft] case class EnEv(event_id: Long, user_id: Long, ts: Timestamp,
     event_type: String, value: Double)
 private[graft] case class SwEv(ts: Timestamp, event_type: String,
     value: Double, user_id: Long)
-private[graft] case class SwDoc(doc_id: Long, text: String, ts: Timestamp)
 
 class StreamingWindowSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -229,35 +228,6 @@ class StreamingWindowSpec extends AnyFunSuite {
         .select("event_id", "segment", "nationkey")
         .as[(Long, Option[String], Option[Int])].collect().toSet
       assert(streamed === batch)
-    } finally q.stop()
-  }
-
-  test("streaming dedup: first occurrence passes, dupes drop, state expires") {
-    val in = MemoryStream[SwDoc](spark)
-    val q = graft.streaming.StreamingDedup
-      .distinctDocs(in.toDF(), watermark = "10 minutes")
-      .writeStream.format("memory").queryName("sdedup_sink")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // batch 1: two distinct texts + an in-batch duplicate
-      in.addData(SwDoc(1, "alpha", ts(0)), SwDoc(2, "beta", ts(1)),
-        SwDoc(3, "alpha", ts(2)))
-      q.processAllAvailable()
-      // batch 2: cross-batch duplicate within the watermark → dropped
-      in.addData(SwDoc(4, "alpha", ts(5)))
-      q.processAllAvailable()
-      def ids = spark.table("sdedup_sink").select("doc_id")
-        .as[Long].collect().toSet
-      assert(ids === Set(1L, 2L), "only first occurrences may pass")
-
-      // advance the watermark far past ts(2): alpha's state expires
-      in.addData(SwDoc(5, "gamma", ts(40)))
-      q.processAllAvailable()
-      // a re-arrival AFTER expiry is re-admitted (bounded-state trade)
-      in.addData(SwDoc(6, "alpha", ts(41)))
-      q.processAllAvailable()
-      assert(ids === Set(1L, 2L, 5L, 6L),
-        "post-expiry duplicate must be re-admitted, proving state eviction")
     } finally q.stop()
   }
 }
